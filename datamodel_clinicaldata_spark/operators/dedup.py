@@ -38,26 +38,6 @@ from datamodel_clinicaldata_spark.operators.partitioning import (
 )
 
 
-def _carry_sizes() -> bool:
-    """A/B switch for the carried-size postings variant of the ngram
-    pair builders (verdict r13 #3): posting rows carry their doc's
-    shingle-set size so the pair stage needs no second corpus shingling
-    pass + sizes join, at +8 B/posting through the widened exchange.
-
-    DECIDED OFF (r14): the 4M-doc order-balanced alternating A/B — the
-    rung verdict r13 #3 asked for — REPRODUCED the sf0.1 loss: old shape
-    min 129.3 s vs carried 165.0 s (1.28×), old wins 3/3 adjacent pairs
-    under rolling steal (136.9 vs 231.0, 129.3 vs 165.0, 280.0 vs
-    312.4; planted recall 1.0 both arms). The extra 8 B and the
-    min-aggregates ride the exploded co-occurrence stream — the widest
-    frame in the plan — while the two corpus passes they save are
-    narrow scans (~10 s at 4M). The flag stays for corpora whose
-    docs/posting-width ratio differs; record in OPTIMIZATION_r14.md §3."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_CARRIED_SIZES", "0") == "1"
-
-
 def exact_dedup_groups(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct content with the
     canonical (minimum) id and the duplicate count."""
@@ -142,7 +122,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_postings: int | None = 200,
     n_rows_est: int | None = None,
-    pair_predicate=None,
 ) -> DataFrame:
     """Exact k-token-shingle Jaccard for every candidate pair sharing at
     least one (non-stop) shingle. Output: (id_a, id_b, jaccard), id_a <
@@ -166,61 +145,9 @@ def ngram_jaccard_pairs(
     capped call with the capped counting oracle
     (``queries_dedup._capped_pair_chain``) — advice r5: the uncapped
     list_intersect oracle silently diverges once any posting list
-    crosses the cap.
-
-    ``pair_predicate`` (r14, §2.3 "shuffle fewer bytes"): optional
-    ``(id_a_col, id_b_col) → Column`` pushed INTO the postings
-    self-join. A caller that immediately discards a pair class — the
-    incremental screen keeps only incoming×corpus pairs, dropping the
-    ~64% corpus×corpus majority — kills those rows BEFORE the pair-count
-    shuffle instead of after it. Must depend only on the two ids, so
-    the surviving candidate set is a strict subset with unchanged
-    per-pair values."""
+    crosses the cap."""
     n_src = source_rows_for_width(df, n_rows_est)
     df = ensure_min_parallelism(df)
-    if _carry_sizes():
-        # Carried-size postings (verdict r13 #3, re-measured at the 4M
-        # rung this round): every posting row carries its doc's shingle
-        # count, so the per-doc set sizes never need the second corpus
-        # shingling pass the ``sizes`` frame below pays, at the price of
-        # +8 B/row through the widened exchange and the self-join.
-        sh = df.select(
-            F.col(id_col),
-            F.array_distinct(word_shingles(F.col(content_col), k)).alias("__sh"),
-        )
-        idx = sh.select(
-            id_col, F.size("__sh").alias("__n"), F.explode("__sh").alias("shingle")
-        )
-        idx = widen_expansion(idx, "shingle", n_source_rows=n_src)
-        ok = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__c"))
-        keep = F.col("__c") >= 2
-        if max_postings is not None:
-            keep = keep & (F.col("__c") <= max_postings)
-        idx = idx.join(ok.filter(keep).select("shingle"), "shingle")
-        a, b = idx.alias("a"), idx.alias("b")
-        cond = (F.col("a.shingle") == F.col("b.shingle")) & (
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-        )
-        if pair_predicate is not None:
-            cond = cond & pair_predicate(
-                F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-            )
-        pairs = (
-            a.join(b, cond)
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("__c"),
-                F.min("a.__n").alias("__na"),
-                F.min("b.__n").alias("__nb"),
-            )
-        )
-        jac = F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
-        return pairs.select("id_a", "id_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
     sizes = df.select(
         F.col(id_col),
         F.size(F.array_distinct(word_shingles(F.col(content_col), k))).alias("n"),
@@ -238,8 +165,6 @@ def ngram_jaccard_pairs(
     cond = (F.col("a.shingle") == F.col("b.shingle")) & (
         F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     )
-    if pair_predicate is not None:
-        cond = cond & pair_predicate(F.col(f"a.{id_col}"), F.col(f"b.{id_col}"))
     pair_counts = (
         a.join(b, cond)
         .groupBy(
@@ -470,12 +395,7 @@ def simhash64(
     replayable by a cross-engine oracle; xxhash64 has no SQL equivalent.
 
     ``content`` may be an arbitrary expression — the fold reads the
-    unit-hash array exactly ONCE, so it is lambda-scope-CSE-safe. The
-    banded operator uses the bit-sliced popcount twin
-    (``simhash_from_hashes``, bit-identical, pinned in
-    tests/test_dedup.py), which is faster per token but reads its input
-    many times and therefore REQUIRES the hash array hoisted to a named
-    column first."""
+    unit-hash array exactly ONCE, so it is lambda-scope-CSE-safe."""
     hashes = simhash_unit_hashes(content, k=k, hash_mode=hash_mode)
     # One parsed literal array (not `bits`×2 py4j Column calls) — same
     # values, same plan, ~0.2 s less Python time per query build.
@@ -516,91 +436,6 @@ def simhash_unit_hashes(
     return F.transform(units, lambda s: unit_hash(s))
 
 
-def simhash_from_hashes(hashes: Column, bits: int = 60) -> Column:
-    """r14 (verdict r13 #7): bit-sliced popcount vote fold over a
-    PRE-HOISTED unit-hash array column. The r13 shape (zip_with of a
-    60-long vote array against a mask array, per unit hash) evaluated 60
-    interpreted lambda bodies AND allocated a fresh 60-element array per
-    token. Votes only need per-bit SET counts (votes_i = 2·c_i − n > 0 ⇔
-    2·c_i > n), and c_i packs into SIMD-style lanes: lane k =
-    (h >> k) & 0x0101.. accumulates bit positions ≡ k (mod 8) as eight
-    independent byte counters in one long — 8 lanes × (shift, and, add)
-    per token instead of 60 branches and a 60-element array. Hashes fold
-    in bounded chunks so byte counters cannot overflow; per-chunk
-    unpacking into the exact per-bit count array is 60 adds amortized
-    over the chunk. Bit-identical to ``simhash64``'s vote fold (strict
-    majority, ties → 0), pinned in tests/test_dedup.py.
-
-    ADOPTION STATUS (r14): available primitive, NOT wired into
-    ``simhash_band_pairs`` — with the sh-pin in place the r13 fold won
-    the alternating A/B on the short-doc bench corpus (0.99 vs 1.64 s
-    min, 5/5 pairs) while this fold wins 3.5× on 150-hash rows
-    (micro-benchmark, OPTIMIZATION_r14.md §7); adopt it for corpora
-    whose per-doc token counts run into the hundreds.
-
-    ``hashes`` MUST be a materialized column reference (withColumn /
-    select the ``simhash_unit_hashes`` result first): this fold reads
-    the array once per chunk plus once per bit, and lambda scopes block
-    common-subexpression elimination — an inlined hash expression
-    re-runs the full md5 transform per reference (measured 50 s vs 3 s
-    on dedup_simhash_bands at sf0.1, the winnowing O(n·w)→O(n²) failure
-    mode reproduced exactly).
-
-    CHUNK must keep the packed accumulator inside a SIGNED long under
-    ANSI arithmetic: the top byte counter lives at bits 56..63, so the
-    worst case is CHUNK × 0x0101..01; 127 × 0x0101010101010101 =
-    9.19e18 < Long.MAX, while 128 already overflows bit 63 (measured:
-    ARITHMETIC_OVERFLOW on the sf0.001 corpus at CHUNK=255)."""
-    CHUNK = 127
-    M8 = 0x0101010101010101
-
-    def lanes_of_chunk(chunk: Column) -> Column:
-        return F.aggregate(
-            chunk,
-            F.array_repeat(F.lit(0).cast("long"), 8),
-            lambda acc, h: F.array(
-                *[
-                    acc[k] + F.shiftright(h, k).bitwiseAND(F.lit(M8))
-                    for k in range(8)
-                ]
-            ),
-        )
-
-    def counts_from_lanes(lanes: Column) -> list[Column]:
-        # count for bit i = byte (i div 8) of lane (i mod 8)
-        return [
-            F.shiftright(lanes[i % 8], 8 * (i // 8)).bitwiseAND(F.lit(0xFF))
-            for i in range(bits)
-        ]
-
-    n = F.size(hashes)
-    chunk_starts = F.sequence(
-        F.lit(1), F.greatest(n, F.lit(1)), F.lit(CHUNK)
-    )
-    per_chunk = F.transform(
-        chunk_starts, lambda s: lanes_of_chunk(F.slice(hashes, s, CHUNK))
-    )
-    counts = F.aggregate(
-        per_chunk,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, lanes: F.array(
-            *[acc[i] + c for i, c in enumerate(counts_from_lanes(lanes))]
-        ),
-    )
-    # strict majority per bit: 2·c_i > n ⇔ the r13 ±1 vote sum > 0.
-    # One parsed literal mask array (not `bits`×2 py4j Column calls).
-    masks = F.expr("array(" + ",".join(f"{1 << i}L" for i in range(bits)) + ")")
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            masks,
-            lambda c, m: F.when(c * 2 > n, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash_band_pairs(
     df: DataFrame,
     content_col: str,
@@ -617,8 +452,6 @@ def simhash_band_pairs(
     the default 4×15-bit banding). ``hash_mode`` — see ``simhash64``."""
     from datamodel_clinicaldata_spark.operators.graph import truncate_lineage
 
-    from datamodel_clinicaldata_spark.operators.graph import truncate_lineage
-
     n_src = source_rows_for_width(df, n_rows_est)
     # r14: the (id, sh) frame is LAZILY PINNED. The 4 band structs + both
     # hamming sides reference `sh`, and the optimizer inlines the fold
@@ -628,12 +461,6 @@ def simhash_band_pairs(
     # sf0.1: pinned 1.74 s vs unpinned 12.73 s min). The pin computes it
     # once; downstream reads materialized 8-byte values. Narrow rows;
     # reliable-checkpoint doctrine applies via truncate_lineage.
-    # Fold choice: the r13 ±1 zip_with fold, NOT the r14 bit-sliced
-    # popcount (simhash_from_hashes) — with the pin in place the
-    # popcount lost the alternating A/B on this corpus (0.99 vs 1.64 s
-    # min, 5/5 pairs): at ~tens of tokens/doc its chunk/unpack overhead
-    # outweighs the per-token win that dominates on longer docs (3.5×
-    # in the 150-hash/row micro-benchmark, OPTIMIZATION_r14.md).
     sh = truncate_lineage(
         ensure_min_parallelism(df).select(
             F.col(id_col),

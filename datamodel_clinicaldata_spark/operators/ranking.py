@@ -98,7 +98,6 @@ def ordered_prefix(
     running_sum: dict[str, str] | None = None,
     running_max: dict[str, str] | None = None,
     num_partitions: int | None = None,
-    materialize: str | None = None,
     count_small: int | None = None,
     count_mode: str = "auto",
 ) -> DataFrame:
@@ -125,19 +124,6 @@ def ordered_prefix(
     one tiny per-partition stats aggregate, offsets broadcast back. The
     offsets frame has ``num_partitions`` rows, so ITS window is trivially
     bounded.
-
-    ``materialize`` picks how the doubly-consumed post-window frame is
-    pinned: ``"localCheckpoint"`` (default — the only mode whose pid
-    consistency survives executor recompute; see the comment at the call
-    below; routed through ``graph.truncate_lineage``, so the fleet-wide
-    ``SPARK_GRAFT_CHECKPOINT=reliable`` swap upgrades this pin to a
-    durable checkpoint too), ``"persist"`` (MEMORY_AND_DISK + an eager count: same answer
-    on a healthy cluster, cheaper materialization, but an executor loss
-    re-runs the range exchange with possibly different sampled
-    boundaries), ``"none"`` (no pinning — measurement only, relies on
-    exchange reuse). Overridable via $SPARK_GRAFT_PREFIX_MATERIALIZE for
-    A/B cost isolation (verdict r6 #1); production callers keep the
-    default.
 
     ``count_small``: opt-in adaptive escape hatch (same doctrine as the
     CC/PageRank local paths). When set, the input may be COUNTED and, if
@@ -230,22 +216,9 @@ def ordered_prefix(
     # cluster where that risk matters, SPARK_GRAFT_CHECKPOINT=reliable
     # swaps this pin (via truncate_lineage) to a durable checkpoint()
     # at the cost of a DFS write, same doctrine as the graph fixpoints.
-    import os
+    from datamodel_clinicaldata_spark.operators.graph import truncate_lineage
 
-    mode = materialize or os.environ.get(
-        "SPARK_GRAFT_PREFIX_MATERIALIZE", "localCheckpoint"
-    )
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        loc = loc.persist(StorageLevel.MEMORY_AND_DISK)
-        loc.count()  # eager pin before the two consuming branches plan
-    elif mode != "none":
-        from datamodel_clinicaldata_spark.operators.graph import (
-            truncate_lineage,
-        )
-
-        loc = truncate_lineage(loc, eager=False)
+    loc = truncate_lineage(loc, eager=False)
 
     stats_aggs = [F.count(F.lit(1)).alias("__cnt")]
     stats_aggs += [F.sum(src).alias(f"__s_{out}") for src, out in running_sum.items()]

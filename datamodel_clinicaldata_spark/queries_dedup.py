@@ -337,21 +337,13 @@ def dedup_incremental_against_corpus(
         .agg(F.min("cor_id").cast("long").alias("ex_match"))
     )
 
-    # r14 (§2.3): the crossing predicate is pushed INTO the postings
-    # self-join — corpus×corpus pairs (the ~64% majority at a 20% drop
-    # share) die before the pair-count shuffle instead of after the full
-    # Jaccard computation. Strict-subset semantics: per-pair counts and
-    # sizes are untouched, only never-used pairs disappear (the oracle's
-    # `near` CTE applies the identical predicate one step later).
+    # Only incoming×corpus pairs matter. Catalyst pushes this id-only
+    # filter into the postings self-join, so corpus×corpus pairs (the
+    # ~64% majority at a 20% drop share) die before the pair-count
+    # shuffle (pinned by tests/test_plans.py).
     pairs = ngram_jaccard_pairs(
-        d,
-        "text",
-        "doc_id",
-        k=3,
-        threshold=0.2,
-        max_postings=10_000,
-        pair_predicate=lambda ia, ib: (ia % 5 == 4) != (ib % 5 == 4),
-    )
+        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
+    ).filter((F.col("id_a") % 5 == 4) != (F.col("id_b") % 5 == 4))
     # id_a < id_b over crossing pairs only; orient incoming→corpus
     crossing = pairs.select(
         F.when(F.col("id_a") % 5 == 4, F.col("id_a"))

@@ -235,15 +235,6 @@ def get_spark(
     local_dir = _default_local_dir()
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    # Deployment-parameterized overrides (guide §1.2 step 3: config last,
-    # measured): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets an A/B harness or a
-    # cluster deployment adjust conf without code edits; applied BEFORE
-    # extra_conf so explicit callers still win.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for item in env_conf.split(";"):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

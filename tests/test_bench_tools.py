@@ -535,6 +535,28 @@ def test_local_dir_sweep_is_locked_and_age_gated(tmp_path):
     os.unlink(str(root) + ".sweeplock")
 
 
+def test_package_env_vars_are_deployment_knobs_only():
+    """The engine's only env switches are the four deployment knobs: no
+    env var may pick a measurement-only or wrong-answer mode. Any
+    ``SPARK_GRAFT_*`` name in the package source counts."""
+    import re
+    from pathlib import Path
+
+    import datamodel_clinicaldata_spark as pkg
+
+    found = {
+        name
+        for src in Path(pkg.__file__).parent.rglob("*.py")
+        for name in re.findall(r"SPARK_GRAFT_[A-Z_]+", src.read_text())
+    }
+    assert found == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_LOCAL_DIR",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_CHECKPOINT",
+    }
+
+
 def test_host_noise_gate_floor_and_quiet(monkeypatch):
     """_HostNoiseGate semantics: floor is a running MIN (calibrating in
     a noise burst must not permanently loosen the gate), quiet = within

@@ -77,50 +77,6 @@ def test_simhash_bands(spark, docs_df):
     assert all(not (a in (4, 5) or b == 4) for (a, b) in pairs if (a, b) != (4, 5))
 
 
-def test_simhash_popcount_fold_matches_reference(spark, sf_dir):
-    """Verdict r13 #7: the r14 bit-sliced popcount vote fold (hoisted,
-    `simhash_from_hashes`) must be BIT-IDENTICAL to the r13 ±1 zip_with
-    vote fold (`simhash64`, kept as the single-use-safe reference) — on
-    real corpus text, in both hash modes (the md5 mode is what the
-    oracle replays), including docs long enough to need multiple
-    127-token chunks."""
-    from pyspark.sql import functions as F
-
-    from datamodel_clinicaldata_spark.operators.dedup import (
-        simhash64,
-        simhash_from_hashes,
-        simhash_unit_hashes,
-    )
-    from datamodel_clinicaldata_spark.sources.readers import read_table
-
-    d = read_table(spark, sf_dir, "documents")
-    # synthetic long doc: 700 distinct tokens forces 6 chunks; plus an
-    # empty doc (n = 0 → hash 0 in both folds)
-    extra = spark.createDataFrame(
-        [(900001, " ".join(f"tok{i}" for i in range(700))), (900002, "")],
-        "doc_id long, text string",
-    )
-    d = d.select("doc_id", "text").unionAll(extra)
-    for mode in ("xxhash64", "md5"):
-        bad = (
-            d.select(
-                "doc_id",
-                "text",
-                simhash_unit_hashes(F.col("text"), hash_mode=mode).alias(
-                    "__uh"
-                ),
-            )
-            .select(
-                "doc_id",
-                simhash_from_hashes(F.col("__uh")).alias("new"),
-                simhash64(F.col("text"), hash_mode=mode).alias("ref"),
-            )
-            .filter(~F.col("new").eqNullSafe(F.col("ref")))
-            .count()
-        )
-        assert bad == 0, f"simhash fold diverged in {mode} mode"
-
-
 def test_minhash_lsh_on_testdata(spark, sf_dir):
     """LSH equals the exact inverted-index answer on driver testdata."""
     from datamodel_clinicaldata_spark.sources.readers import read_table

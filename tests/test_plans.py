@@ -316,6 +316,22 @@ def test_curation_funnel_single_scan(spark, sf_dir):
     assert a.sort_merge_joins == 0
 
 
+def test_incremental_dedup_crossing_filter_in_postings_join(spark, sf_dir):
+    """The incremental screen keeps only incoming×corpus pairs. Its
+    crossing filter, applied to ``ngram_jaccard_pairs``' output, must be
+    pushed into the postings self-join condition below the pair-count
+    aggregate, so corpus×corpus pairs never reach the count shuffle."""
+    df = QUERIES["dedup_incremental_against_corpus"](spark, sf_dir)
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    (agg,) = [i for i, ln in enumerate(lines) if "count(1) AS __c#" in ln]
+    (join,) = [i for i, ln in enumerate(lines) if "Join Inner" in ln and "shingle#" in ln]
+    assert "% 5) = 4" in lines[join]
+    # tree-string indent: every line from the aggregate down to the join
+    # sits deeper than the aggregate, i.e. the join is in its subtree
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    assert join > agg and all(d > depth[agg] for d in depth[agg + 1 : join + 1])
+
+
 def test_target_encoding_no_window_no_smj(spark, sf_dir):
     """LOO encoding must use aggregate-then-broadcast-back, NOT a
     PARTITION BY segment window (5 giant skewed partitions at 100 TB).
