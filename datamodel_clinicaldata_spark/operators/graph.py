@@ -28,10 +28,9 @@ Scale design (100 TB corpus, ~10⁹ nodes):
   size long before the executors sweat. The default (``'local'``) is
   ``localCheckpoint`` — right for local mode, but on a real cluster an
   executor loss mid-fixpoint kills the run; past the threshold where
-  that matters, pass ``checkpoint_mode='reliable'`` (or set
-  ``SPARK_GRAFT_CHECKPOINT=reliable`` fleet-wide) for durable
-  ``checkpoint()`` — see SCALING.md "Reliable-checkpoint doctrine";
-  partitioning survives either way.
+  that matters, set ``SPARK_GRAFT_CHECKPOINT=reliable`` at deployment
+  for durable ``checkpoint()`` — see SCALING.md "Reliable-checkpoint
+  doctrine"; partitioning survives either way.
 - Convergence is detected with a count of changed labels — one action per
   round, the standard cost of any fixpoint algorithm on Spark.
 """
@@ -44,14 +43,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def truncate_lineage(
-    df: DataFrame, mode: str | None = None, eager: bool = True
-) -> DataFrame:
+def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and cut its lineage — the per-round pin every
     iterative fixpoint here needs (without it the plan doubles per round
     and the driver OOMs on plan size long before the executors sweat).
 
-    ``mode`` (default: ``$SPARK_GRAFT_CHECKPOINT`` or ``'local'``):
+    The mode is ``$SPARK_GRAFT_CHECKPOINT`` (default ``'local'``):
 
     - ``'local'`` — ``localCheckpoint()``: blocks live on executors with
       NO lineage left. Fastest, and correct for local mode / ephemeral
@@ -69,7 +66,7 @@ def truncate_lineage(
     queries stay parameter-free while a cluster submit flips every
     fixpoint to reliable checkpoints (SCALING.md "Reliable-checkpoint
     doctrine")."""
-    mode = mode or os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
+    mode = os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -159,7 +156,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     local_threshold: int = 2_000_000,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Min-label connected components over an undirected edge list.
 
@@ -189,15 +185,14 @@ def connected_components(
     # otherwise trigger the (expensive) upstream pair-generation with a
     # LIMIT short-circuit that caches only part of the edge set, and the
     # next consumer recomputes the rest — measured ~2× upstream cost.
-    sym = truncate_lineage(symmetrize(edges, src, dst), checkpoint_mode)
+    sym = truncate_lineage(symmetrize(edges, src, dst))
 
     if local_threshold and sym.limit(local_threshold + 1).count() <= local_threshold:
         return _local_union_find(sym)
     labels = truncate_lineage(
         sym.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("lbl", F.col("node")),
-        checkpoint_mode,
+        .withColumn("lbl", F.col("node"))
     )
 
     for _ in range(max_iter):
@@ -219,7 +214,7 @@ def connected_components(
         # action per round: an eager checkpoint + count pair would be two
         # (and counting an un-checkpointed frame would execute the
         # round's join+agg twice, measured ~2× per-round cost).
-        mat = truncate_lineage(new_labels, checkpoint_mode, eager=False)
+        mat = truncate_lineage(new_labels, eager=False)
         changed = mat.filter(F.col("new_lbl") != F.col("old_lbl")).count()
         labels = mat.select("node", F.col("new_lbl").alias("lbl"))
         if changed == 0:
@@ -227,7 +222,7 @@ def connected_components(
 
     # Diameter exceeded the propagation budget — hand the graph to the
     # shape-insensitive contraction instead of failing the run.
-    return connected_components_star(edges, src, dst, checkpoint_mode=checkpoint_mode)
+    return connected_components_star(edges, src, dst)
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -329,7 +324,6 @@ def connected_components_star(
     dst: str = "dst",
     max_rounds: int = 60,
     stats: dict | None = None,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14 §3) —
@@ -353,13 +347,12 @@ def connected_components_star(
     directed edge count is pinned at (nodes − components) every round
     while the set keeps contracting, so a chain would false-converge
     immediately. Lineage is truncated per round via ``truncate_lineage``
-    (``checkpoint_mode``: local | reliable, see its docstring).
+    (local or reliable checkpoints, see its docstring).
     """
     # Orient the deduped undirected set large→small: small-star's input
     # invariant, and large-star re-derives symmetric neighbourhoods.
     directed = truncate_lineage(
-        symmetrize(edges, src, dst).filter(F.col("src") > F.col("dst")),
-        checkpoint_mode,
+        symmetrize(edges, src, dst).filter(F.col("src") > F.col("dst"))
     )
     fp = _edge_fingerprint(directed)
     if fp[0] == 0:  # empty-graph check rides the fingerprint — no extra job
@@ -383,7 +376,7 @@ def connected_components_star(
             directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         new_directed = truncate_lineage(
-            _small_star(_large_star(sym)), checkpoint_mode, eager=False
+            _small_star(_large_star(sym)), eager=False
         )
         new_fp = _edge_fingerprint(new_directed)  # materializes the pin
         directed = new_directed
@@ -432,7 +425,6 @@ def pagerank_fixedpoint(
     dst: str = "dst",
     iters: int = 10,
     local_threshold: int = 2_000_000,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """PageRank over the undirected (symmetrized) graph, computed ENTIRELY
     in fixed-point e12 integer arithmetic — damping 0.85 becomes
@@ -449,7 +441,7 @@ def pagerank_fixedpoint(
     Symmetric graphs have no dangling nodes, so mass-leak correction is
     unnecessary; ranks order the dup-family hubs.
     """
-    sym = truncate_lineage(symmetrize(edges, src, dst), checkpoint_mode)
+    sym = truncate_lineage(symmetrize(edges, src, dst))
     if local_threshold and sym.limit(local_threshold + 1).count() <= local_threshold:
         return _local_pagerank(sym, iters)
     # Distinct column names per derived frame: deg and the edge view both
@@ -465,9 +457,7 @@ def pagerank_fixedpoint(
         return nodes.withColumn("pr_e12", F.lit(0).cast("long"))
     init = 10**12 // n
     base = (15 * 10**10) // n
-    pr = truncate_lineage(
-        nodes.withColumn("v", F.lit(init).cast("long")), checkpoint_mode
-    )
+    pr = truncate_lineage(nodes.withColumn("v", F.lit(init).cast("long")))
     for _ in range(iters):
         contrib = (
             pr.join(deg, F.col("node") == F.col("__dn"))
@@ -479,8 +469,7 @@ def pagerank_fixedpoint(
         )
         pr = truncate_lineage(
             contrib.groupBy("node")
-            .agg((F.lit(base) + F.sum("__c")).cast("long").alias("v")),
-            checkpoint_mode,
+            .agg((F.lit(base) + F.sum("__c")).cast("long").alias("v"))
         )
     return pr.select("node", F.col("v").alias("pr_e12"))
 

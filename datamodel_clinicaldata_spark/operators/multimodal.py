@@ -17,9 +17,8 @@ Design (the 100 TB shape):
   (8/24/32-bpp, bottom-up and top-down), and ``decode_image_png``
   decodes PNG (chunk walk + stdlib zlib inflate + all five scanline
   filters + palette), all pure Python/numpy inside the same
-  Arrow-batched ``mapInPandas``. Only entropy-coded codecs with no
-  stdlib decoder (JPEG/MP3/…) remain stubbed: ``decode_image`` raises
-  NotImplementedError unless PIL is importable.
+  Arrow-batched ``mapInPandas``. Entropy-coded codecs with no stdlib
+  decoder (JPEG/MP3/…) are not decoded.
   Every other operator computes real, deterministic byte-level features
   (histogram, RMS energy, frame slicing) so the full Spark plumbing —
   schema, batching, explode cardinality, partition parallelism — is
@@ -67,25 +66,6 @@ def media_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
             F.lit("raw").alias("format"),
         ).alias("media_meta"),
     )
-
-
-def decode_image(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """ENTROPY-CODED image decode (JPEG) — requires PIL, which this
-    environment does not ship. The plumbing (Arrow batch → PIL → pixel
-    array) is what a cluster with the codec installed would run; here it
-    raises so callers fall back to ``decode_image_png`` /
-    ``decode_image_bmp`` (real, stdlib-only) or ``byte_histogram``
-    features."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "entropy-coded codec libraries (JPEG/MP3) are not available in "
-            "this environment; decode_image_png and decode_image_bmp decode "
-            "PNG/BMP for real with stdlib only, and byte_histogram/"
-            "frame_sample give deterministic features for anything else"
-        ) from e
-    raise NotImplementedError("real decode path reserved for codec-enabled clusters")
 
 
 def _parse_wav(b: bytes):

@@ -96,7 +96,7 @@ def filters(
     gender: str = "all",
     min_age: int = 18,
     max_age: int = 72,
-    clinic_id: int = 5066,
+    clinic_id: int | None = 5066,
     *,
     gender_col: str = "Gender",
     age_col: str = "Age",
@@ -108,18 +108,15 @@ def filters(
     (``pandas_DataModel.py:6-31`` / ``polars_DataModel.py:5-32``): categorical
     equality with an ``'all'`` identity branch, inclusive BETWEEN on age,
     numeric equality on clinic. Column names are parameterized so the same
-    operator serves the testdata stand-in tables.
+    operator serves the testdata stand-in tables; ``clinic_id=None`` skips
+    the clinic filter.
     """
     if gender != "all":
         df = df.filter(F.col(gender_col) == gender)
     df = df.filter(F.col(age_col).between(min_age, max_age))
-    df = df.filter(F.col(clinic_col) == clinic_id)
+    if clinic_id is not None:
+        df = df.filter(F.col(clinic_col) == clinic_id)
     return df
-
-
-def project(df: DataFrame, columns: list[str]) -> DataFrame:
-    """P6: column projection (``pandas_DataModel.py:156-160``)."""
-    return df.select(*columns)
 
 
 def distinct_rows(df: DataFrame) -> DataFrame:

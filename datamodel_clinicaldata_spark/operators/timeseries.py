@@ -60,7 +60,7 @@ def time_bucket_gapfill(
     # input), while the pin materializes the (key, bucket) rollup — a
     # frame bounded by the key×bucket domain — and reads it twice.
     # Measured no worse at sf0.1 (alternating A/B, OPTIMIZATION_r13.md).
-    b = truncate_lineage(b, None, eager=False)
+    b = truncate_lineage(b, eager=False)
     spine = (
         b.groupBy("key")
         .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))

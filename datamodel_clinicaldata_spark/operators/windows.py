@@ -32,11 +32,8 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 # Days-per-month divisor used by both .py scripts (pandas_DataModel.py:98,
-# polars_DataModel.py:94). The pandas notebook (pandas_DataModel.ipynb#cell20)
-# divides by 30.44 and adds +1 to both buckets — non-canonical (SURVEY.md
-# §2.9) but exposed as the ``notebook_buckets`` variant.
+# polars_DataModel.py:94).
 DAYS_PER_MONTH = 30.417
-DAYS_PER_MONTH_NOTEBOOK = 30.44
 DAYS_PER_WEEK = 7
 
 COHORT_CHOICES = ("week", "month", "ClinicID")
@@ -95,44 +92,23 @@ def _full(w: WindowSpec) -> WindowSpec:
     return w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
 
-def month_bucket(
-    event_col: str = "Wts_CreatedDate", anchor_col: str = "Tmt_StartDate",
-    notebook: bool = False,
-) -> Column:
-    """W1 — ``floor((event − anchor).days / 30.417)`` (``pandas_DataModel.py:97-99``).
+def month_bucket() -> Column:
+    """W1 — ``floor((Wts_CreatedDate − Tmt_StartDate).days / 30.417)``
+    (``pandas_DataModel.py:97-99``).
 
     ``F.floor`` rounds toward −∞ like Python ``math.floor``, so
     pre-treatment weigh-ins land in negative buckets identically.
     The reference's row-wise ``.apply(math.floor)`` — its only "UDF" —
     is a pure builtin here (whole-stage codegen, no Python).
-
-    ``notebook=True`` is the pandas-notebook variant: divisor 30.44 and a
-    ``+1`` origin (``pandas_DataModel.ipynb#cell20``; non-canonical,
-    SURVEY.md §2.9). The notebook divides the RAW Timedelta — including
-    time-of-day — by ``pd.Timedelta(days=30.44)`` (unlike the .py scripts'
-    ``.dt.days``), so this variant floors the seconds delta over
-    30.44·86400 rather than ``datediff``'s whole days; the two differ by
-    1 near bucket boundaries when timestamps carry time components. (The
-    notebook's WEEK still uses ``.dt.days // 7 + 1`` — whole days — so
-    ``week_bucket`` keeps ``datediff`` for both variants.)
     """
-    if notebook:
-        secs = F.unix_timestamp(F.col(event_col)) - F.unix_timestamp(F.col(anchor_col))
-        b = F.floor(secs / (DAYS_PER_MONTH_NOTEBOOK * 86400.0))
-        return (b + 1).cast("int")
-    b = F.floor(F.datediff(F.col(event_col), F.col(anchor_col)) / DAYS_PER_MONTH)
+    b = F.floor(F.datediff("Wts_CreatedDate", "Tmt_StartDate") / DAYS_PER_MONTH)
     return b.cast("int")
 
 
-def week_bucket(
-    event_col: str = "Wts_CreatedDate", anchor_col: str = "Tmt_StartDate",
-    notebook: bool = False,
-) -> Column:
-    """W2 — ``floor(days / 7)`` (``pandas_DataModel.py:102-103``).
-    ``notebook=True`` adds the pandas-notebook ``+1`` origin
-    (``pandas_DataModel.ipynb#cell20``; non-canonical, SURVEY.md §2.9)."""
-    b = F.floor(F.datediff(F.col(event_col), F.col(anchor_col)) / DAYS_PER_WEEK)
-    return (b + 1 if notebook else b).cast("int")
+def week_bucket() -> Column:
+    """W2 — ``floor(days / 7)`` (``pandas_DataModel.py:102-103``)."""
+    b = F.floor(F.datediff("Wts_CreatedDate", "Tmt_StartDate") / DAYS_PER_WEEK)
+    return b.cast("int")
 
 
 def weigh_in_rate(cohort_col: str) -> Column:
@@ -168,24 +144,6 @@ def cohort_first_weight(cohort_col: str) -> Column:
     return F.first("Weight").over(_full(w_cohort(cohort_col)))
 
 
-def weight_diff(cohort_col: str) -> Column:
-    """W8 ``wgt_diff`` — cohort-first weight minus the *next row's*
-    cohort-first weight (``pandas_DataModel.py:139-142``: ``transform('first')``
-    then ``.diff(-1)``).
-
-    Clean-lead variant (SURVEY.md §2.5, the single deliberate semantic
-    deviation): ``lead`` is scoped to the treatment partition instead of the
-    whole physically-sorted frame, which reproduces reference semantics 1-3
-    and 5 (in-cohort zeros, boundary diffs, gap spanning) while removing the
-    cross-partition leak of semantic 4 (the reference diffs the last row of
-    a user's data against the *next user's* weight — a bug, not a feature).
-    Exact replication, if ever needed: ``Window.orderBy(σ)`` with no
-    partitioning (single-partition stage; intentionally not the default).
-    """
-    first_w = cohort_first_weight(cohort_col)
-    return first_w - F.lead(first_w).over(w_treatment())
-
-
 def w_global(include_uid_created: bool = True) -> WindowSpec:
     """The reference's physical frame order as a window: the full O1 6-key
     sort with NO partitioning (``pandas_DataModel.py:85-90`` sorts the whole
@@ -204,24 +162,14 @@ def w_global(include_uid_created: bool = True) -> WindowSpec:
     return Window.orderBy(*keys, *sigma_cols(("TreatmentTypeID", "Tmt_StartDate")))
 
 
-def patient_tbwl(cohort_col: str) -> Column:
-    """W9 ``patient_TBWL`` — max of wgt_diff per cohort, nulls skipped
-    (``pandas_DataModel.py:146-149``). Positive = loss (the in-code comment
-    at ``pandas_DataModel.py:145`` claims the opposite; the arithmetic and
-    captured outputs win — SURVEY.md §2.5 W9)."""
-    return F.max(weight_diff(cohort_col)).over(_full(w_cohort(cohort_col)))
-
-
 def with_cohort_metrics(
-    df: DataFrame, cohort: str = "week", keep_tew: bool = False,
-    strict_w8: bool = False, notebook_buckets: bool = False,
+    df: DataFrame, cohort: str = "week", strict_w8: bool = False
 ) -> DataFrame:
     """Derive week/month buckets + all five metrics in one pass.
 
     Input: the assembled, renamed star frame (canonical clinical column
     names). Output adds ``month week WIR PSW TSW treatment_TBWL
-    patient_TBWL`` (+ ``TEW`` when ``keep_tew`` — the polars variant,
-    ``polars_DataModel.py:130-132``); row count is preserved.
+    patient_TBWL``; row count is preserved.
 
     ``cohort`` selects the dynamic grouping column ('week' | 'month' |
     'ClinicID') — validated against an allowlist since it is injected as a
@@ -236,19 +184,11 @@ def with_cohort_metrics(
     deliberate deviation). Strict mode runs the W8 lead over an
     unpartitioned window — a single-partition stage, acceptable only for
     parity testing, never at scale.
-
-    ``notebook_buckets=True`` selects the pandas-notebook bucket variant
-    (30.44 month divisor, +1 origins — SURVEY.md §2.9, non-canonical).
     """
     if cohort not in COHORT_CHOICES:
         raise ValueError(f"cohort must be one of {COHORT_CHOICES}, got {cohort!r}")
 
-    df = df.withColumns(
-        {
-            "month": month_bucket(notebook=notebook_buckets),
-            "week": week_bucket(notebook=notebook_buckets),
-        }
-    )
+    df = df.withColumns({"month": month_bucket(), "week": week_bucket()})
 
     # ONE shuffle for the whole metric stage: hash-partition by UID
     # explicitly. Every window partitions by UID-plus-suffix keys, and
@@ -276,15 +216,18 @@ def with_cohort_metrics(
         if strict_w8
         else w_treatment()
     )
-    stage2 = {
-        "PSW": patient_starting_weight(),
-        "TSW": tsw,
-        "treatment_TBWL": tew - tsw,
-        "__wgt_diff": F.col("__first_w") - F.lead("__first_w").over(lead_window),
-    }
-    if keep_tew:
-        stage2["TEW"] = tew
-    df = df.withColumns(stage2)
+    df = df.withColumns(
+        {
+            "PSW": patient_starting_weight(),
+            "TSW": tsw,
+            "treatment_TBWL": tew - tsw,
+            "__wgt_diff": F.col("__first_w") - F.lead("__first_w").over(lead_window),
+        }
+    )
+    # W9 patient_TBWL = max W8 wgt_diff per cohort, nulls skipped
+    # (pandas_DataModel.py:139-149). Positive = loss: the in-code comment
+    # at pandas_DataModel.py:145 claims the opposite; the arithmetic and
+    # captured outputs win (SURVEY.md §2.5 W9).
     df = df.withColumns(
         {
             "WIR": weigh_in_rate(cohort),
@@ -293,7 +236,7 @@ def with_cohort_metrics(
     )
     out_cols = [c for c in df.columns if not c.startswith("__")]
     # Reference column order: metrics appended as WIR, PSW, TSW,
-    # treatment_TBWL, patient_TBWL (+ TEW variant).
+    # treatment_TBWL, patient_TBWL.
     ordered = [c for c in out_cols if c not in ("WIR", "patient_TBWL")]
     insert_at = ordered.index("PSW")
     ordered = ordered[:insert_at] + ["WIR"] + ordered[insert_at:] + ["patient_TBWL"]

@@ -50,33 +50,22 @@ def run_cohort_pipeline(
     min_age: int = 18,
     max_age: int = 72,
     clinic_id: int | None = 5066,
-    keep_tew: bool = False,
-    final_distinct: bool = True,
     strict_w8: bool = False,
 ) -> DataFrame:
     """The whole query as one composable function.
 
     ``clinic_id=None`` skips the clinic filter (engine extension beyond the
     reference signature — needed for stand-in tables whose clinic analog
-    doesn't contain 5066). ``final_distinct`` mirrors the .py-script
-    asymmetry: pandas dedups (``pandas_DataModel.py:161``), polars doesn't
-    (``polars_DataModel.py:166``); pandas is the canon default.
+    doesn't contain 5066). The final full-row distinct is the .py-script
+    canon: pandas dedups (``pandas_DataModel.py:161``).
     ``strict_w8`` selects exact W8 replication including the reference's
     cross-user diff(-1) leak — see ``with_cohort_metrics``.
     """
     df = assemble_star(users, weights, treatments)
     df = rename_columns(df)
-    df = with_cohort_metrics(
-        df, cohort=cohort, keep_tew=keep_tew, strict_w8=strict_w8
-    )
-    if gender != "all":
-        df = df.filter(F.col("Gender") == gender)
-    df = df.filter(F.col("Age").between(min_age, max_age))
-    if clinic_id is not None:
-        df = df.filter(F.col("ClinicID") == clinic_id)
-    if final_distinct:
-        df = distinct_rows(df)
-    return df
+    df = with_cohort_metrics(df, cohort=cohort, strict_w8=strict_w8)
+    df = filters(df, gender, min_age, max_age, clinic_id)
+    return distinct_rows(df)
 
 
 def data_pipeline(

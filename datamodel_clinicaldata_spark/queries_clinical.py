@@ -1,18 +1,22 @@
 """Flagship clinical cohort queries over driver testdata + DuckDB oracles.
 
-The Spark side runs the real engine (``pipeline.flagship_query``); the
-oracle is a from-scratch ANSI-SQL restatement of the same semantics
+The Spark side runs the real engine (``pipeline.run_cohort_pipeline``);
+the oracle is a from-scratch ANSI-SQL restatement of the same semantics
 (SURVEY.md §2) that DuckDB executes over identical parquet — a two-engine
 differential oracle, mechanizing the reference's own pandas-vs-polars
-cross-validation practice (SURVEY.md §5.1.3).
+cross-validation practice (SURVEY.md §5.1.3). ``cohort_oracle`` is that
+restatement, shared with the CSV round trip (``queries_csv``);
+``_STANDIN_VARIANTS`` lists the registered DataFrame-face variants.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datamodel_clinicaldata_spark.pipeline import flagship_query
-from datamodel_clinicaldata_spark.registry import register
+from datamodel_clinicaldata_spark.pipeline import (
+    clinical_standins_from_testdata,
+    run_cohort_pipeline,
+)
 
 # σ tiebreaker order used by every window (SURVEY.md §2.4 determinism fix).
 _SIGMA = "Wts_CreatedDate ASC NULLS LAST, Wts_UpdatedDate ASC NULLS LAST, Weight ASC NULLS LAST"
@@ -20,10 +24,14 @@ _SIGMA_PAT = f"TreatmentTypeID ASC NULLS LAST, Tmt_StartDate ASC NULLS LAST, {_S
 _FULL = "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
 
 
-def _flagship_oracle(
-    cohort_col: str, extra_where: str = "", strict_w8: bool = False
+def cohort_oracle(
+    joined: str, cohort_col: str, where: str, strict_w8: bool = False
 ) -> str:
-    """ANSI-SQL twin of ``flagship_query`` for a given cohort column.
+    """ANSI-SQL twin of ``run_cohort_pipeline`` (DuckDB).
+
+    ``joined`` is CTE text ending in one named ``joined``: the renamed
+    star, holding exactly the pass-through columns. ``where`` applies
+    after the windows, before the final distinct.
 
     ``strict_w8=True`` replays the reference's EXACT W8: ``diff(-1)``
     over the whole physically-sorted frame (``pandas_DataModel.py:
@@ -32,13 +40,50 @@ def _flagship_oracle(
     the next USER's) first cohort weight. The default is the clean-lead
     deviation (SURVEY.md §2.5)."""
     lead_over = (
-        f"ORDER BY UID ASC NULLS FIRST, TreatmentTypeID ASC NULLS LAST, "
-        f"Tmt_StartDate ASC NULLS LAST, {_SIGMA}"
+        f"ORDER BY UID ASC NULLS FIRST, {_SIGMA_PAT}"
         if strict_w8
         else f"PARTITION BY UID, TreatmentTypeID, Tmt_StartDate ORDER BY {_SIGMA}"
     )
     return f"""
-WITH users AS (
+WITH {joined}, bucketed AS (
+  SELECT *,
+         CAST(floor(date_diff('day', Tmt_StartDate, Wts_CreatedDate) / 30.417) AS INTEGER) AS month,
+         CAST(floor(date_diff('day', Tmt_StartDate, Wts_CreatedDate) / 7) AS INTEGER) AS week
+  FROM joined
+), m1 AS (
+  SELECT *,
+         count(Wts_UpdatedDate) OVER w_coh AS WIR,
+         first_value(Weight) OVER w_pat AS PSW,
+         first_value(Weight) OVER w_trt AS TSW,
+         last_value(Weight) OVER w_trt AS TEW,
+         first_value(Weight) OVER w_coh AS first_w
+  FROM bucketed
+  WINDOW
+    w_pat AS (PARTITION BY UID ORDER BY {_SIGMA_PAT} {_FULL}),
+    w_trt AS (PARTITION BY UID, TreatmentTypeID, Tmt_StartDate ORDER BY {_SIGMA} {_FULL}),
+    w_coh AS (PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, {cohort_col} ORDER BY {_SIGMA} {_FULL})
+), m2 AS (
+  SELECT *,
+         TEW - TSW AS treatment_TBWL,
+         first_w - lead(first_w) OVER ({lead_over}) AS wgt_diff
+  FROM m1
+), m3 AS (
+  SELECT *,
+         max(wgt_diff) OVER (
+           PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, {cohort_col}
+           ORDER BY {_SIGMA} {_FULL}
+         ) AS patient_TBWL
+  FROM m2
+)
+SELECT DISTINCT * EXCLUDE (TEW, first_w, wgt_diff)
+FROM m3
+WHERE {where}
+"""
+
+
+# The stand-in star over the parquet testdata — the DuckDB replay of
+# ``pipeline.clinical_standins_from_testdata`` + ``assemble_star``.
+_STANDIN_JOINED = """users AS (
   SELECT CAST(c_custkey AS VARCHAR) AS UID,
          c_name AS Name,
          c_mktsegment AS Gender,
@@ -64,83 +109,60 @@ WITH users AS (
   FROM users u
   LEFT JOIN weights w ON u.UID = w.MasterUserID
   LEFT JOIN treatments t ON u.UID = t.MasterUserID
-), bucketed AS (
-  SELECT *,
-         CAST(floor(date_diff('day', Tmt_StartDate, Wts_CreatedDate) / 30.417) AS INTEGER) AS month,
-         CAST(floor(date_diff('day', Tmt_StartDate, Wts_CreatedDate) / 7) AS INTEGER) AS week
-  FROM joined
-), m1 AS (
-  SELECT *,
-         count(Wts_UpdatedDate) OVER w_coh AS WIR,
-         first_value(Weight) OVER w_pat AS PSW,
-         first_value(Weight) OVER w_trt AS TSW,
-         last_value(Weight) OVER w_trt AS TEW,
-         first_value(Weight) OVER w_coh AS first_w
-  FROM bucketed
-  WINDOW
-    w_pat AS (PARTITION BY UID ORDER BY {_SIGMA_PAT} {_FULL}),
-    w_trt AS (PARTITION BY UID, TreatmentTypeID, Tmt_StartDate ORDER BY {_SIGMA} {_FULL}),
-    w_coh AS (PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, {cohort_col} ORDER BY {_SIGMA} {_FULL})
-), m2 AS (
-  SELECT *,
-         first_w - lead(first_w) OVER ({lead_over}) AS wgt_diff
-  FROM m1
-), m3 AS (
-  SELECT *,
-         max(wgt_diff) OVER (
-           PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, {cohort_col}
-           ORDER BY {_SIGMA} {_FULL}
-         ) AS patient_TBWL
-  FROM m2
-)
-SELECT DISTINCT
-  UID, Name, Gender, Age, ClinicID, c_acctbal,
-  Weight, Wts_CreatedDate, Wts_UpdatedDate,
-  TreatmentTypeID, Tmt_StartDate,
-  month, week, WIR, PSW, TSW,
-  TEW - TSW AS treatment_TBWL,
-  patient_TBWL
-FROM m3
-WHERE Age BETWEEN 15 AND 74{extra_where}
-"""
+)"""
 
 
-def _make(cohort: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return flagship_query(spark, sf_dir, cohort=cohort)
-
-    return q
-
-
-for _cohort in ("week", "month", "ClinicID"):
-    register(f"clinical_cohort_{_cohort}", _flagship_oracle(_cohort))(_make(_cohort))
-
-
-@register(
-    "clinical_cohort_week_filtered",
-    _flagship_oracle("week", " AND Gender = 'BUILDING' AND ClinicID = 5"),
-)
-def clinical_cohort_week_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1+F3 exercised on the full pipeline: gender ('BUILDING' segment in
-    the stand-in mapping) and clinic filters applied AFTER the window
-    metrics — pinning cross-engine that PSW/WIR/TBWL are computed over
-    the unfiltered population (SURVEY.md §2.3 filter-placement note)."""
-    from datamodel_clinicaldata_spark.pipeline import (
-        clinical_standins_from_testdata,
-        run_cohort_pipeline,
+def _flagship_oracle(
+    cohort_col: str, extra_where: str = "", strict_w8: bool = False
+) -> str:
+    """ANSI-SQL twin of ``flagship_query`` for a given cohort column, with
+    ``extra_where`` appended to the stand-in age filter."""
+    return cohort_oracle(
+        _STANDIN_JOINED, cohort_col, f"Age BETWEEN 15 AND 74{extra_where}", strict_w8
     )
 
-    users, weights, treatments = clinical_standins_from_testdata(spark, sf_dir)
-    return run_cohort_pipeline(
-        users,
-        weights,
-        treatments,
-        cohort="week",
-        gender="BUILDING",
-        min_age=15,
-        max_age=74,
-        clinic_id=5,
-    )
+
+# Imported only now: the registry imports ``queries_csv``, which needs
+# ``cohort_oracle`` while this module may still be initializing.
+from datamodel_clinicaldata_spark.registry import register  # noqa: E402
+
+# Registered stand-in variants: query name -> ``run_cohort_pipeline``
+# keyword arguments over the full stand-in population (ages 15-74, every
+# clinic). The oracle's WHERE comes from the same entry.
+_STANDIN_VARIANTS = {
+    "clinical_cohort_week": {"cohort": "week"},
+    "clinical_cohort_month": {"cohort": "month"},
+    "clinical_cohort_ClinicID": {"cohort": "ClinicID"},
+    # F1+F3 run AFTER the window metrics, so PSW/WIR/TBWL stay computed
+    # over the unfiltered population (SURVEY.md §2.3 filter-placement
+    # note); 'BUILDING' is a Gender in the stand-in mapping.
+    "clinical_cohort_week_filtered": {
+        "cohort": "week", "gender": "BUILDING", "clinic_id": 5,
+    },
+    # Exact W8 replication (VERDICT r9 #8) with the reference's cross-user
+    # diff(-1) leak; its lead is a single-partition window stage, for
+    # parity only (``operators/windows.py:w_global``).
+    "clinical_cohort_week_strict": {"cohort": "week", "strict_w8": True},
+}
+
+
+def _register_standin_variant(name: str, variant: dict) -> None:
+    kw = {
+        "gender": "all", "min_age": 15, "max_age": 74, "clinic_id": None,
+        "strict_w8": False, **variant,
+    }
+    where = "" if kw["gender"] == "all" else f" AND Gender = '{kw['gender']}'"
+    if kw["clinic_id"] is not None:
+        where += f" AND ClinicID = {kw['clinic_id']}"
+
+    @register(name, _flagship_oracle(kw["cohort"], where, kw["strict_w8"]))
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return run_cohort_pipeline(*clinical_standins_from_testdata(spark, sf_dir), **kw)
+
+
+for _name, _variant in _STANDIN_VARIANTS.items():
+    _register_standin_variant(_name, _variant)
+
 
 # ---------------------------------------------------------------------------
 # SQL face of the flagship (SURVEY.md §7.1: "the same pipeline registered as
@@ -149,8 +171,6 @@ def clinical_cohort_week_filtered(spark: SparkSession, sf_dir: str) -> DataFrame
 # SAME oracle as clinical_cohort_week, so the driver pins DataFrame face ≡
 # SQL face ≡ DuckDB restatement (a three-way differential).
 # ---------------------------------------------------------------------------
-_SPARK_FULL = "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
-
 _SPARK_COHORT_WEEK_SQL = f"""
 WITH joined AS (
   SELECT u.UID, u.Name, u.Gender, u.Age, u.ClinicID, u.c_acctbal,
@@ -171,18 +191,18 @@ WITH joined AS (
   SELECT *,
          count(Wts_UpdatedDate) OVER (
            PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, week
-           ORDER BY {_SIGMA} {_SPARK_FULL}) AS WIR,
+           ORDER BY {_SIGMA} {_FULL}) AS WIR,
          first_value(Weight) OVER (
-           PARTITION BY UID ORDER BY {_SIGMA_PAT} {_SPARK_FULL}) AS PSW,
+           PARTITION BY UID ORDER BY {_SIGMA_PAT} {_FULL}) AS PSW,
          first_value(Weight) OVER (
            PARTITION BY UID, TreatmentTypeID, Tmt_StartDate
-           ORDER BY {_SIGMA} {_SPARK_FULL}) AS TSW,
+           ORDER BY {_SIGMA} {_FULL}) AS TSW,
          last_value(Weight) OVER (
            PARTITION BY UID, TreatmentTypeID, Tmt_StartDate
-           ORDER BY {_SIGMA} {_SPARK_FULL}) AS TEW,
+           ORDER BY {_SIGMA} {_FULL}) AS TEW,
          first_value(Weight) OVER (
            PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, week
-           ORDER BY {_SIGMA} {_SPARK_FULL}) AS first_w
+           ORDER BY {_SIGMA} {_FULL}) AS first_w
   FROM bucketed
 ), m2 AS (
   SELECT *,
@@ -194,7 +214,7 @@ WITH joined AS (
   SELECT *,
          max(wgt_diff) OVER (
            PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, week
-           ORDER BY {_SIGMA} {_SPARK_FULL}) AS patient_TBWL
+           ORDER BY {_SIGMA} {_FULL}) AS patient_TBWL
   FROM m2
 )
 SELECT DISTINCT
@@ -220,49 +240,8 @@ def clinical_cohort_week_sqlface(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles both faces to the same physical shape. Registered against
     the same DuckDB oracle as ``clinical_cohort_week``, so the driver's
     hash gate pins DataFrame face ≡ SQL face ≡ ANSI restatement."""
-    from datamodel_clinicaldata_spark.pipeline import (
-        clinical_standins_from_testdata,
-    )
-
     users, weights, treatments = clinical_standins_from_testdata(spark, sf_dir)
     users.createOrReplaceTempView("cl_users")
     weights.createOrReplaceTempView("cl_weights")
     treatments.createOrReplaceTempView("cl_treatments")
     return spark.sql(_SPARK_COHORT_WEEK_SQL)
-
-
-@register(
-    "clinical_cohort_week_strict",
-    _flagship_oracle("week", strict_w8=True),
-)
-def clinical_cohort_week_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT-replication mode of the flagship (VERDICT r9 #8): W8 runs
-    ``strict_w8=True``, reproducing the reference's ``diff(-1)`` over the
-    whole physically-sorted frame (``pandas_DataModel.py:139-142``) —
-    including its cross-user boundary leak, where each treatment's last
-    row diffs against the NEXT group's first cohort weight. The engine's
-    default row (``clinical_cohort_week``) is the clean-lead deviation
-    (SURVEY.md §2.5, the single deliberate semantic difference); this row
-    puts the deviation's OFF switch under the driver's value-hash gate —
-    the oracle's wgt_diff lead is one unpartitioned window over the full
-    O1 sort order, so both engines replay the leak bit-for-bit. The
-    strict lead is a single-partition window stage by construction
-    (acceptable for parity replication only, never the scale default —
-    ``operators/windows.py:w_global``)."""
-    from datamodel_clinicaldata_spark.pipeline import (
-        clinical_standins_from_testdata,
-        run_cohort_pipeline,
-    )
-
-    users, weights, treatments = clinical_standins_from_testdata(spark, sf_dir)
-    return run_cohort_pipeline(
-        users,
-        weights,
-        treatments,
-        cohort="week",
-        gender="all",
-        min_age=15,
-        max_age=74,
-        clinic_id=None,
-        strict_w8=True,
-    )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datamodel_clinicaldata_spark.queries_clinical import cohort_oracle
 from datamodel_clinicaldata_spark.registry import register
 from datamodel_clinicaldata_spark.schemas import CLINICAL_SCHEMAS
 
@@ -63,12 +64,8 @@ def _read_csv_sql(table: str) -> str:
     return f"read_csv('{path}', header=true, columns={{{cols}}})"
 
 
-_SIGMA = "Wts_CreatedDate ASC NULLS LAST, Wts_UpdatedDate ASC NULLS LAST, Weight ASC NULLS LAST"
-_SIGMA_PAT = f"TreatmentTypeID ASC NULLS LAST, Tmt_StartDate ASC NULLS LAST, {_SIGMA}"
-_FULL = "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
-
-_CSV_ORACLE = f"""
-WITH u AS (SELECT * FROM {_read_csv_sql('users')}),
+_CSV_ORACLE = cohort_oracle(
+    f"""u AS (SELECT * FROM {_read_csv_sql('users')}),
 w AS (SELECT * FROM {_read_csv_sql('weights')}),
 t AS (SELECT * FROM {_read_csv_sql('treatments')}),
 joined AS (
@@ -83,59 +80,10 @@ joined AS (
   FROM u
   LEFT JOIN w ON u.UID = w.MasterUserID
   LEFT JOIN t ON u.UID = t.MasterUserID
-), bucketed AS (
-  SELECT *,
-         CAST(floor(date_diff('day', Tmt_StartDate, Wts_CreatedDate) / 30.417) AS INTEGER) AS month,
-         CAST(floor(date_diff('day', Tmt_StartDate, Wts_CreatedDate) / 7) AS INTEGER) AS week
-  FROM joined
-), m1 AS (
-  SELECT *,
-         count(Wts_UpdatedDate) OVER w_coh AS WIR,
-         first_value(Weight) OVER w_pat AS PSW,
-         first_value(Weight) OVER w_trt AS TSW,
-         last_value(Weight) OVER w_trt AS TEW,
-         first_value(Weight) OVER w_coh AS first_w
-  FROM bucketed
-  WINDOW
-    w_pat AS (PARTITION BY UID ORDER BY {_SIGMA_PAT} {_FULL}),
-    w_trt AS (PARTITION BY UID, TreatmentTypeID, Tmt_StartDate ORDER BY {_SIGMA} {_FULL}),
-    w_coh AS (PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, week ORDER BY {_SIGMA} {_FULL})
-), m2 AS (
-  SELECT *,
-         first_w - lead(first_w) OVER (
-           PARTITION BY UID, TreatmentTypeID, Tmt_StartDate ORDER BY {_SIGMA}
-         ) AS wgt_diff
-  FROM m1
-), m3 AS (
-  SELECT *,
-         max(wgt_diff) OVER (
-           PARTITION BY UID, TreatmentTypeID, Tmt_StartDate, week
-           ORDER BY {_SIGMA} {_FULL}
-         ) AS patient_TBWL
-  FROM m2
+)""",
+    "week",
+    "Age BETWEEN 18 AND 72 AND ClinicID = 5066",
 )
-SELECT DISTINCT
-  UID, Name, LastName, Gender, Unit, Birthday, Age, Height, UIDCreatedDate,
-  UIDIsActive, ClinicID, loginId, success,
-  Weight, BMI, BodyFat, BodyWater, Bone, VisceralFat, BMR, MuscleMass,
-  Wts_CreatedDate, Wts_UpdatedDate, Wts_IsActive, IsDelete,
-  TreatmentTypeID, Tmt_StartDate,
-  month, week, WIR, PSW, TSW,
-  TEW - TSW AS treatment_TBWL,
-  patient_TBWL
-FROM m3
-WHERE Age BETWEEN 18 AND 72 AND ClinicID = 5066
-"""
-
-# P3 — the five str→timestamp casts the pandas path applies after rename
-# (``pandas_DataModel.py:77-81``).
-_P3_CAST_COLUMNS = [
-    "Birthday",
-    "UIDCreatedDate",
-    "Wts_CreatedDate",
-    "Wts_UpdatedDate",
-    "Tmt_StartDate",
-]
 
 
 @register("clinical_csv_roundtrip", _CSV_ORACLE)
@@ -150,30 +98,24 @@ def clinical_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline — the union-distinct equals either branch only when the two
     ingest paths produce byte-identical frames.
     """
-    from datamodel_clinicaldata_spark.operators.relational import (
-        assemble_star,
-        cast_timestamps,
-        rename_columns,
-    )
-    from datamodel_clinicaldata_spark.operators.windows import with_cohort_metrics
-    from datamodel_clinicaldata_spark.pipeline import data_pipeline
+    from datamodel_clinicaldata_spark.operators.relational import cast_timestamps
+    from datamodel_clinicaldata_spark.pipeline import data_pipeline, run_cohort_pipeline
     from datamodel_clinicaldata_spark.sources.readers import read_clinical_csv
 
     path = _ensure_fixtures()
-    typed = data_pipeline(spark, path, cohort="week")  # S2: dates typed at load
+    typed = data_pipeline(spark, path)  # S2: dates typed at load
 
-    tables = {
-        t: read_clinical_csv(spark, path, t, typed_dates=False)
-        for t in ("users", "weights", "treatments")
-    }
-    df = assemble_star(tables["users"], tables["weights"], tables["treatments"])
-    df = rename_columns(df)
-    df = cast_timestamps(df, _P3_CAST_COLUMNS)  # S1: explicit P3 cast stage
-    df = with_cohort_metrics(df, cohort="week")
-    untyped = (
-        df.filter(F.col("Age").between(18, 72))
-        .filter(F.col("ClinicID") == 5066)
-        .dropDuplicates()
+    def read_untyped(table: str) -> DataFrame:
+        """S1: dates read as strings, then the explicit P3 cast stage."""
+        ts = [
+            f.name
+            for f in CLINICAL_SCHEMAS[table].fields
+            if isinstance(f.dataType, T.TimestampType)
+        ]
+        return cast_timestamps(read_clinical_csv(spark, path, table, typed_dates=False), ts)
+
+    untyped = run_cohort_pipeline(
+        read_untyped("users"), read_untyped("weights"), read_untyped("treatments")
     )
     return typed.unionByName(untyped).dropDuplicates()
 

@@ -269,8 +269,8 @@ def test_containment_catches_subset_dup(spark):
     assert not jac  # union-diluted similarity misses the subset dup
 
 
-def test_fixpoints_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint_mode='reliable' (VERDICT r9 #4): every iterative graph
+def test_fixpoints_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
+    """SPARK_GRAFT_CHECKPOINT=reliable (VERDICT r9 #4): every iterative graph
     fixpoint runs end-to-end on reliable ``checkpoint()`` — the
     executor-loss-safe pin a real cluster needs (SCALING.md
     "Reliable-checkpoint doctrine") — and produces results identical to
@@ -292,27 +292,23 @@ def test_fixpoints_reliable_checkpoint_mode(spark, tmp_path):
     def labels(frame):
         return {r["node"]: r["component_id"] for r in frame.collect()}
 
-    assert labels(
-        connected_components_star(df, checkpoint_mode="reliable")
-    ) == labels(connected_components_star(df))
+    def pagerank(frame):
+        return {r["node"]: r["pr_e12"] for r in frame.collect()}
+
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT", raising=False)
+    star_loc = labels(connected_components_star(df))
+    cc_loc = labels(connected_components(df))
+    pr_loc = pagerank(pagerank_fixedpoint(df, iters=3, local_threshold=0))
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "reliable")
+    assert labels(connected_components_star(df)) == star_loc
     # local_threshold=0 forces the DISTRIBUTED min-label loop (the
     # union-find escape hatch never checkpoints), max_iter exhaustion
-    # also covers the star fallback's mode passthrough
+    # also covers the star fallback
     assert labels(
-        connected_components(
-            df, local_threshold=0, max_iter=5, checkpoint_mode="reliable"
-        )
-    ) == labels(connected_components(df))
-    pr_rel = {
-        r["node"]: r["pr_e12"]
-        for r in pagerank_fixedpoint(
-            df, iters=3, local_threshold=0, checkpoint_mode="reliable"
-        ).collect()
-    }
-    pr_loc = {
-        r["node"]: r["pr_e12"]
-        for r in pagerank_fixedpoint(df, iters=3, local_threshold=0).collect()
-    }
+        connected_components(df, local_threshold=0, max_iter=5)
+    ) == cc_loc
+    pr_rel = pagerank(pagerank_fixedpoint(df, iters=3, local_threshold=0))
     assert pr_rel == pr_loc  # fixed-point integers: bit-identical
     # reliable mode actually WROTE checkpoints to the durable dir
     import os

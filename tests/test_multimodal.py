@@ -1,5 +1,5 @@
 """Unit tests for multimodal binary-column operators: schema/typing of
-the media table, mapInPandas feature extraction, stub gating."""
+the media table, mapInPandas feature extraction, container decoders."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import types as T
 from datamodel_clinicaldata_spark.operators.multimodal import (
     audio_rms_windows,
     byte_histogram,
-    decode_image,
     frame_sample,
     media_from_documents,
 )
@@ -68,11 +67,6 @@ def test_audio_rms_windows_exact(media_df):
     assert w0["n_samples"] == 256
     expected = sum(b * b for b in (b"abcd" * 100)[:256])
     assert w0["sum_sq"] == expected
-
-
-def test_decode_image_is_gated(media_df):
-    with pytest.raises(NotImplementedError):
-        decode_image(media_df)
 
 
 def _wav_bytes(samples, rate=16_000, channels=1, bits=16):

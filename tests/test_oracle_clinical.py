@@ -1,0 +1,48 @@
+"""Every registered clinical cohort query against its DuckDB oracle, with
+the comparison ``tools/oracle_check.py`` applies (row count, schema,
+int/float dtype splits, values, signed zeros)."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import duckdb
+import pytest
+
+from datamodel_clinicaldata_spark.registry import ORACLE_SQL, QUERIES
+from datamodel_clinicaldata_spark.schemas import TESTDATA_TABLES
+from tools.oracle_check import compare
+
+CLINICAL_QUERIES = [n for n in QUERIES if n.startswith("clinical_")]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", CLINICAL_QUERIES)
+def test_clinical_query_matches_oracle(spark, sf_dir, duck, name):
+    mismatches = compare(
+        QUERIES[name](spark, sf_dir).toPandas(), duck.sql(ORACLE_SQL[name]).df()
+    )
+    assert not mismatches, f"{name}: " + "; ".join(mismatches)
+
+
+def test_queries_clinical_imports_first():
+    """``perfbench/check.py`` imports ``queries_clinical`` before anything
+    else has imported the registry, whose import pulls in ``queries_csv``
+    and its use of ``cohort_oracle``."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", "import datamodel_clinicaldata_spark.queries_clinical"],
+        cwd=repo,
+        check=True,
+    )

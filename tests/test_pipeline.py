@@ -6,7 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datamodel_clinicaldata_spark.pipeline import data_pipeline
+from datamodel_clinicaldata_spark.operators.relational import assemble_star, rename_columns
+from datamodel_clinicaldata_spark.operators.windows import with_cohort_metrics
+from datamodel_clinicaldata_spark.pipeline import data_pipeline, run_cohort_pipeline
 from datamodel_clinicaldata_spark.sources.readers import load_clinical_tables
 
 
@@ -52,23 +54,22 @@ def test_clinic_filter(spark, clinical_dir):
 
 
 def test_final_distinct_removes_duplicate_rows(spark, clinical_dir):
-    from datamodel_clinicaldata_spark.pipeline import run_cohort_pipeline
-
     t = load_clinical_tables(spark, clinical_dir)
-    args = dict(cohort="week", gender="all", min_age=0, max_age=120, clinic_id=None)
-    deduped = run_cohort_pipeline(t["users"], t["weights"], t["treatments"], **args)
-    raw = run_cohort_pipeline(
-        t["users"], t["weights"], t["treatments"], final_distinct=False, **args
+    before_distinct = with_cohort_metrics(
+        rename_columns(assemble_star(t["users"], t["weights"], t["treatments"])),
+        cohort="week",
     )
     # fixtures contain exact duplicate weigh-in rows (FIXTURES.md §4.9)
-    assert raw.count() > deduped.count()
+    assert before_distinct.count() > before_distinct.dropDuplicates().count()
+    deduped = run_cohort_pipeline(
+        t["users"], t["weights"], t["treatments"],
+        cohort="week", gender="all", min_age=0, max_age=120, clinic_id=None,
+    )
     assert deduped.count() == deduped.dropDuplicates().count()
 
 
 def test_zero_weighin_users_survive_left_join(spark, clinical_dir):
     t = load_clinical_tables(spark, clinical_dir)
-    from datamodel_clinicaldata_spark.pipeline import run_cohort_pipeline
-
     df = run_cohort_pipeline(
         t["users"], t["weights"], t["treatments"],
         gender="all", min_age=0, max_age=120, clinic_id=None,
@@ -85,8 +86,6 @@ def test_treatment_restart_distinct_episodes(spark, clinical_dir):
     """(UID, TreatmentTypeID, StartDate) triples identify episodes: a 1→2→1
     restart yields 3 distinct TSW scopes (pandas_DataModel.py:108-110)."""
     t = load_clinical_tables(spark, clinical_dir)
-    from datamodel_clinicaldata_spark.pipeline import run_cohort_pipeline
-
     df = run_cohort_pipeline(
         t["users"], t["weights"], t["treatments"],
         gender="all", min_age=0, max_age=120, clinic_id=None,

@@ -170,24 +170,13 @@ def test_invalid_cohort_rejected(spark):
         with_cohort_metrics(df, "DROP TABLE")
 
 
-def test_notebook_month_bucket_uses_time_of_day(spark):
-    # pandas_DataModel.ipynb divides the RAW Timedelta by Timedelta(days=30.44)
-    # — time-of-day included — before floor (+1 origin). 30.5 days elapsed:
-    # raw 30.5/30.44 = 1.00197 → floor 1 → +1 = 2, whereas whole-days
-    # datediff gives 30/30.44 → floor 0 → +1 = 1. Canonical stays datediff.
+def test_month_bucket_uses_whole_days(spark):
+    # The .py scripts bucket whole elapsed days (.dt.days): 30.5 days elapsed
+    # is datediff 30 → floor(30/30.417) = 0, floor(30/7) = 4; the
+    # time-of-day half day never moves a row into the next bucket.
     df = _frame(spark, [("u1", 30.5, True, 70.0)])
-    nb = _by_key(with_cohort_metrics(df, "week", notebook_buckets=True))["u1"]
-    assert nb[0]["month"] == 2
-    assert nb[0]["week"] == 4 + 1  # notebook week stays whole-days (+1)
-    canon = _by_key(with_cohort_metrics(df, "week"))["u1"]
-    assert canon[0]["month"] == 0 and canon[0]["week"] == 4
-
-
-def test_keep_tew_variant(spark):
-    # polars .py keeps TEW as a column (SURVEY.md §2.9)
-    df = _frame(spark, [("u1", 0, True, 83.5), ("u1", 7, True, 80.5)])
-    res = _by_key(with_cohort_metrics(df, "week", keep_tew=True))["u1"]
-    assert all(r["TEW"] == 80.5 for r in res)
+    res = _by_key(with_cohort_metrics(df, "week"))["u1"]
+    assert res[0]["month"] == 0 and res[0]["week"] == 4
 
 
 def test_time_bucket_gapfill_interpolation(spark):

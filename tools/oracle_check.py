@@ -14,6 +14,7 @@ import sys
 import time
 
 import duckdb
+import numpy as np
 import pandas as pd
 
 
@@ -46,6 +47,61 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             out[c] = s.astype(str)
     out = out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
     return out
+
+
+def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[str]:
+    """Every way the Spark result differs from its oracle under the
+    correctness gate: row count, schema, int/float dtype splits, values
+    and signed zeros. Empty when they match."""
+    try:
+        s, d = normalize(spark_pdf), normalize(oracle_pdf)
+    except TypeError as e:
+        return [f"canonicalize: {e}"]
+    status = []
+    if len(s) != len(d):
+        status.append(f"rowcount {len(s)} vs {len(d)}")
+    if list(s.columns) != list(d.columns):
+        status.append(f"schema {list(s.columns)} vs {list(d.columns)}")
+    if status:
+        return status
+    # Hash parity: the gate hashes canonical strings, so an
+    # int64 `205138` vs float64 `205138.0` column IS a mismatch even
+    # when the values agree to 1e-6 (r4's similarity_quantized_topk
+    # survived locally for exactly this reason). Fail int-vs-float
+    # dtype splits outright; keep rtol only for genuinely-float pairs.
+    for c in s.columns:
+        si = pd.api.types.is_integer_dtype(s[c])
+        di = pd.api.types.is_integer_dtype(d[c])
+        sf_ = pd.api.types.is_float_dtype(s[c])
+        df_ = pd.api.types.is_float_dtype(d[c])
+        if (si and df_) or (sf_ and di):
+            status.append(
+                f"dtype split on {c!r}: spark {s[c].dtype} vs "
+                f"oracle {d[c].dtype} — driver hash would differ"
+            )
+    if status:
+        return status
+    try:
+        pd.testing.assert_frame_equal(
+            s, d, check_dtype=False, check_exact=False, rtol=1e-6, atol=1e-6
+        )
+    except AssertionError as e:
+        return [f"values: {str(e)[:400]}"]
+    # Signed zeros: assert_frame_equal passes -0.0 == 0.0, a
+    # string-hash canonicalizer does not ("-0.0" != "0.0").
+    for c in s.columns:
+        if pd.api.types.is_float_dtype(s[c]) and pd.api.types.is_float_dtype(d[c]):
+            sv, dv = s[c].to_numpy(), d[c].to_numpy()
+            both_zero = (sv == 0) & (dv == 0)
+            if (
+                both_zero.any()
+                and (np.signbit(sv[both_zero]) != np.signbit(dv[both_zero])).any()
+            ):
+                status.append(
+                    f"signed-zero split on {c!r}: one engine emits "
+                    "-0.0 where the other emits 0.0"
+                )
+    return status
 
 
 def main() -> int:
@@ -86,64 +142,12 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
-        try:
-            s, d = normalize(sdf), normalize(ddf)
-        except TypeError as e:
-            failures.append(name)
-            print(f"FAIL  {name}: canonicalize: {e}")
-            continue
-        status = []
-        if len(s) != len(d):
-            status.append(f"rowcount {len(s)} vs {len(d)}")
-        if list(s.columns) != list(d.columns):
-            status.append(f"schema {list(s.columns)} vs {list(d.columns)}")
-        if not status:
-            # Driver parity: its value hash is over canonical strings, so an
-            # int64 `205138` vs float64 `205138.0` column IS a mismatch even
-            # when the values agree to 1e-6 (r4's similarity_quantized_topk
-            # survived locally for exactly this reason). Fail int-vs-float
-            # dtype splits outright; keep rtol only for genuinely-float pairs.
-            for c in s.columns:
-                si = pd.api.types.is_integer_dtype(s[c])
-                di = pd.api.types.is_integer_dtype(d[c])
-                sf_ = pd.api.types.is_float_dtype(s[c])
-                df_ = pd.api.types.is_float_dtype(d[c])
-                if (si and df_) or (sf_ and di):
-                    status.append(
-                        f"dtype split on {c!r}: spark {s[c].dtype} vs "
-                        f"oracle {d[c].dtype} — driver hash would differ"
-                    )
-        if not status:
-            try:
-                pd.testing.assert_frame_equal(
-                    s, d, check_dtype=False, check_exact=False, rtol=1e-6, atol=1e-6
-                )
-            except AssertionError as e:
-                status.append(f"values: {str(e)[:400]}")
-        if not status:
-            # Signed zeros: assert_frame_equal passes -0.0 == 0.0, a
-            # string-hash canonicalizer does not ("-0.0" != "0.0").
-            import numpy as np
-
-            for c in s.columns:
-                if pd.api.types.is_float_dtype(s[c]) and pd.api.types.is_float_dtype(
-                    d[c]
-                ):
-                    sv, dv = s[c].to_numpy(), d[c].to_numpy()
-                    both_zero = (sv == 0) & (dv == 0)
-                    if (
-                        both_zero.any()
-                        and (np.signbit(sv[both_zero]) != np.signbit(dv[both_zero])).any()
-                    ):
-                        status.append(
-                            f"signed-zero split on {c!r}: one engine emits "
-                            "-0.0 where the other emits 0.0"
-                        )
+        status = compare(sdf, ddf)
         if status:
             failures.append(name)
             print(f"FAIL  {name}: {'; '.join(status)}")
         else:
-            print(f"OK    {name}: {len(s)} rows ({time.time()-t0:.1f}s)")
+            print(f"OK    {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
 
     # Count only the queries that actually ran: with a name filter a
     # 4-query spot-check must not claim full-registry coverage in logs

@@ -60,7 +60,7 @@ BOUNDED_OK = {
     # physically-sorted frame, so exact parity REQUIRES one unpartitioned
     # lead (operators/windows.py:w_global) — parity row only, never the
     # scale default (clinical_cohort_week uses the treatment-scoped lead)
-    "clinical_cohort_week_strict": (1, "INTENTIONALLY GLOBAL by construction: replays the reference's whole-frame diff(-1) (pandas_DataModel.py:139-142) under an oracle, so the single-partition lead IS the semantics being proven — see queries_clinical.py:249; the scale default is clinical_cohort_week's treatment-scoped lead"),
+    "clinical_cohort_week_strict": (1, "INTENTIONALLY GLOBAL by construction: replays the reference's whole-frame diff(-1) (pandas_DataModel.py:139-142) under an oracle, so the single-partition lead IS the semantics being proven — see the clinical_cohort_week_strict entry of queries_clinical._STANDIN_VARIANTS; the scale default is clinical_cohort_week's treatment-scoped lead"),
 }
 
 # Query construction itself runs Spark jobs (adaptive/iterative operators
