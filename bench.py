@@ -949,6 +949,10 @@ def main() -> None:
             break
         # Untimed first run at target scale (absorbs listing/AQE/codegen);
         # doubles as the per-run cost estimate for fair-share repeats.
+        # Every run starts from an empty cache: the cohort pipeline's
+        # persisted models would otherwise turn repeats into model hits,
+        # not the full query BASELINE's recomputing loops time.
+        spark.catalog.clearCache()
         t0 = time.time()
         QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         dt_warm = time.time() - t0
@@ -1005,6 +1009,7 @@ def main() -> None:
         ):
             attempts += 1
             pre_quiet = gate.wait_quiet()
+            spark.catalog.clearCache()
             t0 = time.time()
             QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.time() - t0
@@ -1043,6 +1048,7 @@ def main() -> None:
         ):
             gate.wait_quiet()
             rt_pre = mp_canary.read_ms()
+            spark.catalog.clearCache()
             t0 = time.time()
             QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.time() - t0

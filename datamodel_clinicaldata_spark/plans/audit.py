@@ -17,10 +17,44 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 
+def _initial_plans_only(plan: str) -> str:
+    """Drop the ``== Final Plan ==`` half of every executed adaptive plan.
+
+    A materialized adaptive plan prints its final plan and then its initial
+    plan; a persisted frame's plan nested under an ``InMemoryRelation`` does
+    so once the frame has been computed. Keeping only the initial half
+    counts each operator once, in its pre-execution form. Tree depth is
+    read from the position of each line's operator name."""
+    out, skip_at = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if skip_at is not None:
+            if indent > skip_at or (
+                indent == skip_at and "== Initial Plan ==" not in line
+            ):
+                continue
+            skip_at = None
+        if "== Final Plan ==" in line:
+            skip_at = indent
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
 def physical_plan(df: DataFrame) -> str:
     """The pre-execution physical plan text (AQE isFinalPlan=false form —
     stable to assert against, no runtime re-plan noise)."""
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _initial_plans_only(df._jdf.queryExecution().executedPlan().toString())
+
+
+def cached_plan(df: DataFrame) -> str:
+    """The pre-execution physical plan a persisted frame's cache is built
+    from (its ``InMemoryRelation``'s ``cachedPlan``)."""
+    cache_manager = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = cache_manager.lookupCachedData(df._jdf)
+    if not cached.isDefined():
+        raise AssertionError("frame is not cached")
+    return _initial_plans_only(cached.get().cachedRepresentation().cachedPlan().toString())
 
 
 @dataclass
@@ -126,7 +160,10 @@ def unpartitioned_window_lines(plan: str) -> list[str]:
 
 
 def audit(df: DataFrame) -> PlanAudit:
-    plan = physical_plan(df)
+    return audit_plan(physical_plan(df))
+
+
+def audit_plan(plan: str) -> PlanAudit:
     unpartitioned = len(unpartitioned_window_lines(plan))
     # executedPlan().toString() renders each FileScan on one line:
     # "FileScan parquet [cols] Batched: true, ..., Location: InMemoryFileIndex

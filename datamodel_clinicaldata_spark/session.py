@@ -160,7 +160,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.
+    """Build the session, or return the live one unchanged.
+
+    The conf below applies only when a session is created: re-applying it
+    to a live session (``getOrCreate`` would) silently resets whatever its
+    owner set, e.g. a test fixture's shuffle partition count.
 
     ``shuffle_partitions`` defaults to the local core count: at local scale
     200 shuffle partitions (Spark's default) means 200 tiny tasks per
@@ -168,6 +172,9 @@ def get_spark(
     partition lands in the 100-200 MB range. AQE's coalescePartitions then
     shrinks over-partitioned exchanges at runtime either way.
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = f"local[{cpus}]"
@@ -181,6 +188,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce the shuffles inside a persisted plan (the
+        # pipeline's cohort models) as it does in an uncached one;
+        # otherwise a model keeps every shuffle partition and a write over
+        # it emits one file per partition per directory.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -5,11 +5,13 @@ from __future__ import annotations
 import os
 import sys
 
+import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datamodel_clinicaldata_spark.fixtures import generate_clinical_csvs
+from datamodel_clinicaldata_spark.schemas import TESTDATA_TABLES
 from datamodel_clinicaldata_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -37,3 +39,14 @@ def clinical_dir(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    """DuckDB with one view per testdata table, for oracle comparisons."""
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    yield con
+    con.close()

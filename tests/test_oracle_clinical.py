@@ -8,24 +8,12 @@ import os
 import subprocess
 import sys
 
-import duckdb
 import pytest
 
 from datamodel_clinicaldata_spark.registry import ORACLE_SQL, QUERIES
-from datamodel_clinicaldata_spark.schemas import TESTDATA_TABLES
 from tools.oracle_check import compare
 
 CLINICAL_QUERIES = [n for n in QUERIES if n.startswith("clinical_")]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    yield con
-    con.close()
 
 
 @pytest.mark.parametrize("name", CLINICAL_QUERIES)

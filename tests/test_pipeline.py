@@ -139,6 +139,16 @@ def test_curate_cli_roundtrip(spark, sf_dir, tmp_path):
     assert got.filter(F.col("bin_id") < 0).count() == 0
 
 
+def test_cli_keeps_live_session_conf(spark, sf_dir, tmp_path):
+    """A CLI entry run inside a live session (``curate.main`` calls
+    ``get_spark``) returns that session unchanged: it must not reset the
+    fixture's 8 shuffle partitions to the core count."""
+    from datamodel_clinicaldata_spark.curate import main as curate_main
+
+    curate_main(["--input", sf_dir, "--output", str(tmp_path / "curated")])
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
 def test_run_query_cli(spark, sf_dir, capsys):
     """The registry front door: --list enumerates, a run displays, and
     unknown names exit 2."""

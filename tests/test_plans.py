@@ -8,10 +8,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from datamodel_clinicaldata_spark.operators.similarity import cosine_topk_bruteforce
-from datamodel_clinicaldata_spark.pipeline import flagship_query
+from datamodel_clinicaldata_spark.pipeline import (
+    clinical_standins_from_testdata,
+    cohort_model,
+)
 from datamodel_clinicaldata_spark.plans.audit import (
     assert_no_unpartitioned_window,
     audit,
+    audit_plan,
+    cached_plan,
 )
 from datamodel_clinicaldata_spark.registry import QUERIES
 from datamodel_clinicaldata_spark.sources.readers import read_table
@@ -20,8 +25,13 @@ from datamodel_clinicaldata_spark.sources.readers import read_table
 def test_flagship_plan_shape(spark, sf_dir):
     """The flagship pipeline: both dimension joins broadcast, ONE fact
     exchange (on UID) feeds all window operators, exactly 3 window sorts
-    (cohort → treatment+patient shared → cohort), no sort-merge joins."""
-    a = audit(flagship_query(spark, sf_dir))
+    (cohort → treatment+patient shared → cohort), no sort-merge joins.
+    Audited on the plan its persisted cohort model is built from, before
+    the model's first action (the filters and distinct then run over the
+    cached model)."""
+    spark.catalog.clearCache()
+    model = cohort_model(*clinical_standins_from_testdata(spark, sf_dir))
+    a = audit_plan(cached_plan(model))
     assert a.broadcast_hash_joins == 2
     assert a.sort_merge_joins == 0
     assert a.windows == 4
@@ -42,7 +52,6 @@ def test_metric_stage_single_exchange(spark, sf_dir):
     is one extra full-data shuffle per query at 100 TB."""
     from datamodel_clinicaldata_spark.operators.relational import rename_columns
     from datamodel_clinicaldata_spark.operators.windows import with_cohort_metrics
-    from datamodel_clinicaldata_spark.pipeline import clinical_standins_from_testdata
     from datamodel_clinicaldata_spark.operators.relational import assemble_star
 
     users, weights, treatments = clinical_standins_from_testdata(spark, sf_dir)
@@ -261,6 +270,16 @@ def test_registered_surface_window_audit(spark, sf_dir):
 
     bad = sweep(spark, sf_dir)
     assert not bad, f"unpartitioned windows over unbounded input: {bad}"
+
+
+def test_audit_counts_a_computed_model_once(spark, sf_dir):
+    """Once a persisted cohort model has been computed, a query over it
+    prints the model's final and initial plan; the audit keeps only the
+    initial one, so the strict variant's one global lead is counted once."""
+    QUERIES["clinical_cohort_week_strict"](spark, sf_dir).collect()
+    a = audit(QUERIES["clinical_cohort_week_strict"](spark, sf_dir))
+    assert a.unpartitioned_windows == 1
+    assert a.windows == 5
 
 
 def test_aqe_skew_join_split(spark, sf_dir):

@@ -3,9 +3,11 @@
     python tools/ab_time.py <sf_dir> <repeats> <query> [query ...]
 
 One session, per query: one untimed warm run, then <repeats> timed noop-sink
-runs; prints min/median. Methodology matches bench.py's steady-state timing
-(guide §1.4) without its quiesce/canary/probe machinery, so use it only for
-relative A/B on the same box within minutes of itself.
+runs; prints min/median. Each run starts from an empty cache, so the
+cohort pipeline's persisted models never turn a run into a model hit.
+Methodology matches bench.py's steady-state timing (guide §1.4) without its
+quiesce/canary/probe machinery, so use it only for relative A/B on the same
+box within minutes of itself.
 """
 import os
 import statistics
@@ -25,10 +27,12 @@ def main() -> None:
     spark = get_spark("ab_time")
     for n in names:
         spark.sparkContext.setJobDescription(f"warm:{n}")
+        spark.catalog.clearCache()
         QUERIES[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
         ts = []
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"timed:{n}:{i}")
+            spark.catalog.clearCache()
             t0 = time.monotonic()
             QUERIES[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
             ts.append(time.monotonic() - t0)
