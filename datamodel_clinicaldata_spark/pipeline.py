@@ -12,10 +12,14 @@ operators (they are not on the partition keys), so the semantics survive
 optimization by default (SURVEY.md §4.1).
 
 Because no metric depends on a filter parameter, the pipeline is split in
-two. ``cohort_model`` (star → rename → window metrics) is persisted once per
-(input snapshot, cohort column, ``strict_w8``); the filters and the distinct
-then run over that persisted model, so one model serves every gender / age /
-clinic draw and a repeated query skips the joins, windows and shuffle.
+two. ``cohort_model`` (star → rename → window metrics → distinct) is
+persisted once per (input snapshot, cohort column, ``strict_w8``), already
+deduplicated; a gender / age / clinic draw is then one filter over that
+persisted model, with no joins, windows, aggregate or shuffle of its own.
+Moving the distinct ahead of the filters keeps the result: a deterministic
+row filter commutes with a full-row distinct, since rows equal in every
+column pass or fail it together. The distinct adds no exchange either: the
+window output is already hash-partitioned by ``UID``, one of its keys.
 
 ``run_cohort_pipeline`` is the engine core (DataFrames in, DataFrame out);
 ``data_pipeline`` wires it to clinical CSV/parquet sources exactly like the
@@ -45,7 +49,11 @@ from datamodel_clinicaldata_spark.operators.windows import (
     COHORT_CHOICES,
     with_cohort_metrics,
 )
-from datamodel_clinicaldata_spark.sources.readers import load_clinical_tables, read_table
+from datamodel_clinicaldata_spark.sources.readers import (
+    file_listing,
+    load_clinical_tables,
+    read_table,
+)
 
 # S3 — the reference's "# Check" projection (pandas_DataModel.py:156-160).
 CHECK_COLUMNS = ["Weight", "week", "WIR", "PSW", "TSW", "treatment_TBWL", "patient_TBWL"]
@@ -65,24 +73,6 @@ _MODELS: OrderedDict[tuple, _Model] = OrderedDict()
 _MODELS_LOCK = threading.Lock()
 
 
-def _fingerprint(inputs: tuple[DataFrame, ...]) -> tuple:
-    """Every input file with its length and modification time.
-
-    Spark's cache matches file scans by path alone, so a file rewritten in
-    place would keep being served from the old blocks; the fingerprint
-    changes instead and the stale model is dropped."""
-    spark = inputs[0].sparkSession
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    out = []
-    for df in inputs:
-        for f in sorted(df.inputFiles()):
-            path = hadoop_path(f)
-            st = path.getFileSystem(conf).getFileStatus(path)
-            out.append((f, st.getLen(), st.getModificationTime()))
-    return tuple(out)
-
-
 def cohort_model(
     users: DataFrame,
     weights: DataFrame,
@@ -91,7 +81,7 @@ def cohort_model(
     strict_w8: bool = False,
 ) -> DataFrame:
     """The parameter-free half of the pipeline — star, rename, window
-    metrics — persisted and shared by every filter draw.
+    metrics, full-row distinct — persisted and shared by every filter draw.
 
     One model is kept per (cohort, ``strict_w8``, semantic hash of each
     input); a hit must also have semantically equal inputs and the same
@@ -101,7 +91,10 @@ def cohort_model(
     persisted (``MEMORY_AND_DISK_DESER``)."""
     inputs = (users, weights, treatments)
     key = (cohort, strict_w8, *(df.semanticHash() for df in inputs))
-    fingerprint = _fingerprint(inputs)
+    # Spark's cache matches file scans by path alone, so a file rewritten in
+    # place would keep being served from the old blocks; its length or
+    # modification time changes the fingerprint instead, dropping the model.
+    fingerprint = file_listing(users.sparkSession, [f for df in inputs for f in df.inputFiles()])
     with _MODELS_LOCK:
         old = _MODELS.pop(key, None)
         if old is not None:
@@ -115,8 +108,10 @@ def cohort_model(
             # Unpersist before building: the cache would otherwise
             # substitute the stale blocks into the new, equal plan.
             old.frame.unpersist()
-        frame = with_cohort_metrics(
-            rename_columns(assemble_star(*inputs)), cohort=cohort, strict_w8=strict_w8
+        frame = distinct_rows(
+            with_cohort_metrics(
+                rename_columns(assemble_star(*inputs)), cohort=cohort, strict_w8=strict_w8
+            )
         ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
         _MODELS[key] = _Model(inputs, fingerprint, frame)
         while len(_MODELS) > MAX_MODELS:
@@ -143,10 +138,13 @@ def run_cohort_pipeline(
     canon: pandas dedups (``pandas_DataModel.py:161``).
     ``strict_w8`` selects exact W8 replication including the reference's
     cross-user diff(-1) leak — see ``with_cohort_metrics``.
-    The filters and the distinct run over the persisted ``cohort_model``.
+    A draw is one filter over the persisted ``cohort_model``, which already
+    holds distinct rows: a deterministic row filter commutes with a
+    full-row distinct, so filtering the deduplicated model returns the
+    rows that deduplicating the filtered rows would.
     """
     model = cohort_model(users, weights, treatments, cohort=cohort, strict_w8=strict_w8)
-    return distinct_rows(filters(model, gender, min_age, max_age, clinic_id))
+    return filters(model, gender, min_age, max_age, clinic_id)
 
 
 def data_pipeline(

@@ -58,10 +58,8 @@ def load_clinical_tables(
 ) -> dict[str, DataFrame]:
     """Load the three clinical base tables (S1/S2 ×3)."""
     if fmt == "parquet":
-        return {
-            t: spark.read.parquet(os.path.join(path_to_data, f"{t}.parquet"))
-            for t in CLINICAL_SCHEMAS
-        }
+        paths = {t: os.path.join(path_to_data, f"{t}.parquet") for t in CLINICAL_SCHEMAS}
+        return {t: spark.read.schema(footer_schema(spark, p)).parquet(p) for t, p in paths.items()}
     return {t: read_clinical_csv(spark, path_to_data, t) for t in CLINICAL_SCHEMAS}
 
 
@@ -85,8 +83,57 @@ def _normalize_event_ts(df: DataFrame, col: str) -> DataFrame:
     return df
 
 
+def file_listing(spark: SparkSession, paths: list[str]) -> tuple:
+    """Every file under ``paths`` (files or directories) with its length and
+    modification time, read through the Hadoop ``FileSystem``: the snapshot
+    a footer schema or a persisted model was built from."""
+    conf = spark._jsc.hadoopConfiguration()
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    out = []
+    for p in paths:
+        path = hadoop_path(p)
+        fs = path.getFileSystem(conf)
+        todo = [fs.getFileStatus(path)]
+        while todo:
+            st = todo.pop()
+            if st.isDirectory():
+                todo.extend(fs.listStatus(st.getPath()))
+            else:
+                out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+# (session UUID, path) -> (file listing, schema Spark inferred from the footer)
+_FOOTER_SCHEMAS: dict[tuple[str, str], tuple[tuple, T.StructType]] = {}
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers from ``path``'s parquet footer, which costs a
+    job; it is inferred once per path per session and reused while the
+    path's file listing is unchanged.
+
+    A memo, not a pinned ``StructType``: a pinned schema over a file whose
+    column was renamed reads silent nulls, and a pinned ``timestamp_ntz``
+    over a TIMESTAMP(NANOS) drop fails to read. The memo holds what the
+    footer says now, under this session's conf (``nanosAsLong``, NTZ
+    inference), so a new session or a rewritten file infers again. Two
+    racing first reads both infer; either result is the same schema."""
+    key = (spark._jsparkSession.sessionUUID(), path)
+    listing = file_listing(spark, [path])
+    hit = _FOOTER_SCHEMAS.get(key)
+    if hit is not None and hit[0] == listing:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _FOOTER_SCHEMAS[key] = (listing, schema)
+    return schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata parquet table.
+
+    Schema inference runs one job per path per session: later reads reuse
+    the footer schema (``footer_schema``) until the file's length or
+    modification time changes, or the session is new.
 
     Self-sufficient on ANY session (not just ``session.get_spark()``):
     TIMESTAMP(NANOS) testdata is rejected outright by a vanilla
@@ -101,7 +148,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name in _EVENT_TS_COLUMNS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(footer_schema(spark, path)).parquet(path)
     for col in _EVENT_TS_COLUMNS.get(name, ()):
         df = _normalize_event_ts(df, col)
     return df

@@ -24,13 +24,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datamodel_clinicaldata_spark.sources.readers import footer_schema, read_table
+
 
 def corpus_digest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The frozen corpus side: (dig, keep_id) — smallest doc_id per
     digest among corpus docs (doc_id % 5 != 4, the same split the batch
     twin uses). 16-byte digest + 8-byte id per distinct content; the
     maintained-index shape that makes per-drop cost scale with the drop."""
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = read_table(spark, sf_dir, "documents")
     return (
         d.filter(F.col("doc_id") % 5 != 4)
         .select(F.md5("text").alias("dig"), "doc_id")
@@ -41,8 +43,9 @@ def corpus_digest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the documents parquet, filtered to the
-    incoming-drop split (doc_id % 5 == 4)."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    incoming-drop split (doc_id % 5 == 4). The schema is the footer's, as
+    ``read_table`` reads it."""
+    schema = footer_schema(spark, os.path.join(sf_dir, "documents.parquet"))
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -34,17 +34,18 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical type is not stable across generations (TIMESTAMP(NANOS) in
     some drops, TIMESTAMP(MICROS)-NTZ in others). Hardcoding either is a
     silent ×1000 timestamp shift (or a watermark type error) when the data
-    flips, so the schema is taken from the parquet footer via a batch
-    reader (metadata-only — no data scan) and ``ts`` is normalized by the
-    same type-dispatched rule as ``read_table``. The nanosAsLong conf is
-    set here, not assumed from a prior batch read, and stays set — the
-    stream is lazy and the scan consults the conf at (re)execution time."""
+    flips, so the schema is the parquet footer's (``footer_schema``: one
+    inference job per path per session, shared with ``read_table``) and
+    ``ts`` is normalized by the same type-dispatched rule as
+    ``read_table``. The nanosAsLong conf is set here, not assumed from a
+    prior batch read, and stays set — the stream is lazy and the scan
+    consults the conf at (re)execution time."""
     import os
 
-    from datamodel_clinicaldata_spark.sources.readers import _normalize_event_ts
+    from datamodel_clinicaldata_spark.sources.readers import _normalize_event_ts, footer_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = footer_schema(spark, os.path.join(sf_dir, "events.parquet"))
     df = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")

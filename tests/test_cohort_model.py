@@ -56,7 +56,7 @@ def test_new_draw_filters_the_persisted_model(spark, sf_dir, duck):
     plan = physical_plan(q)
     assert "InMemoryTableScan" in plan
     outside = "\n".join(_outside_cache(plan))
-    for op in ("Window [", "Exchange", "Sort ["):
+    for op in ("Window [", "Exchange", "Sort [", "HashAggregate"):
         assert op not in outside, f"{op!r} outside the cached model:\n{outside}"
     got = q.toPandas()
     assert len(got) > 0
