@@ -16,7 +16,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from datamodel_clinicaldata_spark.pipeline import flagship_query
 
-    return flagship_query(spark, "/root/testdata/sf0.001", cohort="week")
+    return flagship_query(spark, "/root/testdata/sf0.001")
 
 
 def _coverage_order(names: list[str]) -> list[str]:

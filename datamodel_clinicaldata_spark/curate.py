@@ -41,16 +41,10 @@ def curate_documents(
         "doc_id", "source", "text", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     screened = tok.filter(F.col("n_tokens").between(min_tokens, max_tokens))
-    deduped = dedup_keep_first(screened, "text", "doc_id")
+    deduped = dedup_keep_first(screened)
     if keep_pct < 100:
         deduped = deduped.filter(knuth_mod("doc_id", 100) < keep_pct)
-    packed = quota_chunk_bins(
-        deduped.select("doc_id", "source", "n_tokens"),
-        size_col="n_tokens",
-        order_col="doc_id",
-        group_col="source",
-        budget=budget,
-    )
+    packed = quota_chunk_bins(deduped.select("doc_id", "source", "n_tokens"), budget=budget)
     return deduped.select("doc_id", "text").join(packed, "doc_id").select(
         "doc_id", "source", "n_tokens", "bin_id", "text"
     )

@@ -16,7 +16,7 @@ import random
 import uuid
 from datetime import datetime, timedelta
 
-DEFAULT_N_USERS = 24
+N_USERS = 24
 FMT = "%Y-%m-%d %H:%M:%S"
 
 
@@ -24,9 +24,10 @@ def _uid(rng: random.Random) -> str:
     return str(uuid.UUID(int=rng.getrandbits(128), version=1))
 
 
-def generate_clinical_csvs(out_dir: str, n_users: int = DEFAULT_N_USERS, seed: int = 7) -> dict:
-    """Write users.csv / weights.csv / treatments.csv; returns summary."""
-    rng = random.Random(seed)
+def generate_clinical_csvs(out_dir: str) -> dict:
+    """Write users.csv / weights.csv / treatments.csv (seed 7); returns
+    summary."""
+    rng = random.Random(7)
     os.makedirs(out_dir, exist_ok=True)
     base = datetime(2023, 3, 1, 9, 0, 0)
 
@@ -34,7 +35,7 @@ def generate_clinical_csvs(out_dir: str, n_users: int = DEFAULT_N_USERS, seed: i
     first_names = ["Ada", "Ben", "Cleo", "Dan", "Eve", "Finn", "Gus", "Hana"]
     last_names = ["Ng", "Ortiz", "Patel", "Quinn", "Rao", "Singh"]
 
-    for i in range(n_users):
+    for i in range(N_USERS):
         uid = _uid(rng)
         # Boundary ages 18/72 present (FIXTURES.md §4.11) + out-of-range.
         age = [18, 72, 17, 73, *range(20, 70, 3)][i % 20]

@@ -97,8 +97,8 @@ def punct_ratio(text: Column) -> Column:
     return (F.length(text) - F.length(cleaned)) / F.greatest(F.length(text), F.lit(1))
 
 
-def stopword_count(text: Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS_EN)])
+def stopword_count(text: Column) -> Column:
+    sw = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     return F.size(F.filter(tokens(text), lambda t: F.array_contains(sw, t)))
 
 
@@ -126,11 +126,11 @@ def lang_id(text: Column) -> Column:
     return best_lang
 
 
-def doc_fingerprint(text: Column, k: int = 16) -> Column:
-    """Document fingerprint: minimum md5 over the k-char shingle set (a
+def doc_fingerprint(text: Column) -> Column:
+    """Document fingerprint: minimum md5 over the 16-char shingle set (a
     1-permutation MinHash). Near-identical documents collide; md5 keeps the
     value engine-portable (DuckDB computes the identical digest)."""
-    return F.array_min(F.transform(char_shingles(text, k), F.md5))
+    return F.array_min(F.transform(char_shingles(text, 16), F.md5))
 
 
 def gram_hashes(text: Column, k: int = 8) -> Column:

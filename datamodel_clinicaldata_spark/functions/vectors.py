@@ -18,8 +18,8 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def round_fixed(x: Column, digits: int) -> Column:
-    """Engine-independent half-up rounding: ⌊x·10^d + ½⌋ / 10^d.
+def round_fixed(x: Column) -> Column:
+    """Engine-independent half-up rounding to 6 decimals: ⌊x·10⁶ + ½⌋ / 10⁶.
 
     ``F.round`` is NOT engine-independent even on bit-identical input —
     Spark rounds through BigDecimal.valueOf's shortest decimal string
@@ -28,9 +28,9 @@ def round_fixed(x: Column, digits: int) -> Column:
     between engines. floor of a bit-identical IEEE double is the same
     everywhere; use this for any rounded value that feeds a PREDICATE or
     ORDER/rank key in an oracle-paired query (oracle twin:
-    ``floor(x * 1e{d} + 0.5) / 1e{d}``). Input magnitude must keep
-    x·10^d inside long range (cosines/norms: trivially yes)."""
-    p = F.lit(float(10**digits))
+    ``floor(x * 1e6 + 0.5) / 1e6``). Input magnitude must keep
+    x·10⁶ inside long range (cosines/norms: trivially yes)."""
+    p = F.lit(1e6)
     return F.floor(x * p + F.lit(0.5)) / p
 
 

@@ -37,21 +37,25 @@ from datamodel_clinicaldata_spark.operators.partitioning import (
     widen_expansion,
 )
 
+# Every operator here reads a corpus of (doc_id, text) rows. Shingles are
+# word 3-grams.
+_SHINGLE_K = 3
 
-def exact_dedup_groups(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct content with the
     canonical (minimum) id and the duplicate count."""
     return (
-        df.select(F.col(id_col), F.md5(F.col(content_col)).alias("content_hash"))
+        df.select(F.col("doc_id"), F.md5(F.col("text")).alias("content_hash"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def _pairs_from_postings(grouped: DataFrame, ids_col: str = "ids") -> DataFrame:
+def _pairs_from_postings(grouped: DataFrame) -> DataFrame:
     """(id_a, id_b) candidate pairs from grouped posting lists — emitted
     INSIDE the aggregation row via nested array transforms (id_a < id_b by
     sorting the list first), then exploded and deduped.
@@ -62,7 +66,7 @@ def _pairs_from_postings(grouped: DataFrame, ids_col: str = "ids") -> DataFrame:
     (exact shingle postings, simhash bands over clustered corpora) the
     interpreted per-pair struct work loses to a JVM hash self-join —
     measured at sf0.1 — so those operators join instead."""
-    ids = F.array_sort(F.col(ids_col))
+    ids = F.array_sort(F.col("ids"))
     pairs = F.flatten(
         F.transform(
             ids,
@@ -80,12 +84,7 @@ def _pairs_from_postings(grouped: DataFrame, ids_col: str = "ids") -> DataFrame:
 
 
 def _shingle_postings(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int,
-    max_postings: int | None,
-    n_source_rows: int = 0,
+    df: DataFrame, max_postings: int | None, n_source_rows: int = 0
 ) -> DataFrame:
     """Inverted-index posting lists: (shingle, ids), hot shingles dropped.
 
@@ -101,7 +100,10 @@ def _shingle_postings(
     downstream consumers (re-explode + self-join on shingle) inherit the
     widened hash clustering, so no second exchange appears."""
     idx = df.select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(content_col), k))).alias("shingle")
+        F.col("doc_id"),
+        F.explode(
+            F.array_distinct(word_shingles(F.col("text"), _SHINGLE_K))
+        ).alias("shingle"),
     )
     idx = widen_expansion(idx, "shingle", n_source_rows=n_source_rows)
     keep = F.size("ids") >= 2
@@ -109,21 +111,18 @@ def _shingle_postings(
         keep = keep & (F.size("ids") <= max_postings)
     return (
         idx.groupBy("shingle")
-        .agg(F.collect_list(id_col).alias("ids"))
+        .agg(F.collect_list("doc_id").alias("ids"))
         .filter(keep)
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int = 3,
     threshold: float = 0.5,
     max_postings: int | None = 200,
     n_rows_est: int | None = None,
 ) -> DataFrame:
-    """Exact k-token-shingle Jaccard for every candidate pair sharing at
+    """Exact 3-token-shingle Jaccard for every candidate pair sharing at
     least one (non-stop) shingle. Output: (id_a, id_b, jaccard), id_a <
     id_b, jaccard ≥ threshold. ``n_rows_est``: source row count for the
     postings reduce width (auto-detected when None — see
@@ -149,8 +148,8 @@ def ngram_jaccard_pairs(
     n_src = source_rows_for_width(df, n_rows_est)
     df = ensure_min_parallelism(df)
     sizes = df.select(
-        F.col(id_col),
-        F.size(F.array_distinct(word_shingles(F.col(content_col), k))).alias("n"),
+        F.col("doc_id"),
+        F.size(F.array_distinct(word_shingles(F.col("text"), _SHINGLE_K))).alias("n"),
     )
     # Heavy posting lists (shared-vocabulary shingles) pair off via a JVM
     # hash self-join — measured faster than in-array pair emission once
@@ -158,22 +157,22 @@ def ngram_jaccard_pairs(
     # vs ns/row join probes). The capped postings re-explode into a
     # compact index; both join sides are the identical subplan, so Spark
     # reuses one exchange (ReusedExchange) for the self-join.
-    idx = _shingle_postings(df, content_col, id_col, k, max_postings, n_src).select(
-        "shingle", F.explode("ids").alias(id_col)
+    idx = _shingle_postings(df, max_postings, n_src).select(
+        "shingle", F.explode("ids").alias("doc_id")
     )
     a, b = idx.alias("a"), idx.alias("b")
     cond = (F.col("a.shingle") == F.col("b.shingle")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+        F.col("a.doc_id") < F.col("b.doc_id")
     )
     pair_counts = (
         a.join(b, cond)
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("__na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("__nb"))
+    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("__na"))
+    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("__nb"))
     jac = F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
     return (
         pair_counts.join(na, "id_a")
@@ -183,15 +182,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    max_postings: int | None = 200,
-    n_rows_est: int | None = None,
-) -> DataFrame:
+def ngram_containment_pairs(df: DataFrame, max_postings: int | None = 200) -> DataFrame:
     """ASYMMETRIC set containment C(A,B) = |A∩B| / min(|A|,|B|) over
     candidate pairs sharing a (non-stop) shingle — the subset-duplicate
     detector: a short document embedded verbatim in a longer one scores
@@ -200,47 +191,47 @@ def ngram_containment_pairs(
     :func:`ngram_jaccard_pairs` (one postings self-join, c from
     ``groupBy(pair).count()``, sizes joined in narrow); only the
     denominator differs — ``least(|A|,|B|)`` instead of the union. Output
-    (id_a, id_b, containment), id_a < id_b, containment ≥ threshold.
+    (id_a, id_b, containment), id_a < id_b, containment ≥ 0.8.
     Capped-semantics note identical to the Jaccard variant: with a
     binding ``max_postings``, c ignores capped shingles while sizes count
     them (lower bound); oracle twins must replay the capped counting
     chain."""
-    n_src = source_rows_for_width(df, n_rows_est)
+    n_src = source_rows_for_width(df)
     df = ensure_min_parallelism(df)
     sizes = df.select(
-        F.col(id_col),
-        F.size(F.array_distinct(word_shingles(F.col(content_col), k))).alias("n"),
+        F.col("doc_id"),
+        F.size(F.array_distinct(word_shingles(F.col("text"), _SHINGLE_K))).alias("n"),
     )
-    idx = _shingle_postings(df, content_col, id_col, k, max_postings, n_src).select(
-        "shingle", F.explode("ids").alias(id_col)
+    idx = _shingle_postings(df, max_postings, n_src).select(
+        "shingle", F.explode("ids").alias("doc_id")
     )
     a, b = idx.alias("a"), idx.alias("b")
     pair_counts = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("__na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("__nb"))
+    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("__na"))
+    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("__nb"))
     cont = F.col("__c") / F.least(F.col("__na"), F.col("__nb"))
     return (
         pair_counts.join(na, "id_a")
         .join(nb, "id_b")
         .select("id_a", "id_b", cont.alias("containment"))
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= 0.8)
     )
 
 
-def _lcg_longs(n: int, seed: int = 0x5DEECE66D) -> list[int]:
+def _lcg_longs(n: int) -> list[int]:
     """n deterministic signed-64 constants from a 64-bit LCG (portable,
     no RNG state)."""
-    state = seed & 0xFFFFFFFFFFFFFFFF
+    state = 0x5DEECE66D
     out = []
     for _ in range(n):
         state = (state * 6364136223846793005 + 1442695040888963407) & 0xFFFFFFFFFFFFFFFF
@@ -248,7 +239,7 @@ def _lcg_longs(n: int, seed: int = 0x5DEECE66D) -> list[int]:
     return out
 
 
-def minhash_signature(content: Column, k: int, num_hashes: int) -> Column:
+def minhash_signature(content: Column, num_hashes: int) -> Column:
     """MinHash signature as array<long> in ONE pass over the shingle set:
     ``aggregate(xxhash64-per-shingle, [MAX]*H, zip_with(least(min, h XOR C_i)))``.
 
@@ -262,7 +253,7 @@ def minhash_signature(content: Column, k: int, num_hashes: int) -> Column:
     correlated across i, which only *raises* band-collision recall. All
     bitwise ops — safe under ANSI mode (no overflow)."""
     hashes = F.transform(
-        F.array_distinct(word_shingles(content, k)), lambda s: F.xxhash64(s)
+        F.array_distinct(word_shingles(content, _SHINGLE_K)), lambda s: F.xxhash64(s)
     )
     # One parsed SQL literal array, not 128 F.lit Column objects: the
     # per-Column form spent ~0.5 s of Python/py4j time per query BUILD
@@ -279,23 +270,16 @@ def minhash_signature(content: Column, k: int, num_hashes: int) -> Column:
 
 
 # Most recent persisted signature projection (see minhash_lsh_pairs) —
-# the default latest-call-wins lifecycle; guarded for concurrent callers.
+# the latest-call-wins lifecycle; guarded for concurrent callers.
 _MINHASH_PERSIST_HANDLE: DataFrame | None = None
 _MINHASH_PERSIST_LOCK = __import__("threading").Lock()
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int = 3,
-    num_hashes: int = 128,
-    bands: int = 32,
-    threshold: float = 0.5,
-    persist_into: list[DataFrame] | None = None,
-    n_rows_est: int | None = None,
+    df: DataFrame, num_hashes: int = 128, bands: int = 32, n_rows_est: int | None = None
 ) -> DataFrame:
-    """MinHash + banded LSH near-dup detection.
+    """MinHash + banded LSH near-dup detection: pairs with shingle
+    Jaccard ≥ 0.5.
 
     rows-per-band r = num_hashes/bands; candidate pairs = docs agreeing on
     all r rows of ≥1 band; each candidate is then verified with exact
@@ -312,39 +296,32 @@ def minhash_lsh_pairs(
     n_src = source_rows_for_width(df, n_rows_est)
     df = ensure_min_parallelism(df)
     docs = df.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(F.col(content_col), k)).alias("shingles"),
-        minhash_signature(F.col(content_col), k, num_hashes).alias("sig"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles(F.col("text"), _SHINGLE_K)).alias("shingles"),
+        minhash_signature(F.col("text"), num_hashes).alias("sig"),
     )
     # Three plan branches read this projection (banding + both sides of
     # the verification join); without a persist each branch re-tokenizes
     # and re-hashes the whole corpus. MEMORY_AND_DISK: at 100 TB the
     # shingle+signature projection spills rather than OOMs — the same
     # role a materialized signature table plays in a production pipeline.
-    # Lifecycle: a caller that passes ``persist_into`` OWNS the handle —
-    # the persisted projection is appended there and the caller unpersists
-    # when done (e.g. after its action), so holding several results live
-    # at once is safe. Without it (fire-and-forget registry use), the
-    # default is latest-call-wins: a long-lived session calling this
+    # Lifecycle is latest-call-wins: a long-lived session calling this
     # repeatedly must not accumulate cached projections, so each call
     # releases the previous one (at most one live handle per process; an
     # older still-running plan just falls back to deterministic recompute).
     from pyspark import StorageLevel
 
+    global _MINHASH_PERSIST_HANDLE
     docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    if persist_into is not None:
-        persist_into.append(docs)
-    else:
-        global _MINHASH_PERSIST_HANDLE
-        with _MINHASH_PERSIST_LOCK:
-            prev, _MINHASH_PERSIST_HANDLE = _MINHASH_PERSIST_HANDLE, docs
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:  # noqa: BLE001 — session may already be stopped
-                pass
+    with _MINHASH_PERSIST_LOCK:
+        prev, _MINHASH_PERSIST_HANDLE = _MINHASH_PERSIST_HANDLE, docs
+    if prev is not None:
+        try:
+            prev.unpersist()
+        except Exception:  # noqa: BLE001 — session may already be stopped
+            pass
     banded = docs.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -354,17 +331,17 @@ def minhash_lsh_pairs(
                 ),
             )
         ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bh")
+    ).select("doc_id", "bb.band", "bb.bh")
     # Reduce width scales with corpus size (r12 4M-doc GC wall): the
     # bucket groupBy's key cardinality ≈ n_docs × bands.
     banded = widen_expansion(banded, "band", "bh", n_source_rows=n_src)
     cand = _pairs_from_postings(
         banded.groupBy("band", "bh")
-        .agg(F.collect_list(id_col).alias("ids"))
+        .agg(F.collect_list("doc_id").alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    da = docs.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    db = docs.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    da = docs.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    db = docs.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.greatest(
         F.size(F.array_union("sh_a", "sh_b")), F.lit(1)
     )
@@ -372,16 +349,13 @@ def minhash_lsh_pairs(
         cand.join(da, "id_a")
         .join(db, "id_b")
         .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
-def simhash64(
-    content: Column, k: int = 1, bits: int = 60, hash_mode: str = "xxhash64"
-) -> Column:
-    """SimHash (``bits`` wide, ≤ 63) from token (or k-shingle) unit-hash
-    values: per bit, sum of ±1 votes across unit hashes; bit set when the
-    vote is positive.
+def simhash64(content: Column, hash_mode: str = "xxhash64") -> Column:
+    """60-bit SimHash from token unit-hash values: per bit, sum of ±1
+    votes across unit hashes; bit set when the vote is positive.
 
     ONE aggregate pass over the unit-hash array (the previous shape — one
     ``F.aggregate`` per bit — re-evaluated the hash array 60× because HOF
@@ -396,13 +370,13 @@ def simhash64(
 
     ``content`` may be an arbitrary expression — the fold reads the
     unit-hash array exactly ONCE, so it is lambda-scope-CSE-safe."""
-    hashes = simhash_unit_hashes(content, k=k, hash_mode=hash_mode)
-    # One parsed literal array (not `bits`×2 py4j Column calls) — same
+    hashes = simhash_unit_hashes(content, hash_mode=hash_mode)
+    # One parsed literal array (not 60×2 py4j Column calls) — same
     # values, same plan, ~0.2 s less Python time per query build.
-    masks = F.expr("array(" + ",".join(f"{1 << i}L" for i in range(bits)) + ")")
+    masks = F.expr("array(" + ",".join(f"{1 << i}L" for i in range(60)) + ")")
     votes = F.aggregate(
         hashes,
-        F.array_repeat(F.lit(0), bits),
+        F.array_repeat(F.lit(0), 60),
         lambda acc, h: F.zip_with(
             acc, masks, lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)
         ),
@@ -416,16 +390,12 @@ def simhash64(
     )
 
 
-def simhash_unit_hashes(
-    content: Column, k: int = 1, hash_mode: str = "xxhash64"
-) -> Column:
-    """The distinct unit-hash array SimHash votes over (tokens for k=1,
-    k-shingles otherwise) — split out so callers can HOIST it to a named
-    column before a multi-reference fold (the ``gram_hashes`` /
-    ``winnow_from_hashes`` hoisting doctrine)."""
-    units = F.array_distinct(word_shingles(content, k)) if k > 1 else F.array_distinct(
-        F.split(F.trim(content), r"\s+")
-    )
+def simhash_unit_hashes(content: Column, hash_mode: str = "xxhash64") -> Column:
+    """The distinct-token unit-hash array SimHash votes over — split out
+    so callers can HOIST it to a named column before a multi-reference
+    fold (the ``gram_hashes`` / ``winnow_from_hashes`` hoisting
+    doctrine)."""
+    units = F.array_distinct(F.split(F.trim(content), r"\s+"))
     if hash_mode == "xxhash64":
         unit_hash = F.xxhash64
     elif hash_mode == "md5":
@@ -436,23 +406,15 @@ def simhash_unit_hashes(
     return F.transform(units, lambda s: unit_hash(s))
 
 
-def simhash_band_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    band_bits: int = 15,
-    max_hamming: int | None = None,
-    hash_mode: str = "xxhash64",
-    n_rows_est: int | None = None,
-) -> DataFrame:
+def simhash_band_pairs(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """SimHash near-dup blocking: docs sharing any of the 4 15-bit bands of
     their simhash (Hamming-distance blocking: distance ≤ 3 guarantees ≥1
-    equal band). Output: (id_a, id_b, hamming), optionally filtered to
-    ``hamming ≤ max_hamming`` (the guarantee holds for max_hamming ≤ 3 at
-    the default 4×15-bit banding). ``hash_mode`` — see ``simhash64``."""
+    equal band). Output: (id_a, id_b, hamming) with ``hamming ≤ 3``, so
+    the banding finds every such pair. ``hash_mode`` — see
+    ``simhash64``."""
     from datamodel_clinicaldata_spark.operators.graph import truncate_lineage
 
-    n_src = source_rows_for_width(df, n_rows_est)
+    n_src = source_rows_for_width(df)
     # r14: the (id, sh) frame is LAZILY PINNED. The 4 band structs + both
     # hamming sides reference `sh`, and the optimizer inlines the fold
     # into them — measured: the whole hash+fold subtree ×4 in the
@@ -463,28 +425,28 @@ def simhash_band_pairs(
     # reliable-checkpoint doctrine applies via truncate_lineage.
     sh = truncate_lineage(
         ensure_min_parallelism(df).select(
-            F.col(id_col),
-            simhash64(F.col(content_col), hash_mode=hash_mode).alias("sh"),
+            F.col("doc_id"),
+            simhash64(F.col("text"), hash_mode=hash_mode).alias("sh"),
         ),
         eager=False,
     )
     banded = sh.select(
-        id_col,
+        "doc_id",
         "sh",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftright(F.col("sh"), b * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
+                        F.shiftright(F.col("sh"), b * 15)
+                        .bitwiseAND(F.lit((1 << 15) - 1))
                         .alias("bv"),
                     )
                     for b in range(4)
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, "sh", "bb.band", "bb.bv")
+    ).select("doc_id", "sh", "bb.band", "bb.bv")
     # Similar-document clusters make simhash band buckets HEAVY (hundreds
     # of ids), so candidates pair off via the JVM hash self-join (faster
     # than in-array emission for big buckets — see ngram_jaccard_pairs);
@@ -497,22 +459,21 @@ def simhash_band_pairs(
     cond = (
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bv") == F.col("b.bv"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        & (F.col("a.doc_id") < F.col("b.doc_id"))
+        & (hamming <= 3)
     )
-    if max_hamming is not None:
-        cond = cond & (hamming <= max_hamming)
     return (
         a.join(b, cond)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             hamming.alias("hamming"),
         )
         .distinct()
     )
 
 
-def dedup_keep_first(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+def dedup_keep_first(df: DataFrame) -> DataFrame:
     """Row-preserving exact dedup: keep the minimum-id row per distinct
     content (row_number over the content-hash partition). ONE shuffle and
     no join — strictly better at any scale than aggregating keeper ids and
@@ -521,7 +482,7 @@ def dedup_keep_first(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     is the shuffle key; payload columns ride along untouched."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(F.md5(F.col(content_col))).orderBy(id_col)
+    w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -529,18 +490,16 @@ def dedup_keep_first(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def substring_span_stats(
-    df: DataFrame, text_col: str, id_col: str, k: int = 5
-) -> DataFrame:
-    """Substring-level duplication stats: every length-``k`` token window
+def substring_span_stats(df: DataFrame) -> DataFrame:
+    """Substring-level duplication stats: every length-5 token window
     ("span") of every document, counted corpus-wide; per document, how
     many of its span positions are duplicated anywhere in the corpus.
 
     This is the scalable reduction of exact substring deduplication
     (Lee et al. 2022, "Deduplicating Training Data Makes Language Models
     Better"): the paper's suffix-array pass finds duplicated substrings of
-    ≥ k tokens; restricting matches to token-window alignment turns it
-    into hash-groupBy over rolling k-gram windows — the form that
+    ≥ k tokens; restricting matches to token-window alignment (k = 5)
+    turns it into hash-groupBy over rolling 5-gram windows — the form that
     distributes. Shuffle discipline: spans are reduced to 64-bit
     ``xxhash64`` keys BEFORE the shuffle, so the exchange carries
     (doc_id, int64) instead of k-token strings (collisions: ~m²·2⁻⁶⁵ for
@@ -549,23 +508,23 @@ def substring_span_stats(
     count over the hash partition) → second shuffle on doc_id for the
     per-doc rollup. No joins, no driver-side state.
 
-    Documents shorter than ``k`` tokens have no spans and drop out (the
+    Documents shorter than 5 tokens have no spans and drop out (the
     oracle's ``unnest`` of an empty list does the same).
     """
     from pyspark.sql import Window
 
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     d = (
-        df.select(F.col(id_col), toks.alias("__toks"))
+        df.select(F.col("doc_id"), toks.alias("__toks"))
         .withColumn("__n", F.size("__toks"))
-        .filter(F.col("__n") >= k)
+        .filter(F.col("__n") >= 5)
     )
     spans = d.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.col("__n") - k),
-                lambda i: F.xxhash64(F.array_join(F.slice("__toks", i + 1, k), " ")),
+                F.sequence(F.lit(0), F.col("__n") - 5),
+                lambda i: F.xxhash64(F.array_join(F.slice("__toks", i + 1, 5), " ")),
             )
         ).alias("__h"),
     )
@@ -575,31 +534,24 @@ def substring_span_stats(
     from datamodel_clinicaldata_spark.functions.vectors import round_fixed
 
     return (
-        counted.groupBy(id_col)
+        counted.groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_spans"),
             F.sum((F.col("__cnt") > 1).cast("long")).alias("n_dup_spans"),
             F.max("__cnt").cast("long").alias("max_span_freq"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_spans",
             "n_dup_spans",
             "max_span_freq",
-            round_fixed(F.col("n_dup_spans") / F.col("n_spans"), 6).alias("dup_frac"),
+            round_fixed(F.col("n_dup_spans") / F.col("n_spans")).alias("dup_frac"),
         )
     )
 
 
-def prefix_filtered_jaccard_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.5,
-    n_rows_est: int | None = None,
-) -> DataFrame:
-    """Exact Jaccard ≥ τ pairs via PREFIX FILTERING (Bayardo et al.
+def prefix_filtered_jaccard_pairs(df: DataFrame, n_rows_est: int | None = None) -> DataFrame:
+    """Exact Jaccard ≥ τ = 0.5 pairs via PREFIX FILTERING (Bayardo et al.
     WWW'07 "Scaling Up All Pairs Similarity Search"; Chaudhuri et al.
     ICDE'06): order every document's shingles by ascending global
     document frequency (rarest first, ties on the shingle string) and
@@ -625,49 +577,49 @@ def prefix_filtered_jaccard_pairs(
     # strings to 8 bytes (collisions ~2⁻⁶⁴, the substring-span trade).
     sh = (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array_distinct(
                 F.transform(
-                    word_shingles(F.col(content_col), k), lambda x: F.xxhash64(x)
+                    word_shingles(F.col("text"), _SHINGLE_K), lambda x: F.xxhash64(x)
                 )
             ).alias("__sh"),
         )
         .withColumn("__n", F.size("__sh"))
         .filter(F.col("__n") > 0)
     )
-    posts = sh.select(id_col, "__n", F.explode("__sh").alias("shingle"))
+    posts = sh.select("doc_id", "__n", F.explode("__sh").alias("shingle"))
     # df-count groupBy key cardinality ≈ distinct shingles across the
     # corpus (~10⁸ at 4M docs) — widen its reduce side with corpus size;
     # the posts⋈dfreq equi-join on shingle reuses the same clustering.
     posts = widen_expansion(posts, "shingle", n_source_rows=n_src)
     dfreq = posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("__df").asc(), F.col("shingle").asc()
     )
-    prefix_len = F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
+    prefix_len = F.col("__n") - F.ceil(F.lit(0.5) * F.col("__n")) + 1
     pre = (
         posts.join(dfreq, "shingle")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= prefix_len)
-        .select(id_col, "shingle")
+        .select("doc_id", "shingle")
     )
     a, b = pre.alias("a"), pre.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .dropDuplicates(["id_a", "id_b"])
     )
     xa = sh.select(
-        F.col(id_col).alias("id_a"), F.col("__sh").alias("__sha"), F.col("__n").alias("__na")
+        F.col("doc_id").alias("id_a"), F.col("__sh").alias("__sha"), F.col("__n").alias("__na")
     )
     xb = sh.select(
-        F.col(id_col).alias("id_b"), F.col("__sh").alias("__shb"), F.col("__n").alias("__nb")
+        F.col("doc_id").alias("id_b"), F.col("__sh").alias("__shb"), F.col("__n").alias("__nb")
     )
     inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
     jac = inter / (F.col("__na") + F.col("__nb") - inter)
@@ -675,31 +627,24 @@ def prefix_filtered_jaccard_pairs(
         cand.join(xa, "id_a")
         .join(xb, "id_b")
         .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
 def winnowing_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int = 16,
-    w: int = 8,
-    max_postings: int = 5000,
-    min_shared: int = 3,
-    n_rows_est: int | None = None,
+    df: DataFrame, k: int = 16, w: int = 8, n_rows_est: int | None = None
 ) -> DataFrame:
     """Near-dup candidate pairs by SHARED WINNOWING FINGERPRINTS (the
     MOSS plagiarism-detection shape — Schleimer/Wilkerson/Aiken,
-    SIGMOD'03): documents sharing ≥ ``min_shared`` window-minimum k-gram
+    SIGMOD'03): documents sharing ≥ 3 window-minimum k-gram
     hashes almost surely share ≥ k+w−1 characters of verbatim text per
     shared fingerprint. Capped-postings plan, same doctrine as the
-    shingle-index family: a fingerprint held by > ``max_postings`` docs
+    shingle-index family: a fingerprint held by > 5000 docs
     is a stop-gram (dropped, bounding the self-join's skew);
     fingerprints are distinct per document, so the pair count equals the
     shared-fingerprint count with no dedup pass. One explode + one
     capped postings self-join + one aggregate. Output:
-    (id_a, id_b, n_shared), id_a < id_b, n_shared ≥ ``min_shared``.
+    (id_a, id_b, n_shared), id_a < id_b, n_shared ≥ 3.
 
     Promoted from ``queries_text.dedup_winnowing_pairs`` (r13) so the
     reduce-width doctrine lives in the ENGINE, not the probe: at 4M docs
@@ -716,9 +661,9 @@ def winnowing_pairs(
     n_src = source_rows_for_width(df, n_rows_est)
     # compute-dense spread (measured 5.4 s -> 1.4 s at sf0.1: the ~10M
     # md5 postings build otherwise runs on the scan's single partition)
-    d = ensure_min_parallelism(df, id_col)
-    post = d.withColumn("__hs", gram_hashes(F.col(content_col), k=k)).select(
-        F.col(id_col).alias("doc_id"),
+    d = ensure_min_parallelism(df, "doc_id")
+    post = d.withColumn("__hs", gram_hashes(F.col("text"), k=k)).select(
+        F.col("doc_id").alias("doc_id"),
         F.explode(winnow_from_hashes(F.col("__hs"), w=w)).alias("fp"),
     )
     # Reduce width scales with corpus size BEFORE the lineage pin, so
@@ -737,7 +682,7 @@ def winnowing_pairs(
     ok = (
         post.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") <= max_postings)
+        .filter(F.col("__c") <= 5000)
         .select("fp")
     )
     p2 = post.join(ok, "fp")
@@ -748,5 +693,5 @@ def winnowing_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )

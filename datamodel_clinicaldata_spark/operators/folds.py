@@ -65,7 +65,6 @@ def segmented_fold(
     init,
     step,
     max_segment_points: int = 5_000_000,
-    acc_col: str = "acc",
 ) -> DataFrame:
     """EXACT per-key ordered fold for series past the single-array bound.
 
@@ -94,7 +93,7 @@ def segmented_fold(
     ``payload`` — struct Column whose leading field(s) define the time
     order (same contract as the monolithic ``array_sort(collect_list)``
     shape); ``init`` — initial accumulator Column; ``step(acc, p)`` —
-    the recurrence. Returns one row per key: (keys…, ``acc_col``).
+    the recurrence. Returns one row per key: (keys…, ``acc``).
 
     Cost note vs the monolithic fold: one extra shuffle (the rank
     window) plus one small (key, acc) join per round — the price of not
@@ -123,13 +122,13 @@ def segmented_fold(
     per_seg = truncate_lineage(per_seg, eager=False)
     n_segs = per_seg.agg(F.max("__seg")).collect()[0][0]
     if n_segs is None:
-        return df.select(*keys).limit(0).withColumn(acc_col, init)
+        return df.select(*keys).limit(0).withColumn("acc", init)
     acc_df = None
     for s in range(int(n_segs) + 1):
         seg_s = per_seg.filter(F.col("__seg") == s)
         if acc_df is None:
             folded = seg_s.select(
-                *keys, F.aggregate("__ps", init, step).alias(acc_col)
+                *keys, F.aggregate("__ps", init, step).alias("acc")
             )
         else:
             # Keys with an s-th segment continue their fold from the
@@ -137,7 +136,7 @@ def segmented_fold(
             # accumulator exists); keys already exhausted carry forward.
             cont = seg_s.join(acc_df, keys, "inner").select(
                 *keys,
-                F.aggregate("__ps", F.col(acc_col), step).alias(acc_col),
+                F.aggregate("__ps", F.col("acc"), step).alias("acc"),
             )
             done = acc_df.join(seg_s.select(*keys), keys, "left_anti")
             folded = cont.unionByName(done)

@@ -96,9 +96,10 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Undirected view of an edge list: (a,b) ∪ (b,a), self-loops dropped."""
-    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """Undirected view of a ``(src, dst)`` edge list: (a,b) ∪ (b,a),
+    self-loops dropped."""
+    fwd = edges.select("src", "dst")
     return (
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
@@ -152,12 +153,11 @@ def _local_union_find(sym: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
     local_threshold: int = 2_000_000,
 ) -> DataFrame:
-    """Min-label connected components over an undirected edge list.
+    """Min-label connected components over an undirected ``(src, dst)``
+    edge list.
 
     Returns ``(node, component_id)`` for every node incident to an edge,
     where ``component_id`` is the minimum node id in the component (the
@@ -185,7 +185,7 @@ def connected_components(
     # otherwise trigger the (expensive) upstream pair-generation with a
     # LIMIT short-circuit that caches only part of the edge set, and the
     # next consumer recomputes the rest — measured ~2× upstream cost.
-    sym = truncate_lineage(symmetrize(edges, src, dst))
+    sym = truncate_lineage(symmetrize(edges))
 
     if local_threshold and sym.limit(local_threshold + 1).count() <= local_threshold:
         return _local_union_find(sym)
@@ -222,7 +222,7 @@ def connected_components(
 
     # Diameter exceeded the propagation budget — hand the graph to the
     # shape-insensitive contraction instead of failing the run.
-    return connected_components_star(edges, src, dst)
+    return connected_components_star(edges)
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -318,13 +318,12 @@ def _is_star_set(directed: DataFrame) -> bool:
     return bad.isEmpty()
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 60,
-    stats: dict | None = None,
-) -> DataFrame:
+# Round budget of ``connected_components_star``: enough for any graph
+# with diameter < 2^sqrt(60).
+_STAR_MAX_ROUNDS = 60
+
+
+def connected_components_star(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14 §3) —
     converges in O(log² d) rounds on ANY graph shape, so it is the path
@@ -352,7 +351,7 @@ def connected_components_star(
     # Orient the deduped undirected set large→small: small-star's input
     # invariant, and large-star re-derives symmetric neighbourhoods.
     directed = truncate_lineage(
-        symmetrize(edges, src, dst).filter(F.col("src") > F.col("dst"))
+        symmetrize(edges).filter(F.col("src") > F.col("dst"))
     )
     fp = _edge_fingerprint(directed)
     if fp[0] == 0:  # empty-graph check rides the fingerprint — no extra job
@@ -370,7 +369,7 @@ def connected_components_star(
     # double reference recomputes whatever the cache doesn't cover —
     # per-round truncation is what keeps round cost flat.
     rounds_used = 0
-    for _ in range(max_rounds):
+    for _ in range(_STAR_MAX_ROUNDS):
         rounds_used += 1
         sym = directed.union(
             directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -393,9 +392,9 @@ def connected_components_star(
         fp = new_fp
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} "
+            f"connected_components_star did not converge in {_STAR_MAX_ROUNDS} "
             "rounds — theoretically impossible for any graph with diameter "
-            f"< 2^sqrt({max_rounds}); the edge set is likely mutating "
+            f"< 2^sqrt({_STAR_MAX_ROUNDS}); the edge set is likely mutating "
             "between actions (non-deterministic node ids?)"
         )
 
@@ -421,8 +420,6 @@ def connected_components_star(
 
 def pagerank_fixedpoint(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = 10,
     local_threshold: int = 2_000_000,
 ) -> DataFrame:
@@ -441,7 +438,7 @@ def pagerank_fixedpoint(
     Symmetric graphs have no dangling nodes, so mass-leak correction is
     unnecessary; ranks order the dup-family hubs.
     """
-    sym = truncate_lineage(symmetrize(edges, src, dst))
+    sym = truncate_lineage(symmetrize(edges))
     if local_threshold and sym.limit(local_threshold + 1).count() <= local_threshold:
         return _local_pagerank(sym, iters)
     # Distinct column names per derived frame: deg and the edge view both

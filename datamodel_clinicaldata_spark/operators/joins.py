@@ -26,9 +26,8 @@ def salted_join(
     left_key: str,
     right_key: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-busting equi-join: one hot key otherwise lands every matching
+    """Skew-busting inner equi-join: one hot key otherwise lands every matching
     row in a single reducer. The left (large, skewed) side gets a random
     salt in [0, salt); the right side is replicated ``salt`` times with
     every salt value; the join key becomes (key, salt) so a hot key's rows
@@ -55,7 +54,6 @@ def salted_join(
     out = lsalted.join(
         rrep,
         (lsalted[left_key] == rrep[right_key]) & (lsalted["__salt"] == rrep["__salt"]),
-        how,
     )
     return out.drop(lsalted["__salt"]).drop(rrep["__salt"])
 
@@ -76,12 +74,11 @@ def range_join(
     equi: Column,
     lower: Column,
     upper: Column,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-key range join: equality on ``equi`` plus ``lower``/``upper``
-    band predicates. Keeping the equality conjunct first lets Catalyst plan
-    a hash join with the band as a filter."""
-    return left.join(right, equi & lower & upper, how)
+    """Equi-key inner range join: equality on ``equi`` plus
+    ``lower``/``upper`` band predicates. Keeping the equality conjunct
+    first lets Catalyst plan a hash join with the band as a filter."""
+    return left.join(right, equi & lower & upper, "inner")
 
 
 def _ts_num(ts_type):
@@ -350,16 +347,10 @@ def binned_interval_join(
 
 
 def binned_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    bin_width_us: int = 86_400_000_000,
+    left: DataFrame, right: DataFrame, key: str, bin_width_us: int = 86_400_000_000
 ) -> DataFrame:
-    """Interval-OVERLAP join (``a.start < b.end AND b.start < a.end``) —
+    """Interval-OVERLAP join (``sa < eb AND sb < ea``) of the left
+    intervals ``[sa, ea)`` with the right intervals ``[sb, eb)`` —
     the Allen-algebra sibling of ``binned_interval_join``'s containment.
     Same binning idea, one extra subtlety: overlapping intervals share
     MANY bins, so a plain bin equi-join would emit a pair once per
@@ -388,21 +379,19 @@ def binned_overlap_join(
             )
         )
 
-    lb = explode_bins(left, left_start, left_end, "l")
-    rb = explode_bins(right, right_start, right_end, "r")
+    lb = explode_bins(left, "sa", "ea", "l")
+    rb = explode_bins(right, "sb", "eb", "r")
     joined = lb.join(
         rb,
         (lb[key] == rb[key]) & (lb["__bin_l"] == rb["__bin_r"]),
     )
-    overlap_start = F.greatest(F.col(left_start), F.col(right_start))
-    overlap_end = F.least(F.col(left_end), F.col(right_end))
+    overlap_start = F.greatest(F.col("sa"), F.col("sb"))
+    overlap_end = F.least(F.col("ea"), F.col("eb"))
     return (
         joined.filter(
-            (F.col(left_start) < F.col(right_end))
-            & (F.col(right_start) < F.col(left_end))
-            & (F.col("__bin_l") == F.expr(
-                f"CAST(greatest({left_start}, {right_start}) AS BIGINT) div {w}"
-            ))
+            (F.col("sa") < F.col("eb"))
+            & (F.col("sb") < F.col("ea"))
+            & (F.col("__bin_l") == F.expr(f"CAST(greatest(sa, sb) AS BIGINT) div {w}"))
         )
         .drop("__bin_l", "__bin_r")
         .drop(rb[key])

@@ -35,19 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-    ]
-)
-
-
-def media_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
+def media_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from ``documents``: the text body
     as the binary payload plus a typed metadata struct. Stands in for a
     real (media_id, content, meta) table so every downstream operator runs
@@ -55,7 +43,7 @@ def media_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
     n = F.length("text")
     return docs.select(
         F.col("doc_id").alias("media_id"),
-        F.lit(kind).alias("kind"),
+        F.lit("image").alias("kind"),
         F.encode("text", "UTF-8").alias("content"),
         F.struct(
             (n % 640).cast("int").alias("width"),
@@ -107,11 +95,7 @@ def _parse_wav(b: bytes):
     return sample_rate, n_channels, bits, samples
 
 
-def decode_audio_wav(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def decode_audio_wav(media: DataFrame) -> DataFrame:
     """REAL uncompressed-audio decode: RIFF/WAV header parse + PCM frame
     decode (8/16/32-bit, any channel count), pure Python/numpy inside the
     Arrow-batched ``mapInPandas`` — no codec library needed for the
@@ -126,7 +110,7 @@ def decode_audio_wav(
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("sample_rate", T.LongType()),
             T.StructField("n_channels", T.LongType()),
             T.StructField("bits_per_sample", T.LongType()),
@@ -144,8 +128,8 @@ def decode_audio_wav(
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {f.name: [] for f in schema.fields}
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                rows[id_col].append(mid)
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
+                rows["media_id"].append(mid)
                 try:
                     rate, nch, bits, samples = _parse_wav(bytes(blob))
                     n_frames = len(samples) // max(nch, 1)
@@ -188,7 +172,7 @@ def decode_audio_wav(
                     rows["decode_error"].append(str(e))
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(decode, schema)
+    return media.select("media_id", "content").mapInPandas(decode, schema)
 
 
 def _parse_bmp(b: bytes):
@@ -239,11 +223,7 @@ def _parse_bmp(b: bytes):
     return width, height, channels, px
 
 
-def decode_image_bmp(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def decode_image_bmp(media: DataFrame) -> DataFrame:
     """REAL uncompressed-image decode: BMP header + BI_RGB pixel rows
     (8/24/32-bpp, padding and row order handled), pure numpy inside the
     Arrow-batched ``mapInPandas``. Output per media: (media_id, width,
@@ -251,28 +231,26 @@ def decode_image_bmp(
     channel sums as exact integers, px_md5 over the row-major RGB bytes
     so two engines can compare decoded content without floats. Dirty or
     compressed blobs produce a tagged NULL row, never a failed batch."""
-    return _image_stats_decode(media, _parse_bmp, id_col, content_col)
+    return _image_stats_decode(media, _parse_bmp)
 
 
-def _image_stats_decode(
-    media: DataFrame, parse_fn, id_col: str, content_col: str
-) -> DataFrame:
+def _image_stats_decode(media: DataFrame, parse_fn) -> DataFrame:
     """Shared Arrow-batched decode frame for the pure-Python image
     parsers (BMP, PNG): parse each blob to an HxWxC uint8 array, emit
     exact integer channel sums + an md5 over the row-major RGB bytes so
     two engines compare decoded content without floats. Dirty or
     unsupported blobs produce a tagged NULL row, never a failed batch."""
-    schema = _image_stats_schema(id_col)
+    schema = _image_stats_schema()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {f.name: [] for f in schema.fields}
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                rows[id_col].append(mid)
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
+                rows["media_id"].append(mid)
                 _append_image_stats(rows, parse_fn, bytes(blob))
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(decode, schema)
+    return media.select("media_id", "content").mapInPandas(decode, schema)
 
 
 def _append_image_stats(rows: dict, parse_fn, blob: bytes) -> None:
@@ -309,10 +287,10 @@ def _append_image_stats(rows: dict, parse_fn, blob: bytes) -> None:
         rows["decode_error"].append(str(e))
 
 
-def _image_stats_schema(id_col: str) -> "T.StructType":
+def _image_stats_schema() -> "T.StructType":
     return T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("width", T.LongType()),
             T.StructField("height", T.LongType()),
             T.StructField("channels", T.LongType()),
@@ -326,9 +304,7 @@ def _image_stats_schema(id_col: str) -> "T.StructType":
     )
 
 
-def synth_decode_png_stats(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_decode_png_stats(df: DataFrame) -> DataFrame:
     """FUSED synth→decode in ONE Arrow hop (r13, guide §4: you cannot
     remove the JVM↔Python boundary cost, but you control how many times
     bytes cross it). The two-hop form —
@@ -343,18 +319,18 @@ def synth_decode_png_stats(
     ~1.5 s → ~1.1 s for ``multimodal_decode_png``. The two-hop
     operators stay public — real pipelines that ingest EXISTING blobs
     need the decode hop alone."""
-    schema = _image_stats_schema("media_id")
+    schema = _image_stats_schema()
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {f.name: [] for f in schema.fields}
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 rows["media_id"].append(did)
                 _append_image_stats(rows, _parse_png, _png_blob_for_id(did))
             yield pd.DataFrame(rows)
 
-    return df.select(id_col).mapInPandas(fused, schema)
+    return df.select("doc_id").mapInPandas(fused, schema)
 
 
 def _parse_png(b: bytes):
@@ -463,11 +439,7 @@ def _parse_png(b: bytes):
     return width, height, n_ch, px
 
 
-def decode_image_png(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def decode_image_png(media: DataFrame) -> DataFrame:
     """REAL compressed-image decode with ZERO non-stdlib dependencies:
     PNG chunk walk + zlib inflate + scanline unfilter (``_parse_png``),
     pure Python/numpy inside the same Arrow-batched ``mapInPandas``
@@ -475,24 +447,19 @@ def decode_image_png(
     integer channel sums + px_md5), so the two formats are
     interchangeable downstream. Narrows the remaining codec stub to
     JPEG/MP3 (entropy coders with no stdlib decoder)."""
-    return _image_stats_decode(media, _parse_png, id_col, content_col)
+    return _image_stats_decode(media, _parse_png)
 
 
-def byte_histogram(
-    media: DataFrame,
-    bins: int = 64,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def byte_histogram(media: DataFrame) -> DataFrame:
     """Per-media byte-value histogram: (media_id, bin, n) with
-    bin = byte_value // (256/bins). The deterministic stand-in for
+    bin = byte_value // (256/64), 64 bins. The deterministic stand-in for
     image feature extraction; numpy-vectorized inside each Arrow batch."""
     import numpy as np
 
-    width = 256 // bins
+    width = 256 // 64
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("bin", T.LongType()),
             T.StructField("n", T.LongType()),
         ]
@@ -501,27 +468,20 @@ def byte_histogram(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_id, out_bin, out_n = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 arr = np.frombuffer(blob, dtype=np.uint8) // width
                 vals, counts = np.unique(arr, return_counts=True)
                 out_id.extend([mid] * len(vals))
                 out_bin.extend(int(v) for v in vals)
                 out_n.extend(int(c) for c in counts)
-            yield pd.DataFrame({id_col: out_id, "bin": out_bin, "n": out_n})
+            yield pd.DataFrame({"media_id": out_id, "bin": out_bin, "n": out_n})
 
-    return media.select(id_col, content_col).mapInPandas(extract, schema)
+    return media.select("media_id", "content").mapInPandas(extract, schema)
 
 
-def frame_sample(
-    media: DataFrame,
-    frame_bytes: int = 64,
-    stride: int = 128,
-    max_frames: int = 8,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Video-style frame sampling: every ``stride`` bytes take a
-    ``frame_bytes`` slice ("frame"), up to ``max_frames`` per media;
+def frame_sample(media: DataFrame) -> DataFrame:
+    """Video-style frame sampling: every 128 bytes take a 64-byte slice
+    ("frame"), up to 8 per media;
     output (media_id, frame_idx, frame_md5, frame_len). Pure byte
     plumbing — a real pipeline would decode each slice; the sampling
     cardinality, batching and hashing are the part Spark owns either way."""
@@ -529,7 +489,7 @@ def frame_sample(
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("frame_idx", T.LongType()),
             T.StructField("frame_md5", T.StringType()),
             T.StructField("frame_len", T.LongType()),
@@ -538,30 +498,26 @@ def frame_sample(
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {id_col: [], "frame_idx": [], "frame_md5": [], "frame_len": []}
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
+            rows = {"media_id": [], "frame_idx": [], "frame_md5": [], "frame_len": []}
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(blob)
-                for i in range(max_frames):
-                    start = i * stride
+                for i in range(8):
+                    start = i * 128
                     if start >= len(b):
                         break
-                    frame = b[start : start + frame_bytes]
-                    rows[id_col].append(mid)
+                    frame = b[start : start + 64]
+                    rows["media_id"].append(mid)
                     rows["frame_idx"].append(i)
                     rows["frame_md5"].append(hashlib.md5(frame).hexdigest())
                     rows["frame_len"].append(len(frame))
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(sample, schema)
+    return media.select("media_id", "content").mapInPandas(sample, schema)
 
 
-def audio_rms_windows(
-    media: DataFrame,
-    window: int = 256,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Audio-style windowed RMS energy over the byte "waveform":
+def audio_rms_windows(media: DataFrame) -> DataFrame:
+    """Audio-style windowed RMS energy over the byte "waveform", in
+    256-sample windows:
     (media_id, window_idx, n_samples, sum_sq). The energy is delivered as
     the exact integer sum of squares (cross-engine exact); RMS =
     sqrt(sum_sq / n_samples) is a trivial derived column left to callers
@@ -570,7 +526,7 @@ def audio_rms_windows(
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("window_idx", T.LongType()),
             T.StructField("n_samples", T.LongType()),
             T.StructField("sum_sq", T.LongType()),
@@ -579,31 +535,24 @@ def audio_rms_windows(
 
     def rms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {id_col: [], "window_idx": [], "n_samples": [], "sum_sq": []}
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
+            rows = {"media_id": [], "window_idx": [], "n_samples": [], "sum_sq": []}
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 arr = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
-                for w in range(0, len(arr), window):
-                    chunk = arr[w : w + window]
-                    rows[id_col].append(mid)
-                    rows["window_idx"].append(w // window)
+                for w in range(0, len(arr), 256):
+                    chunk = arr[w : w + 256]
+                    rows["media_id"].append(mid)
+                    rows["window_idx"].append(w // 256)
                     rows["n_samples"].append(len(chunk))
                     rows["sum_sq"].append(int((chunk * chunk).sum()))
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(rms, schema)
+    return media.select("media_id", "content").mapInPandas(rms, schema)
 
 
-def resize_nearest(
-    media: DataFrame,
-    src_width: int = 32,
-    out_w: int = 8,
-    out_h: int = 8,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def resize_nearest(media: DataFrame) -> DataFrame:
     """Nearest-neighbour resize over the byte-grid view of each blob: the
-    payload is treated as a row-major ``src_width``-wide grid (height =
-    ceil(len/src_width)) and sampled down to ``out_w``×``out_h``. Real
+    payload is treated as a row-major 32-wide grid (height = ceil(len/32))
+    and sampled down to 8×8. Real
     image resize swaps the per-pixel gather for a codec + interpolation
     kernel; the Spark-side contract — Arrow batching, binary in/out,
     per-media metadata — is identical and is what this operator pins.
@@ -614,7 +563,7 @@ def resize_nearest(
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("out_w", T.LongType()),
             T.StructField("out_h", T.LongType()),
             T.StructField("resized_md5", T.StringType()),
@@ -625,40 +574,32 @@ def resize_nearest(
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {
-                id_col: [],
+                "media_id": [],
                 "out_w": [],
                 "out_h": [],
                 "resized_md5": [],
                 "resized_len": [],
             }
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
+            for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(blob)
                 n = len(b)
-                h = -(-n // src_width)
+                h = -(-n // 32)
                 out = bytes(
-                    b[
-                        min(
-                            (r * h) // out_h * src_width
-                            + (c * src_width) // out_w,
-                            n - 1,
-                        )
-                    ]
-                    for r in range(out_h)
-                    for c in range(out_w)
+                    b[min((r * h) // 8 * 32 + (c * 32) // 8, n - 1)]
+                    for r in range(8)
+                    for c in range(8)
                 )
-                rows[id_col].append(mid)
-                rows["out_w"].append(out_w)
-                rows["out_h"].append(out_h)
+                rows["media_id"].append(mid)
+                rows["out_w"].append(8)
+                rows["out_h"].append(8)
                 rows["resized_md5"].append(hashlib.md5(out).hexdigest())
                 rows["resized_len"].append(len(out))
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(resize, schema)
+    return media.select("media_id", "content").mapInPandas(resize, schema)
 
 
-def synth_bmp_from_ids(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_bmp_from_ids(df: DataFrame) -> DataFrame:
     """Deterministic BMP test-pattern synthesizer (the fake-codec
     charter): one 24-bpp bottom-up BI_RGB blob per input id, whose
     pixel values are a CLOSED-FORM function of (id, x, y) —
@@ -683,13 +624,13 @@ def synth_bmp_from_ids(
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, blobs = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 ids.append(did)
                 blobs.append(_bmp_blob_for_id(did))
             yield pd.DataFrame({"media_id": ids, "content": blobs})
 
-    return df.select(id_col).mapInPandas(synth, schema)
+    return df.select("doc_id").mapInPandas(synth, schema)
 
 
 def _bmp_blob_for_id(did: int) -> bytes:
@@ -728,32 +669,28 @@ def _bmp_blob_for_id(did: int) -> bytes:
     )
 
 
-def synth_decode_bmp_stats(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_decode_bmp_stats(df: DataFrame) -> DataFrame:
     """FUSED BMP synth→decode in ONE Arrow hop — the BMP twin of
     ``synth_decode_png_stats`` (same r13 rationale: the two-hop
     composition ships every blob across the JVM↔Python boundary twice;
     fused, it never crosses). Identical bytes: ``_bmp_blob_for_id`` +
     ``_parse_bmp`` back-to-back; output pinned equal to the two-hop form
     in tests/test_multimodal.py."""
-    schema = _image_stats_schema("media_id")
+    schema = _image_stats_schema()
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {f.name: [] for f in schema.fields}
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 rows["media_id"].append(did)
                 _append_image_stats(rows, _parse_bmp, _bmp_blob_for_id(did))
             yield pd.DataFrame(rows)
 
-    return df.select(id_col).mapInPandas(fused, schema)
+    return df.select("doc_id").mapInPandas(fused, schema)
 
 
-def synth_wav_from_ids(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_wav_from_ids(df: DataFrame) -> DataFrame:
     """Deterministic RIFF/WAV test-pattern synthesizer (fake-codec
     charter, audio twin of ``synth_bmp_from_ids``): one 16-bit mono
     8 kHz PCM blob per id whose samples are the closed form
@@ -778,7 +715,7 @@ def synth_wav_from_ids(
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, blobs = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 if did % 89 == 0:
                     blob = b"RIFF\x00\x00"  # truncated → tagged dirty
@@ -806,12 +743,10 @@ def synth_wav_from_ids(
                 blobs.append(blob)
             yield pd.DataFrame({"media_id": ids, "content": blobs})
 
-    return df.select(id_col).mapInPandas(synth, schema)
+    return df.select("doc_id").mapInPandas(synth, schema)
 
 
-def synth_png_from_ids(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_png_from_ids(df: DataFrame) -> DataFrame:
     """Deterministic PNG test-pattern synthesizer (fake-codec charter,
     completing the BMP/WAV pair): one 8-bit RGB PNG per id with the SAME
     closed-form pixel field as ``synth_bmp_from_ids`` —
@@ -835,13 +770,13 @@ def synth_png_from_ids(
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, blobs = [], []
-            for did in pdf[id_col]:
+            for did in pdf["doc_id"]:
                 did = int(did)
                 ids.append(did)
                 blobs.append(_png_blob_for_id(did))
             yield pd.DataFrame({"media_id": ids, "content": blobs})
 
-    return df.select(id_col).mapInPandas(synth, schema)
+    return df.select("doc_id").mapInPandas(synth, schema)
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:

@@ -27,50 +27,44 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def quota_chunk_bins(
-    df: DataFrame,
-    size_col: str,
-    order_col: str,
-    group_col: str,
-    budget: int,
-) -> DataFrame:
-    """bin_id = floor(exclusive-cumsum(size) / budget) per group, in
-    deterministic order_col order."""
+# Token-length bucket bounds, padded tokens per batch and shards per
+# bucket of ``length_bucket_batches``.
+_BUCKET_BOUNDS = (64, 128, 256, 512)
+_TOKEN_BUDGET = 4096
+_N_SHARDS = 8
+
+
+def quota_chunk_bins(df: DataFrame, budget: int) -> DataFrame:
+    """bin_id = floor(exclusive-cumsum(n_tokens) / budget) per ``source``,
+    in deterministic ``doc_id`` order."""
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(order_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = F.sum(size_col).over(w)
+    cum = F.sum("n_tokens").over(w)
     return df.select(
-        order_col,
-        group_col,
-        F.col(size_col).cast("long").alias(size_col),
-        F.floor((cum - F.col(size_col)) / F.lit(budget)).cast("long").alias("bin_id"),
+        "doc_id",
+        "source",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.floor((cum - F.col("n_tokens")) / F.lit(budget)).cast("long").alias("bin_id"),
     )
 
 
-def greedy_pack_bins(
-    df: DataFrame,
-    size_col: str,
-    order_col: str,
-    group_col: str,
-    budget: int,
-) -> DataFrame:
-    """Greedy reset packing per group: bins are filled in order_col order;
-    a document that would overflow the current bin opens the next one.
-    Every bin except possibly one-doc oversized bins holds ≤ budget tokens.
+def greedy_pack_bins(df: DataFrame, budget: int) -> DataFrame:
+    """Greedy reset packing per ``source``: bins are filled in ``doc_id``
+    order; a document whose ``n_tokens`` would overflow the current bin
+    opens the next one. Every bin except possibly one-doc oversized bins
+    holds ≤ budget tokens.
     """
     import pandas as pd
 
-    out_schema = (
-        f"{order_col} long, {group_col} string, {size_col} long, bin_id long"
-    )
+    out_schema = "doc_id long, source string, n_tokens long, bin_id long"
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         bins, filled, cur = [], 0, 0
-        for size in pdf[size_col]:
+        for size in pdf["n_tokens"]:
             if filled > 0 and filled + size > budget:
                 cur += 1
                 filled = 0
@@ -78,58 +72,54 @@ def greedy_pack_bins(
             bins.append(cur)
         return pd.DataFrame(
             {
-                order_col: pdf[order_col].astype("int64"),
-                group_col: pdf[group_col],
-                size_col: pdf[size_col].astype("int64"),
+                "doc_id": pdf["doc_id"].astype("int64"),
+                "source": pdf["source"],
+                "n_tokens": pdf["n_tokens"].astype("int64"),
                 "bin_id": pd.Series(bins, dtype="int64"),
             }
         )
 
-    slim = df.select(order_col, group_col, F.col(size_col).cast("long").alias(size_col))
-    return slim.groupBy(group_col).applyInPandas(pack, schema=out_schema)
+    slim = df.select("doc_id", "source", F.col("n_tokens").cast("long").alias("n_tokens"))
+    return slim.groupBy("source").applyInPandas(pack, schema=out_schema)
 
 
-def length_bucket_batches(
-    df: DataFrame,
-    size_col: str,
-    id_col: str,
-    boundaries: tuple[int, ...] = (64, 128, 256, 512),
-    token_budget: int = 4096,
-    n_shards: int = 8,
-) -> DataFrame:
+def length_bucket_batches(df: DataFrame) -> DataFrame:
     """Length-bucketed batching: group documents of similar token length
     into fixed-count batches so per-batch padding (to the longest member)
     wastes the least compute — the dynamic-batching strategy of every
-    sequence trainer. Bucket b spans [boundaries[b-1], boundaries[b]);
-    its batch size is ``token_budget / upper_bound`` (longer sequences →
-    smaller batches → roughly constant padded tokens per batch).
+    sequence trainer. Bucket b spans [_BUCKET_BOUNDS[b-1], _BUCKET_BOUNDS[b])
+    of ``n_tokens``; its batch size is ``_TOKEN_BUDGET / upper_bound``
+    (longer sequences → smaller batches → roughly constant padded tokens
+    per batch).
 
     Scale shape: batch formation needs a sequential row_number within a
-    bucket, so each bucket is first split into ``n_shards`` deterministic
-    shards (``id % n_shards``) and batches form within (bucket, shard) —
+    bucket, so each bucket is first split into ``_N_SHARDS`` deterministic
+    shards (``doc_id % _N_SHARDS``) and batches form within (bucket, shard) —
     parallelism = buckets × shards instead of a serial scan per bucket,
     the standard sharded-batching layout. One shuffle, carrying only
     (id, n_tokens); per-batch stats aggregate on the same partitioning.
     """
-    ups = list(boundaries) + [None]  # last bucket open-ended
-    bucket = F.lit(len(boundaries)).cast("long")
-    for b in range(len(boundaries) - 1, -1, -1):
-        bucket = F.when(F.col(size_col) < boundaries[b], F.lit(b).cast("long")).otherwise(bucket)
+    ups = list(_BUCKET_BOUNDS) + [None]  # last bucket open-ended
+    bucket = F.lit(len(_BUCKET_BOUNDS)).cast("long")
+    for b in range(len(_BUCKET_BOUNDS) - 1, -1, -1):
+        bucket = F.when(
+            F.col("n_tokens") < _BUCKET_BOUNDS[b], F.lit(b).cast("long")
+        ).otherwise(bucket)
     # batch size per bucket: budget over the bucket's padding target (its
     # upper bound; the open tail bucket uses 2x the last boundary)
-    bsize = F.lit(max(1, token_budget // (boundaries[-1] * 2))).cast("long")
-    for b in range(len(boundaries) - 1, -1, -1):
+    bsize = F.lit(max(1, _TOKEN_BUDGET // (_BUCKET_BOUNDS[-1] * 2))).cast("long")
+    for b in range(len(_BUCKET_BOUNDS) - 1, -1, -1):
         bsize = F.when(
-            F.col("bucket_id") == b, F.lit(max(1, token_budget // ups[b])).cast("long")
+            F.col("bucket_id") == b, F.lit(max(1, _TOKEN_BUDGET // ups[b])).cast("long")
         ).otherwise(bsize)
 
     slim = df.select(
-        F.col(id_col), F.col(size_col).cast("long").alias(size_col)
+        F.col("doc_id"), F.col("n_tokens").cast("long").alias("n_tokens")
     ).withColumn("bucket_id", bucket).withColumn(
-        "shard", (F.col(id_col) % n_shards).cast("long")
+        "shard", (F.col("doc_id") % _N_SHARDS).cast("long")
     )
     w = Window.partitionBy("bucket_id", "shard").orderBy(
-        F.col(size_col).asc(), F.col(id_col).asc()
+        F.col("n_tokens").asc(), F.col("doc_id").asc()
     )
     assigned = (
         slim.withColumn("__rn", F.row_number().over(w))
@@ -142,7 +132,7 @@ def length_bucket_batches(
     )
     return assigned.groupBy("bucket_id", "shard", "batch_idx").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(size_col).cast("long").alias("sum_tokens"),
-        F.max(size_col).cast("long").alias("max_tokens"),
-        (F.max(size_col) * F.count(F.lit(1))).cast("long").alias("padded_tokens"),
+        F.sum("n_tokens").cast("long").alias("sum_tokens"),
+        F.max("n_tokens").cast("long").alias("max_tokens"),
+        (F.max("n_tokens") * F.count(F.lit(1))).cast("long").alias("padded_tokens"),
     )

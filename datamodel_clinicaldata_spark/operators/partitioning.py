@@ -43,7 +43,7 @@ def _parse_byte_conf(v: str) -> int:
     return int(s)
 
 
-def fits_auto_broadcast(df: DataFrame, margin: float = 1.0) -> bool:
+def fits_auto_broadcast(df: DataFrame) -> bool:
     """True when the planner's size estimate says ``df`` would be
     auto-broadcast under the session's autoBroadcastJoinThreshold.
 
@@ -55,9 +55,7 @@ def fits_auto_broadcast(df: DataFrame, margin: float = 1.0) -> bool:
     rows, and the restructured shape wins. Gating on the same estimate
     the planner itself uses keeps the two decisions consistent. False
     when broadcasting is disabled (threshold ≤ 0) or the estimate is
-    unavailable — the conservative direction for a 100 TB default.
-    ``margin`` scales the threshold (margin < 1 flips to the
-    big-data shape earlier than the planner would stop broadcasting)."""
+    unavailable — the conservative direction for a 100 TB default."""
     try:
         thr = _parse_byte_conf(
             df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -67,7 +65,7 @@ def fits_auto_broadcast(df: DataFrame, margin: float = 1.0) -> bool:
     if thr <= 0:
         return False
     est = estimated_size_bytes(df)
-    return est is not None and est <= thr * margin
+    return est is not None and est <= thr
 
 
 def ensure_min_parallelism(df: DataFrame, *keys: str) -> DataFrame:
@@ -104,12 +102,15 @@ def ensure_min_parallelism(df: DataFrame, *keys: str) -> DataFrame:
     return df
 
 
-def expansion_width(
-    n_source_rows: int,
-    default: int,
-    rows_per_partition: int = 25_000,
-    cap: int = 512,
-) -> int:
+# Source docs per reduce partition of an expansion aggregate, and the
+# most partitions one may take (see ``expansion_width``).
+_ROWS_PER_PARTITION = 25_000
+_MAX_WIDTH = 512
+# Below this total file size an input is "small" (``source_rows_for_width``).
+_SMALL_INPUT_BYTES = 32 << 20
+
+
+def expansion_width(n_source_rows: int, default: int) -> int:
     """Reduce-side shuffle width for EXPANSION aggregates — the postings
     builds (shingle/fingerprint/band inverted indexes) whose groupBy key
     cardinality is orders of magnitude above the source row count.
@@ -126,16 +127,10 @@ def expansion_width(
     at the session default so small inputs keep their exact current
     plans, capped at 512 so a huge estimate cannot explode task count on
     local[32]. Pure function — pinned in tests."""
-    return int(min(cap, max(default, n_source_rows // rows_per_partition)))
+    return int(min(_MAX_WIDTH, max(default, n_source_rows // _ROWS_PER_PARTITION)))
 
 
-def widen_expansion(
-    df: DataFrame,
-    *keys: str,
-    n_source_rows: int,
-    rows_per_partition: int = 25_000,
-    cap: int = 512,
-) -> DataFrame:
+def widen_expansion(df: DataFrame, *keys: str, n_source_rows: int) -> DataFrame:
     """Insert ``repartition(width, keys)`` immediately before an
     expansion groupBy/self-join on ``keys`` when the source row count
     demands more reduce width than the session default (see
@@ -158,21 +153,17 @@ def widen_expansion(
         default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001 — conf key always exists in practice
         default = spark.sparkContext.defaultParallelism
-    width = expansion_width(n_source_rows, default, rows_per_partition, cap)
+    width = expansion_width(n_source_rows, default)
     if width <= default:
         return df
     return df.repartition(width, *keys)
 
 
-def source_rows_for_width(
-    df: DataFrame,
-    n_rows_est: int | None = None,
-    small_input_bytes: int = 32 << 20,
-) -> int:
+def source_rows_for_width(df: DataFrame, n_rows_est: int | None = None) -> int:
     """Source row count to feed :func:`expansion_width`: the caller's
     explicit estimate when given; ``0`` ("small — keep the session
     default width") when the input is a file scan whose total size is
-    under ``small_input_bytes`` — a no-job check via ``inputFiles()``,
+    under 32 MiB — a no-job check via ``inputFiles()``,
     so the sf0.1 bench cells and their promoted floors see ZERO plan or
     job change; else one column-pruned ``count()`` (row counts at the
     millions-of-docs scale where the width matters cost milliseconds
@@ -202,33 +193,33 @@ def source_rows_for_width(
             except OSError:
                 total = None
                 break
-        if total is not None and total < small_input_bytes:
+        if total is not None and total < _SMALL_INPUT_BYTES:
             return 0
     return df.count()
 
 
-def zorder_key(
-    cols: list,
-    ranges: list[tuple[float, float]],
-    bits: int = 16,
-):
+# Bits per column of a Z-order key.
+_ZORDER_BITS = 16
+
+
+def zorder_key(cols: list, ranges: list[tuple[float, float]]):
     """Z-order (Morton) key over N numeric columns: each column is
-    min/max-normalized into ``bits`` levels and the level bits are
+    min/max-normalized into 2^16 levels and the level bits are
     INTERLEAVED, so records close in EVERY dimension get close keys —
     sorting files by this key gives parquet footers tight min/max boxes
     in all dimensions at once, where a lexicographic sort only prunes
     its leading column. ``ranges`` are the (min, max) per column —
     explicit, because at 100 TB you take them from table statistics, not
-    a scan; N·bits must stay ≤ 62.
+    a scan; N·16 must stay ≤ 62.
 
     Pure JVM-side bit arithmetic (shiftright/and/or per level — no UDF);
-    the ``bits``·N-term expression is built once at plan time."""
+    the 16·N-term expression is built once at plan time."""
     from pyspark.sql import functions as F
 
     d = len(cols)
-    if d * bits > 62:
-        raise ValueError(f"{d} cols × {bits} bits exceeds the 62-bit budget")
-    levels = (1 << bits) - 1
+    if d * _ZORDER_BITS > 62:
+        raise ValueError(f"{d} cols × {_ZORDER_BITS} bits exceeds the 62-bit budget")
+    levels = (1 << _ZORDER_BITS) - 1
     scaled = []
     for c, (lo, hi) in zip(cols, ranges):
         c = F.col(c) if isinstance(c, str) else c
@@ -242,7 +233,7 @@ def zorder_key(
         )
         scaled.append(q)
     z = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(_ZORDER_BITS):
         for i, q in enumerate(scaled):
             z = z.bitwiseOR(
                 F.shiftleft(F.shiftright(q, b).bitwiseAND(F.lit(1)), b * d + i)

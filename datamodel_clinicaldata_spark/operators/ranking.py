@@ -73,13 +73,8 @@ def _should_exact_count(df: DataFrame, count_small: int) -> bool:
     return est is None or est <= count_small * _COUNT_GATE_BYTES_PER_ROW
 
 
-def topk_ranked(
-    df: DataFrame,
-    order_cols: Sequence[Column],
-    k: int,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Global top-k with a 1-based rank column, never a global sort.
+def topk_ranked(df: DataFrame, order_cols: Sequence[Column], k: int) -> DataFrame:
+    """Global top-k with a 1-based ``rank`` column, never a global sort.
 
     ``orderBy(*order_cols).limit(k)`` executes as TakeOrdered (each task
     keeps a k-row heap; the driver merges ≤ k·n_tasks candidates), so no
@@ -88,7 +83,7 @@ def topk_ranked(
     total order (tie-break on an id column)."""
     top = df.orderBy(*order_cols).limit(k)
     w = Window.orderBy(*order_cols)
-    return top.withColumn(rank_col, F.row_number().over(w).cast("long"))
+    return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
 def ordered_prefix(

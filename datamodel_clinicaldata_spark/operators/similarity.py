@@ -14,6 +14,9 @@
   seed points refined once — deterministic), assign corpus to nearest
   centroid (one narrow shuffle), probe the ``nprobe`` nearest centroids
   per query. The 100 TB path: scoring touches only probed partitions.
+
+Corpus frames carry ``vec_id`` and ``embedding``; query frames carry
+``query_id`` and ``embedding``.
 """
 
 from __future__ import annotations
@@ -30,14 +33,23 @@ from datamodel_clinicaldata_spark.functions.vectors import (
 )
 from datamodel_clinicaldata_spark.operators.partitioning import ensure_min_parallelism
 
+# LSH and projection hyperplanes are deterministic SplitMix64 samples
+# (``_lcg_planes``) over the 64-dim embeddings; the DuckDB oracles in
+# ``queries_similarity`` rebuild the identical planes from these values.
+PLANE_DIM = 64
+LSH_PLANE_SEED = 13
+PROJ_PLANE_SEED = 29
+# Projected dimension of ``projection_topk_rerank``'s coarse pass.
+PROJ_DIM = 32
+# Neighbours returned per query by the ANN operators, and IVF cell count.
+_ANN_K = 10
+_IVF_CENTROIDS = 16
+# Upper clamp of ``ivf_pair_candidates``' dynamic cell count.
+_MAX_PAIR_CENTROIDS = 4096
+
 
 def cosine_topk_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 10,
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k per query. Ties break on ascending corpus id so
     results are deterministic across engines.
@@ -56,22 +68,21 @@ def cosine_topk_bruteforce(
     # naive per-pair cosine() costs 3 folds + 2 casts per pair. The pair
     # expression dot/sqrt(n2a·n2b) is the identical IEEE sequence as
     # cosine(corpus_vec, query_vec), so scores are bit-unchanged.
-    q = queries.select(F.col(query_id_col), as_double(F.col(vec_col)).alias("__qvec"))
+    q = queries.select(F.col("query_id"), as_double(F.col("embedding")).alias("__qvec"))
     q = q.withColumn("__qn2", dot(F.col("__qvec"), F.col("__qvec")))
-    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
+    c = corpus.select(F.col("vec_id"), as_double(F.col("embedding")).alias("__cv"))
     c = c.withColumn("__cn2", dot(F.col("__cv"), F.col("__cv")))
     scored = c.crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         round_fixed(
             dot(F.col("__cv"), F.col("__qvec"))
             / F.sqrt(F.col("__cn2") * F.col("__qn2")),
-            6,
         ).alias("cos_sim"),
     )
-    order = [F.col("cos_sim").desc(), F.col(id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, F.spark_partition_id()).orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
+    order = [F.col("cos_sim").desc(), F.col("vec_id").asc()]
+    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(*order)
+    w_global = Window.partitionBy("query_id").orderBy(*order)
     return (
         scored.withColumn("__local_rank", F.row_number().over(w_local))
         .filter(F.col("__local_rank") <= k)
@@ -82,15 +93,7 @@ def cosine_topk_bruteforce(
 
 
 def neardup_candidate_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    planes: list[list[float]] | None = None,
-    n_tables: int = 4,
-    bits: int = 8,
-    dim: int = 64,
-    seed: int = 13,
-    ensure_parallelism: bool = True,
+    df: DataFrame, n_tables: int = 4, bits: int = 8, ensure_parallelism: bool = True
 ) -> DataFrame:
     """LSH candidate id-pairs only — the blocking stage of
     ``cosine_neardup_pairs``, exposed separately so callers (bench
@@ -100,10 +103,7 @@ def neardup_candidate_pairs(
     ``ensure_parallelism=False`` for DERIVED (post-shuffle) corpora —
     the helper's partition probe is scan-input-only (see
     ``partitioning.ensure_min_parallelism``)."""
-    if planes is None:
-        planes_all = _lcg_planes(n_tables * bits, dim, seed)
-    else:
-        planes_all = planes
+    planes_all = _lcg_planes(n_tables * bits, PLANE_DIM, LSH_PLANE_SEED)
     tables = [planes_all[t * bits : (t + 1) * bits] for t in range(n_tables)]
 
     if ensure_parallelism:
@@ -125,9 +125,9 @@ def neardup_candidate_pairs(
     # interpreted dots each re-casting dim floats — 80 re-casts per row
     # on the prod config). Same doubles, bit-identical buckets.
     buckets = (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("__dv"))
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("__dv"))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.explode(
                 F.array(
                     *[
@@ -142,7 +142,7 @@ def neardup_candidate_pairs(
                 )
             ).alias("tb"),
         )
-        .select(id_col, "tb.table", "tb.bucket")
+        .select("vec_id", "tb.table", "tb.bucket")
     )
 
     a = buckets.alias("a")
@@ -152,11 +152,11 @@ def neardup_candidate_pairs(
             b,
             (F.col("a.table") == F.col("b.table"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -164,14 +164,9 @@ def neardup_candidate_pairs(
 
 def cosine_neardup_pairs(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.9,
-    planes: list[list[float]] | None = None,
     n_tables: int = 4,
     bits: int = 8,
-    dim: int = 64,
-    seed: int = 13,
     ensure_parallelism: bool = True,
 ) -> DataFrame:
     """cosine ≥ threshold pairs via multi-table hyperplane LSH blocking.
@@ -184,13 +179,8 @@ def cosine_neardup_pairs(
     """
     cand = neardup_candidate_pairs(
         df,
-        vec_col=vec_col,
-        id_col=id_col,
-        planes=planes,
         n_tables=n_tables,
         bits=bits,
-        dim=dim,
-        seed=seed,
         ensure_parallelism=ensure_parallelism,
     )
 
@@ -206,24 +196,24 @@ def cosine_neardup_pairs(
     # ~4× SLOWER (14.9 s vs 3.3 s at sf0.1) — the giant flat expression
     # bloats the task binary (~1.4 MB broadcast) and falls out of
     # whole-stage codegen; the interpreted fold is the better shape here.
-    dv = as_double(F.col(vec_col))
+    dv = as_double(F.col("embedding"))
     side_in = ensure_min_parallelism(df) if ensure_parallelism else df
     side = side_in.select(
-        F.col(id_col),
+        F.col("vec_id"),
         dv.alias("__v"),
         dot(dv, dv).alias("__n2"),
     )
     sa = side.select(
-        F.col(id_col).alias("id_a"), F.col("__v").alias("__va"), F.col("__n2").alias("__n2a")
+        F.col("vec_id").alias("id_a"), F.col("__v").alias("__va"), F.col("__n2").alias("__n2a")
     )
     sb = side.select(
-        F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"), F.col("__n2").alias("__n2b")
+        F.col("vec_id").alias("id_b"), F.col("__v").alias("__vb"), F.col("__n2").alias("__n2b")
     )
     cos_sim = dot(F.col("__va"), F.col("__vb")) / F.sqrt(F.col("__n2a") * F.col("__n2b"))
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", round_fixed(cos_sim, 6).alias("cos_sim"))
+        .select("id_a", "id_b", round_fixed(cos_sim).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
@@ -290,10 +280,7 @@ def nearest_scored(v: "F.Column", n2: "F.Column", cent_n2: "F.Column") -> "F.Col
 
 
 def kmeans_refine(
-    corpus: DataFrame,
-    seeds: list[list[float]],
-    vec_col: str = "embedding",
-    iters: int = 2,
+    corpus: DataFrame, seeds: list[list[float]], iters: int = 2
 ) -> list[list[float]]:
     """Lloyd iterations over the corpus: assign every vector to its nearest
     seed (cosine), recompute centroids as per-cluster means, repeat.
@@ -311,7 +298,7 @@ def kmeans_refine(
         # Hoisted-norm assignment — see nearest_scored (bit-identical).
         cent_array = _centroid_array_expr_n2(cents)
         assigned = (
-            corpus.select(as_double(F.col(vec_col)).alias("__v"))
+            corpus.select(as_double(F.col("embedding")).alias("__v"))
             .withColumn("__n2", dot(F.col("__v"), F.col("__v")))
             .select(
                 nearest_scored(F.col("__v"), F.col("__n2"), cent_array)[0][
@@ -339,24 +326,19 @@ def kmeans_refine(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 10,
-    n_centroids: int = 16,
     nprobe: int = 4,
     refine_iters: int = 0,
     seed_by: str = "hash",
 ) -> DataFrame:
-    """IVF two-stage ANN. Centroids = a deterministic hash-stride corpus
-    sample (rows whose xxhash64(id) ≡ 0 mod n/n_centroids, lowest ids
-    kept) — k-means seeding without iterative training; good enough for
-    partition pruning, fully deterministic, and crucially sampled WITHOUT
-    a global window (a ``Window.orderBy`` over the whole corpus would pull
+    """IVF two-stage ANN top-10 per query over 16 cells. Centroids = a
+    deterministic hash-stride corpus sample (rows whose xxhash64(id) ≡ 0
+    mod n/16, lowest ids kept) — k-means seeding without iterative
+    training; good enough for partition pruning, fully deterministic,
+    and crucially sampled WITHOUT a global window (a ``Window.orderBy`` over the whole corpus would pull
     100 TB through one partition; the hash filter is a parallel scan and
     the ``orderBy().limit()`` on its tiny survivor set is a TakeOrdered).
 
-    ``seed_by='lowest'`` seeds from the ``n_centroids`` lowest ids instead
+    ``seed_by='lowest'`` seeds from the 16 lowest ids instead
     of the hash stride — same TakeOrdered scan shape, but expressible in
     plain SQL (xxhash64 has no cross-engine twin), so results can be
     replayed by an ANSI oracle. Seeding strategy only changes WHICH
@@ -367,25 +349,25 @@ def ivf_topk(
     can be written bucketed by ``centroid`` for reuse).
     Stage 2: per query, pick ``nprobe`` nearest centroids, then exact
     cosine only over those buckets — at scale this prunes
-    (1 - nprobe/n_centroids) of the scan.
+    (1 - nprobe/16) of the scan.
 
     ``refine_iters`` > 0 runs that many Lloyd iterations
     (``kmeans_refine``) on the seeds before assignment — tighter clusters
     → better recall at the same nprobe.
     """
-    sampled = corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec"))
+    sampled = corpus.select(F.col("vec_id"), F.col("embedding").alias("__cvec"))
     if seed_by == "hash":
         n = corpus.count()
-        step = max(n // n_centroids, 1)
+        step = max(n // _IVF_CENTROIDS, 1)
         sampled = sampled.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(step)) == 0
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(step)) == 0
         )
     elif seed_by != "lowest":
         raise ValueError(f"seed_by must be hash|lowest, got {seed_by!r}")
-    sampled = sampled.orderBy(id_col).limit(n_centroids)
+    sampled = sampled.orderBy("vec_id").limit(_IVF_CENTROIDS)
     seeds = [r["__cvec"] for r in sampled.collect()]  # ≤ n_centroids vecs
     if refine_iters > 0:
-        seeds = kmeans_refine(corpus, seeds, vec_col=vec_col, iters=refine_iters)
+        seeds = kmeans_refine(corpus, seeds, iters=refine_iters)
     # Hoisted-norm assignment (ivf_pair_candidates doctrine): the row's
     # double cast and self-dot happen ONCE per row, centroid self-norms
     # ride the literal — one cross-dot per (row, centroid) instead of 3
@@ -399,19 +381,19 @@ def ivf_topk(
         )
 
     assigned = corpus.select(
-        F.col(id_col),
-        as_double(F.col(vec_col)).alias("__v"),
+        F.col("vec_id"),
+        as_double(F.col("embedding")).alias("__v"),
     ).withColumn("__n2", dot(F.col("__v"), F.col("__v"))).select(
-        F.col(id_col),
+        F.col("vec_id"),
         "__v",
         "__n2",
         nearest(1)[0]["cid"].alias("__cid"),
     )
     q = queries.select(
-        F.col(query_id_col),
-        as_double(F.col(vec_col)).alias("__v"),
+        F.col("query_id"),
+        as_double(F.col("embedding")).alias("__v"),
     ).withColumn("__n2", dot(F.col("__v"), F.col("__v"))).select(
-        F.col(query_id_col),
+        F.col("query_id"),
         F.col("__v").alias("__qvec"),
         F.col("__n2").alias("__qn2"),
         F.explode(
@@ -421,54 +403,45 @@ def ivf_topk(
     # Pair scoring reuses both hoisted norms: dot/sqrt sequence matches
     # cosine(corpus_vec, query_vec) exactly (row side first under sqrt).
     scored = assigned.join(F.broadcast(q), "__cid").select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         round_fixed(
             dot(F.col("__v"), F.col("__qvec"))
             / F.sqrt(F.col("__n2") * F.col("__qn2")),
-            6,
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
     # No dedup needed: each corpus row has exactly one __cid and each query
     # probes nprobe distinct cids, so (query, corpus) pairs are unique.
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _ANN_K)
     )
 
 
-def ivf_quantized_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF-SQ: IVF partition pruning composed with int8 scalar
+def ivf_quantized_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-SQ top-10 per query, probing 4 of 16 cells: IVF partition
+    pruning composed with int8 scalar
     quantization — the standard memory-bound ANN configuration (FAISS
     ``IVF,SQ8``): centroid assignment and probe selection run on the
     float vectors (cosine, as in ``ivf_topk``), but the in-bucket scan
     ranks by the exact INTEGER dot of per-vector symmetric-quantized
     codes (``functions.vectors.quantize_int8``). At 100 TB the bucketed
     corpus stores 4× smaller codes, the scan prunes
-    (1 − nprobe/n_centroids) of the data, and the integer scores are
+    (1 − 4/16) of the data, and the integer scores are
     deterministic and float-noise-free across engines.
 
-    Seeding is ``seed_by='lowest'`` (the n_centroids lowest ids) so an
+    Seeding is ``seed_by='lowest'`` (the 16 lowest ids) so an
     ANSI oracle can replay assignment, probing, quantization, and
     scoring exactly."""
     from datamodel_clinicaldata_spark.functions.vectors import int_dot, quantize_int8
 
     sampled = (
-        corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec"))
-        .orderBy(id_col)
-        .limit(n_centroids)
+        corpus.select(F.col("vec_id"), F.col("embedding").alias("__cvec"))
+        .orderBy("vec_id")
+        .limit(_IVF_CENTROIDS)
     )
     seeds = [r["__cvec"] for r in sampled.collect()]  # ≤ n_centroids vecs
     # Hoisted-norm assignment — see ivf_topk / nearest_scored (scores
@@ -481,33 +454,33 @@ def ivf_quantized_topk(
         )
 
     assigned = corpus.select(
-        F.col(id_col),
-        as_double(F.col(vec_col)).alias("__v"),
+        F.col("vec_id"),
+        as_double(F.col("embedding")).alias("__v"),
     ).withColumn("__n2", dot(F.col("__v"), F.col("__v"))).select(
-        F.col(id_col),
+        F.col("vec_id"),
         nearest(1)[0]["cid"].alias("__cid"),
         quantize_int8(F.col("__v")).alias("__code"),
     )
     q = queries.select(
-        F.col(query_id_col),
-        as_double(F.col(vec_col)).alias("__v"),
+        F.col("query_id"),
+        as_double(F.col("embedding")).alias("__v"),
     ).withColumn("__n2", dot(F.col("__v"), F.col("__v"))).select(
-        F.col(query_id_col),
+        F.col("query_id"),
         quantize_int8(F.col("__v")).alias("__qcode"),
         F.explode(
-            F.transform(nearest(nprobe), lambda s: s["cid"])
+            F.transform(nearest(4), lambda s: s["cid"])
         ).alias("__cid"),
     )
     scored = assigned.join(F.broadcast(q), "__cid").select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         int_dot(F.col("__code"), F.col("__qcode")).alias("dot_q"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dot_q").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dot_q").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+        F.col("rank") <= _ANN_K
     )
 
 
@@ -539,105 +512,84 @@ def _lcg_planes(n: int, dim: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def quantized_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 10,
-) -> DataFrame:
-    """Int8-quantized top-k: both sides symmetric-quantized per vector
+def quantized_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Int8-quantized top-10: both sides symmetric-quantized per vector
     (``functions.vectors.quantize_int8``), ranked by the exact INTEGER dot
     product of the quantized codes — the memory-bound ANN configuration
     (4× smaller vectors than float32, SIMD-able integer math) with fully
     deterministic, float-noise-free scores.
 
     Same two-phase top-k as ``cosine_topk_bruteforce`` (local per-scan-
-    partition rank, then global rank over the ≤ k·n_partitions
+    partition rank, then global rank over the ≤ 10·n_partitions
     survivors) — no whole-corpus serial sort. Scale shape: corpus scan ×
     broadcast queries; quantization is a codegen projection, not a pass."""
     from datamodel_clinicaldata_spark.functions.vectors import int_dot, quantize_int8
 
     q = queries.select(
-        F.col(query_id_col), quantize_int8(F.col(vec_col)).alias("__qcode")
+        F.col("query_id"), quantize_int8(F.col("embedding")).alias("__qcode")
     )
     scored = (
-        corpus.withColumn("__code", quantize_int8(F.col(vec_col)))
+        corpus.withColumn("__code", quantize_int8(F.col("embedding")))
         .crossJoin(F.broadcast(q))
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             int_dot(F.col("__code"), F.col("__qcode")).alias("dot_q"),
         )
     )
-    order = [F.col("dot_q").desc(), F.col(id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, F.spark_partition_id()).orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
+    order = [F.col("dot_q").desc(), F.col("vec_id").asc()]
+    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(*order)
+    w_global = Window.partitionBy("query_id").orderBy(*order)
     return (
         scored.withColumn("__local_rank", F.row_number().over(w_local))
-        .filter(F.col("__local_rank") <= k)
+        .filter(F.col("__local_rank") <= _ANN_K)
         .withColumn("rank", F.row_number().over(w_global).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _ANN_K)
         .drop("__local_rank")
     )
 
 
-def _projection_expr(
-    vec_col: str, planes: list[list[float]], pre_cast: bool = False
-) -> "F.Column":
-    """Project ``vec_col`` onto ``planes`` as ONE parsed SQL expression
-    returning ``array<double>`` — same parsed-literal doctrine as
-    ``sign_bits_expr`` (construction is one string parse, not a py4j
+def _projection_expr(planes: list[list[float]]) -> "F.Column":
+    """Project the array<double> column ``__dv`` onto ``planes`` as ONE
+    parsed SQL expression returning ``array<double>`` — same
+    parsed-literal doctrine as ``sign_bits_expr`` (construction is one string parse, not a py4j
     crawl) and the same sequential zip_with/aggregate fold as
     ``functions.vectors.dot``, so every component is bit-identical to
     DuckDB's ``list_inner_product`` over the same double literals.
-    ``pre_cast=True``: ``vec_col`` is already array<double>, so the
-    cast-transform (otherwise inlined and re-evaluated once per plane)
-    is skipped — same doubles, 32× less per-row transform work at
-    proj_dim=32."""
-    dv = vec_col if pre_cast else f"transform({vec_col}, x -> cast(x as double))"
+    Casting once into ``__dv`` (rather than a cast-transform inlined and
+    re-evaluated once per plane) is 32× less per-row transform work at
+    32 planes."""
     comps = []
     for p in planes:
         arr = "array(" + ",".join(f"{x!r}D" for x in p) + ")"
         comps.append(
-            f"aggregate(zip_with({dv}, {arr}, (x, y) -> x * y), "
+            f"aggregate(zip_with(__dv, {arr}, (x, y) -> x * y), "
             f"cast(0.0 as double), (acc, v) -> acc + v)"
         )
     return F.expr("array(" + ", ".join(comps) + ")")
 
 
-def projection_topk_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 10,
-    m: int = 50,
-    proj_dim: int = 16,
-    dim: int = 64,
-    seed: int = 29,
-) -> DataFrame:
+def projection_topk_rerank(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Coarse-then-refine ANN cascade: random-projection (Johnson-
-    Lindenstrauss) cosine in ``proj_dim`` dims picks top-``m`` candidates
-    per query, then exact full-dimension cosine reranks to top-``k``.
+    Lindenstrauss) cosine in ``PROJ_DIM`` (32) dims picks top-200
+    candidates per query, then exact full-dimension cosine reranks to
+    top-10.
 
-    The 100 TB shape: the coarse pass scans only the ``proj_dim``-dim
-    projections (4× fewer flops and bytes at 64→16; at a 1536-dim
+    The 100 TB shape: the coarse pass scans only the 32-dim
+    projections (2× fewer flops and bytes at 64→32; at a 1536-dim
     production embedding the ratio is ~100×), computed in-scan from the
     raw vector — or, on a real deployment, persisted as their own narrow
     column so the scan prunes the wide one. The rerank touches full
-    vectors for only q·m rows, fetched via a BROADCAST semi-join of the
+    vectors for only q·200 rows, fetched via a BROADCAST semi-join of the
     candidate id set (no corpus shuffle anywhere; the only wide exchange
-    is the coarse two-phase top-m, which ships (query_id, id, double)).
+    is the coarse two-phase top-200, which ships (query_id, id, double)).
 
     Projection planes are the deterministic SplitMix64 sample
     (``_lcg_planes``) so both engines replay the identical cascade;
     recall vs brute force is pinned in tests/test_similarity.py.
     """
-    planes = _lcg_planes(proj_dim, dim, seed)
-    proj = _projection_expr("__dv", planes, pre_cast=True)
+    planes = _lcg_planes(PROJ_DIM, PLANE_DIM, PROJ_PLANE_SEED)
+    proj = _projection_expr(planes)
 
     # Per-row norms precomputed BEFORE the pair join (each vector's
     # self-dot happens once, not once per pair); dot/sqrt sequence is
@@ -646,74 +598,67 @@ def projection_topk_rerank(
     # named column — inlined it re-ran once per plane (32× per row).
     corpus_p = (
         ensure_min_parallelism(corpus)
-        .select(F.col(id_col), as_double(F.col(vec_col)).alias("__dv"))
-        .select(F.col(id_col), proj.alias("__p"))
+        .select(F.col("vec_id"), as_double(F.col("embedding")).alias("__dv"))
+        .select(F.col("vec_id"), proj.alias("__p"))
     )
     corpus_p = corpus_p.withColumn("__pn2", dot(F.col("__p"), F.col("__p")))
     queries_p = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__dv")
-    ).select(F.col(query_id_col), proj.alias("__qp"))
+        F.col("query_id"), as_double(F.col("embedding")).alias("__dv")
+    ).select(F.col("query_id"), proj.alias("__qp"))
     queries_p = queries_p.withColumn("__qn2", dot(F.col("__qp"), F.col("__qp")))
 
     coarse = corpus_p.crossJoin(F.broadcast(queries_p)).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         round_fixed(
             dot(F.col("__p"), F.col("__qp"))
             / F.sqrt(F.col("__pn2") * F.col("__qn2")),
-            6,
         ).alias("__coarse"),
     )
-    order = [F.col("__coarse").desc(), F.col(id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, F.spark_partition_id()).orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
+    order = [F.col("__coarse").desc(), F.col("vec_id").asc()]
+    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(*order)
+    w_global = Window.partitionBy("query_id").orderBy(*order)
     cand = (
         coarse.withColumn("__lr", F.row_number().over(w_local))
-        .filter(F.col("__lr") <= m)
+        .filter(F.col("__lr") <= 200)
         .withColumn("__r", F.row_number().over(w_global))
-        .filter(F.col("__r") <= m)
-        .select(query_id_col, id_col)
+        .filter(F.col("__r") <= 200)
+        .select("query_id", "vec_id")
     )
 
     # Rerank: candidate ids (q·m rows) broadcast against the corpus, so
     # full vectors are read only for survivors; query vectors broadcast.
-    dv = as_double(F.col(vec_col))
-    full = corpus.select(F.col(id_col), dv.alias("__v"))
-    qfull = queries.select(F.col(query_id_col), dv.alias("__qv"))
+    dv = as_double(F.col("embedding"))
+    full = corpus.select(F.col("vec_id"), dv.alias("__v"))
+    qfull = queries.select(F.col("query_id"), dv.alias("__qv"))
     rer = (
-        full.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qfull), query_id_col)
+        full.join(F.broadcast(cand), "vec_id")
+        .join(F.broadcast(qfull), "query_id")
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             round_fixed(
                 dot(F.col("__v"), F.col("__qv"))
                 / F.sqrt(
                     dot(F.col("__v"), F.col("__v"))
                     * dot(F.col("__qv"), F.col("__qv"))
                 ),
-                6,
             ).alias("cos_sim"),
         )
     )
-    w_final = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
+    w_final = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
     return (
         rer.withColumn("rank", F.row_number().over(w_final).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _ANN_K)
     )
 
 
-def contrastive_triplets(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    anchor_id_col: str = "anchor_id",
-) -> DataFrame:
-    """Hard-negative mining for contrastive training: per anchor, the
+def contrastive_triplets(corpus: DataFrame, anchors: DataFrame) -> DataFrame:
+    """Hard-negative mining for contrastive training over a labeled corpus
+    (``vec_id``, ``embedding``, ``label``): per anchor (``anchor_id``,
+    ``embedding``, ``label``), the
     most-similar SAME-label vector (positive) and the most-similar
     DIFFERENT-label vector (the hard negative — the pair that contributes
     the largest loss), with the margin between them.
@@ -727,13 +672,13 @@ def contrastive_triplets(
     engine-independent.
     """
     q = anchors.select(
-        F.col(anchor_id_col),
-        F.col(vec_col).alias("__qv"),
-        F.col(label_col).alias("__ql"),
+        F.col("anchor_id"),
+        F.col("embedding").alias("__qv"),
+        F.col("label").alias("__ql"),
     )
-    dv = as_double(F.col(vec_col))
+    dv = as_double(F.col("embedding"))
     side = corpus.select(
-        F.col(id_col), F.col(label_col), dv.alias("__v"), dot(dv, dv).alias("__n2")
+        F.col("vec_id"), F.col("label"), dv.alias("__v"), dot(dv, dv).alias("__n2")
     )
     # Precompute each anchor's self-dot ONCE in the (tiny, broadcast)
     # anchor frame — advice r5: folding dot(qv,qv) inside the scored
@@ -742,21 +687,21 @@ def contrastive_triplets(
     qv = as_double(F.col("__qv"))
     q = q.withColumn("__qn2", dot(qv, qv))
     scored = side.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col(anchor_id_col)
+        F.col("vec_id") != F.col("anchor_id")
     )
     scored = scored.select(
-        anchor_id_col,
-        id_col,
-        (F.col(label_col) == F.col("__ql")).alias("__same"),
+        "anchor_id",
+        "vec_id",
+        (F.col("label") == F.col("__ql")).alias("__same"),
         round_fixed(
-            dot(F.col("__v"), qv) / F.sqrt(F.col("__n2") * F.col("__qn2")), 6
+            dot(F.col("__v"), qv) / F.sqrt(F.col("__n2") * F.col("__qn2"))
         ).alias("__sim"),
     )
-    order = [F.col("__sim").desc(), F.col(id_col).asc()]
+    order = [F.col("__sim").desc(), F.col("vec_id").asc()]
     w_local = Window.partitionBy(
-        anchor_id_col, "__same", F.spark_partition_id()
+        "anchor_id", "__same", F.spark_partition_id()
     ).orderBy(*order)
-    w_global = Window.partitionBy(anchor_id_col, "__same").orderBy(*order)
+    w_global = Window.partitionBy("anchor_id", "__same").orderBy(*order)
     best = (
         scored.withColumn("__lr", F.row_number().over(w_local))
         .filter(F.col("__lr") == 1)
@@ -770,21 +715,21 @@ def contrastive_triplets(
     # at most ONE row per (anchor, side), so a conditional-max PIVOT over
     # anchor_id reads it once; filtering both sides non-null reproduces
     # the inner join exactly (max of a single value is that value).
-    piv = best.groupBy(anchor_id_col).agg(
-        F.max(F.when(F.col("__same"), F.col(id_col))).alias("pos_id"),
+    piv = best.groupBy("anchor_id").agg(
+        F.max(F.when(F.col("__same"), F.col("vec_id"))).alias("pos_id"),
         F.max(F.when(F.col("__same"), F.col("__sim"))).alias("pos_sim"),
-        F.max(F.when(~F.col("__same"), F.col(id_col))).alias("neg_id"),
+        F.max(F.when(~F.col("__same"), F.col("vec_id"))).alias("neg_id"),
         F.max(F.when(~F.col("__same"), F.col("__sim"))).alias("neg_sim"),
     )
     return piv.filter(
         F.col("pos_id").isNotNull() & F.col("neg_id").isNotNull()
     ).select(
-        anchor_id_col,
+        "anchor_id",
         "pos_id",
         "pos_sim",
         "neg_id",
         "neg_sim",
-        round_fixed(F.col("pos_sim") - F.col("neg_sim"), 6).alias("margin"),
+        round_fixed(F.col("pos_sim") - F.col("neg_sim")).alias("margin"),
     )
 
 
@@ -792,7 +737,6 @@ def assign_cells(
     df: DataFrame,
     cents: list[list[float]],
     vec_col: str = "embedding",
-    out_col: str = "cid",
     impl: str = "expr",
 ) -> DataFrame:
     """Nearest-centroid (max-cosine) cell assignment — the IVF /
@@ -817,7 +761,7 @@ def assign_cells(
       agreement on the fixture corpus (near-orthogonal vectors, top-2
       gap ≫ ulp).
 
-    Returns the input columns plus ``out_col`` (int cell id)."""
+    Returns the input columns plus ``cid`` (int cell id)."""
     import numpy as np
 
     if impl == "expr":
@@ -828,7 +772,7 @@ def assign_cells(
         assigned = df.withColumn(
             "__an2", dot(F.col(vec_col), F.col(vec_col))
         ).withColumn(
-            out_col,
+            "cid",
             nearest_scored(F.col(vec_col), F.col("__an2"), cent)[0]["cid"].cast(
                 "int"
             ),
@@ -841,7 +785,7 @@ def assign_cells(
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} int"
+    ) + ", cid int"
 
     def assign(batches):
         for pdf in batches:
@@ -849,17 +793,14 @@ def assign_cells(
             vn = np.linalg.norm(V, axis=1, keepdims=True)
             vn[vn == 0.0] = 1.0
             cos = (V / vn) @ Cn.T  # (n, k)
-            pdf[out_col] = np.argmax(cos, axis=1).astype("int32")
+            pdf["cid"] = np.argmax(cos, axis=1).astype("int32")
             yield pdf
 
     return df.mapInPandas(assign, schema=out_schema)
 
 
 def ivf_pair_candidates(
-    prep: DataFrame,
-    n_centroids: int | None = None,
-    nprobe: int | None = None,
-    max_centroids: int = 4096,
+    prep: DataFrame, n_centroids: int | None = None, nprobe: int | None = None
 ) -> DataFrame:
     """IVF-bucketed candidate pairs for the leave-one-out label eval —
     the corpus-scale substitute for the all-pairs BNLJ. ``prep`` is the
@@ -916,7 +857,7 @@ def ivf_pair_candidates(
 
     if n_centroids is None:
         n = prep.count()
-        n_centroids = min(max_centroids, max(16, math.floor(math.sqrt(n))))
+        n_centroids = min(_MAX_PAIR_CENTROIDS, max(16, math.floor(math.sqrt(n))))
     if nprobe is None:
         nprobe = max(4, n_centroids // 8)
     sampled = prep.orderBy("vec_id").limit(n_centroids).select("__v").collect()
@@ -1064,7 +1005,6 @@ def knn_label_accuracy(
         round_fixed(
             dot(F.col("__va"), F.col("__vb"))
             / F.sqrt(F.col("__na") * F.col("__nb")),
-            6,
         ).alias("cos_sim"),
     )
     w = Window.partitionBy("qid").orderBy(

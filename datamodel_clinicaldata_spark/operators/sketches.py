@@ -30,6 +30,8 @@ CMS_ROWS: list[tuple[int, int]] = [
     (374761393, 2549297995),
     (2246822519, 374761393),
 ]
+# Buckets per hash row of the sketch (``cms_build``/``cms_estimate``).
+CMS_WIDTH = 256
 
 
 def rolling_hash(col: Column) -> Column:
@@ -49,17 +51,17 @@ def cms_bucket(h: Column, row: int, width: int) -> Column:
     return ((h * F.lit(a) + F.lit(b)) % F.lit(_PRIME)) % F.lit(width)
 
 
-def cms_build(
-    items: DataFrame, item_col: str, depth: int = 4, width: int = 256
-) -> DataFrame:
-    """Aggregate an item stream into CMS counters: one row per
-    (hash_row, bucket) with its count. Output size ≤ depth·width."""
-    assert depth <= len(CMS_ROWS)
+def cms_build(items: DataFrame, item_col: str) -> DataFrame:
+    """Aggregate an item stream into CMS counters over the d =
+    ``len(CMS_ROWS)`` hash rows: one row per (hash_row, bucket) with its
+    count. Output size ≤ d·``CMS_WIDTH``."""
     h = rolling_hash(F.col(item_col))
     hashed = items.select(h.alias("__h"))
     buckets = hashed.select(
         F.posexplode(
-            F.array(*[cms_bucket(F.col("__h"), j, width) for j in range(depth)])
+            F.array(
+                *[cms_bucket(F.col("__h"), j, CMS_WIDTH) for j in range(len(CMS_ROWS))]
+            )
         ).alias("hash_row", "bucket")
     )
     return buckets.groupBy("hash_row", "bucket").agg(
@@ -67,9 +69,7 @@ def cms_build(
     )
 
 
-def cms_estimate(
-    sketch: DataFrame, keys: DataFrame, key_col: str, depth: int = 4, width: int = 256
-) -> DataFrame:
+def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
     """Point-query the sketch for each key: min over the d counters the
     key hashes to (the classic CMS upper-bound estimate; counters the
     key never touched default to 0 only if a bucket row is absent, which
@@ -78,7 +78,9 @@ def cms_estimate(
     kb = keys.withColumn("__h", h).select(
         key_col,
         F.posexplode(
-            F.array(*[cms_bucket(F.col("__h"), j, width) for j in range(depth)])
+            F.array(
+                *[cms_bucket(F.col("__h"), j, CMS_WIDTH) for j in range(len(CMS_ROWS))]
+            )
         ).alias("hash_row", "bucket"),
     )
     joined = kb.join(F.broadcast(sketch), ["hash_row", "bucket"], "left").select(

@@ -17,24 +17,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def scd2_history(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Validity intervals from an event stream: each observation is valid
-    from its own timestamp until the key's next observation
-    (``valid_to`` NULL = current row). Ties on (key, ts) are broken by the
-    value columns so the interval chain is deterministic."""
-    order = [F.col(ts_col).asc()] + [F.col(c).asc_nulls_last() for c in value_cols]
-    w = Window.partitionBy(key_col).orderBy(*order)
+def scd2_history(events: DataFrame) -> DataFrame:
+    """Validity intervals from an event stream: each (``value``,
+    ``event_type``) observation is valid from its own ``ts`` until the
+    ``user_id``'s next observation (``valid_to`` NULL = current row). Ties
+    on (user_id, ts) are broken by the value columns so the interval chain
+    is deterministic."""
+    order = [
+        F.col("ts").asc(),
+        F.col("value").asc_nulls_last(),
+        F.col("event_type").asc_nulls_last(),
+    ]
+    w = Window.partitionBy("user_id").orderBy(*order)
     return events.select(
-        key_col,
-        *value_cols,
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w).alias("valid_to"),
-        (F.lead(ts_col).over(w).isNull()).alias("is_current"),
+        "user_id",
+        "value",
+        "event_type",
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"),
+        (F.lead("ts").over(w).isNull()).alias("is_current"),
     )
 
 

@@ -21,20 +21,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def time_bucket_gapfill(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    bucket: str = "hour",
-) -> DataFrame:
-    """Regularize an event stream to one row per (key, bucket) over each
-    key's active span, with missing buckets linearly interpolated between
-    their nearest populated neighbours (edges forward/backward-filled).
+def time_bucket_gapfill(events: DataFrame) -> DataFrame:
+    """Regularize an event stream to one row per (``user_id``, hour of
+    ``ts``) over each user's active span, with missing buckets linearly
+    interpolated between their nearest populated neighbours (edges
+    forward/backward-filled).
 
-    Returns (key, bucket_ts, n_events, value_fill_e4):
+    Returns (user_id, bucket_ts, n_events, value_fill_e4):
     - ``n_events`` — rows aggregated into the bucket (0 for gap rows).
-    - ``value_fill_e4`` — the filled per-bucket value sum, fixed-point
+    - ``value_fill_e4`` — the filled per-bucket ``value`` sum, fixed-point
       ×10⁴ (``floor(x * 10000)``). Fixed-point-and-floor, not round: the
       interpolated quotient lands on exact decimal half-ties at dyadic
       gap fractions, where IEEE-vs-decimal rounding modes legitimately
@@ -46,11 +41,11 @@ def time_bucket_gapfill(
 
     b = (
         events.groupBy(
-            F.col(key_col).alias("key"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"),
+            F.col("user_id").alias("key"),
+            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
         )
         .agg(
-            F.round(F.sum(value_col), 4).alias("v"),
+            F.round(F.sum("value"), 4).alias("v"),
             F.count("*").cast("long").alias("n_events"),
         )
     )
@@ -67,7 +62,7 @@ def time_bucket_gapfill(
         .select(
             "key",
             F.explode(
-                F.sequence("lo", "hi", F.expr(f"INTERVAL 1 {bucket.upper()}"))
+                F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
             ).alias("bucket_ts"),
         )
     )
@@ -130,7 +125,7 @@ def time_bucket_gapfill(
         .otherwise(next_v)
     )
     return anchored.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("user_id"),
         "bucket_ts",
         F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
         F.floor(filled * 10000).cast("long").alias("value_fill_e4"),

@@ -215,18 +215,17 @@ def clinical_standins_from_testdata(
     return users, weights, treatments
 
 
-def flagship_query(
-    spark: SparkSession, sf_dir: str, cohort: str = "week"
-) -> DataFrame:
-    """The end-to-end slice (SURVEY.md §7.2) over driver testdata: scan,
-    2 left joins, rename, derived buckets, 5 windowed metrics, filters,
-    distinct — 80% of the reference operator inventory in one query."""
+def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The end-to-end slice (SURVEY.md §7.2) over the testdata tables, on the
+    ``week`` cohort: scan, 2 left joins, rename, derived buckets, 5
+    windowed metrics, filters, distinct — 80% of the reference operator
+    inventory in one query."""
     users, weights, treatments = clinical_standins_from_testdata(spark, sf_dir)
     return run_cohort_pipeline(
         users,
         weights,
         treatments,
-        cohort=cohort,
+        cohort="week",
         gender="all",
         min_age=15,
         max_age=74,
@@ -234,9 +233,7 @@ def flagship_query(
     )
 
 
-def flagship_query_observed(
-    spark: SparkSession, sf_dir: str, cohort: str = "week"
-):
+def flagship_query_observed(spark: SparkSession, sf_dir: str):
     """Flagship pipeline wired with the Observation API — per-action
     pipeline metrics (row count, null-weight count, age span) collected
     ON the executors DURING the normal action, no second pass and no
@@ -248,7 +245,7 @@ def flagship_query_observed(
     from pyspark.sql import functions as F
 
     obs = Observation("flagship_metrics")
-    df = flagship_query(spark, sf_dir, cohort=cohort)
+    df = flagship_query(spark, sf_dir)
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),

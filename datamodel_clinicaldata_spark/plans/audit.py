@@ -80,39 +80,6 @@ class PlanAudit:
         )
 
 
-def _window_specs(plan: str) -> list[str]:
-    """Argument lists of every windowspecdefinition.
-
-    TWO nesting levels: the trailing specifiedwindowframe(...) argument
-    itself contains paren-atoms (``unboundedpreceding$()``,
-    ``currentrow$()``), so a one-level pattern silently fails to match
-    ANY frame that ends at the current row — i.e. almost every window —
-    and the audit under-counted to zero for rank/running frames (found
-    round 8: only literal-bound RANGE frames like ``(RangeFrame, -14,
-    -1)`` were ever visible). Audits before this fix proved less than
-    they claimed; counts were re-baselined against the fixed pattern."""
-    return re.findall(
-        r"windowspecdefinition\("
-        r"((?:[^()]|\((?:[^()]|\([^()]*\))*\))*)"
-        r"\)",
-        plan,
-    )
-
-
-def _is_unpartitioned(spec: str) -> bool:
-    """A window spec lists partition columns first, then 'col ASC/DESC ...'
-    ordering entries; if the FIRST argument is already an ordering entry,
-    the window has no partitioning → all rows go through one task.
-
-    NOTE (round 8): spec-level detection misreads Catalyst's decorrelated
-    LATERAL rewrite, where the partition key lives only in the Window
-    OPERATOR's bracket, not inside windowspecdefinition — prefer
-    ``unpartitioned_window_lines`` (operator-level) for auditing; this
-    stays for spec-shape assertions."""
-    first = spec.split(",")[0]
-    return " ASC" in first or " DESC" in first
-
-
 _BOUNDED_CHILDREN = (
     "TakeOrderedAndProject",
     "WindowGroupLimit",

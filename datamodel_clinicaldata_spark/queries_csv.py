@@ -37,7 +37,7 @@ def _ensure_fixtures() -> str:
     ):
         from datamodel_clinicaldata_spark.fixtures import generate_clinical_csvs
 
-        generate_clinical_csvs(_FIXTURE_DIR, seed=7)
+        generate_clinical_csvs(_FIXTURE_DIR)
     return _FIXTURE_DIR
 
 

@@ -29,16 +29,21 @@ _SHINGLES = (
 )
 
 
+# Stop-shingle cap of every capped ``ngram_jaccard_pairs`` /
+# ``ngram_containment_pairs`` call here; ``_capped_pair_chain`` replays the
+# same cap in the oracles.
+_MAX_POSTINGS = 10_000
+
+
 def _capped_pair_chain(
     threshold: float,
-    cap: int = 10_000,
     materialized: bool = False,
     score_name: str = "jaccard",
     score_den: str = "(len(da.sh) + len(db.sh) - c)",
 ) -> str:
-    """CTE chain replaying ``ngram_jaccard_pairs(max_postings=cap)``'s
+    """CTE chain replaying ``ngram_jaccard_pairs(max_postings=_MAX_POSTINGS)``'s
     COUNTING semantics exactly (advice r5): shingles whose posting list
-    exceeds ``cap`` (or has no pair to emit) are dropped from BOTH the
+    exceeds ``_MAX_POSTINGS`` (or has no pair to emit) are dropped from BOTH the
     candidate set and the intersection count, while set sizes still count
     them — i.e. the oracle computes the same capped lower-bound Jaccard
     the Spark operator does, at every data scale, instead of the uncapped
@@ -54,7 +59,7 @@ def _capped_pair_chain(
     return f"""idx AS (
       SELECT doc_id, unnest(sh) AS s FROM docs
     ), keepsh AS (
-      SELECT s FROM idx GROUP BY s HAVING count(*) BETWEEN 2 AND {cap}
+      SELECT s FROM idx GROUP BY s HAVING count(*) BETWEEN 2 AND {_MAX_POSTINGS}
     ), cidx AS (
       SELECT doc_id, s FROM idx JOIN keepsh USING (s)
     ), pc AS (
@@ -70,7 +75,7 @@ def _capped_pair_chain(
     )"""
 
 
-def _exact_jaccard_oracle(threshold: float) -> str:
+def _exact_jaccard_oracle() -> str:
     return f"""
     WITH docs AS (
       SELECT doc_id, {_SHINGLES} AS sh FROM documents
@@ -87,7 +92,7 @@ def _exact_jaccard_oracle(threshold: float) -> str:
     JOIN docs da ON da.doc_id = id_a
     JOIN docs db ON db.doc_id = id_b
     WHERE len(list_intersect(da.sh, db.sh))
-            / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh))) >= {threshold}
+            / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh))) >= 0.5
     """
 
 
@@ -102,7 +107,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on md5(text) — only 16-byte digests
     shuffle, never the payload."""
     d = read_table(spark, sf_dir, "documents")
-    return exact_dedup_groups(d, "text", "doc_id")
+    return exact_dedup_groups(d)
 
 
 @register(
@@ -120,9 +125,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted near-duplicate pairs); the oracle replays the capped counting
     semantics, so the row stays green even on data where the cap binds."""
     d = read_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    )
+    return ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS)
 
 
 @register(
@@ -148,20 +151,16 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = read_table(spark, sf_dir, "documents")
-    return ngram_containment_pairs(
-        d, "text", "doc_id", k=3, threshold=0.8, max_postings=10_000
-    )
+    return ngram_containment_pairs(d, max_postings=_MAX_POSTINGS)
 
 
-@register("dedup_minhash_lsh", _exact_jaccard_oracle(0.5))
+@register("dedup_minhash_lsh", _exact_jaccard_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(128) + 64-band LSH with exact-Jaccard verification at
     threshold 0.5. Oracle = the exact answer (see module docstring for the
     ≤1e-8 miss bound that justifies the equality)."""
     d = read_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        d, "text", "doc_id", k=3, num_hashes=128, bands=64, threshold=0.5
-    )
+    return minhash_lsh_pairs(d, num_hashes=128, bands=64)
 
 
 @register(
@@ -200,7 +199,7 @@ def dedup_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole vote/band/Hamming computation in SQL; the xxhash64 fast path
     keeps its recall pin in tests/test_dedup.py."""
     d = read_table(spark, sf_dir, "documents")
-    return simhash_band_pairs(d, "text", "doc_id", max_hamming=3, hash_mode="md5")
+    return simhash_band_pairs(d, hash_mode="md5")
 
 
 # ---------------------------------------------------------------------------
@@ -240,9 +239,7 @@ def dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     d = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    )
+    pairs = ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     return connected_components_star(edges).select("node", "component_id")
 
@@ -262,9 +259,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datamodel_clinicaldata_spark.operators.graph import connected_components
 
     d = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    )
+    pairs = ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     return connected_components(edges).select("node", "component_id")
 
@@ -341,9 +336,9 @@ def dedup_incremental_against_corpus(
     # filter into the postings self-join, so corpus×corpus pairs (the
     # ~64% majority at a 20% drop share) die before the pair-count
     # shuffle (pinned by tests/test_plans.py).
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    ).filter((F.col("id_a") % 5 == 4) != (F.col("id_b") % 5 == 4))
+    pairs = ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS).filter(
+        (F.col("id_a") % 5 == 4) != (F.col("id_b") % 5 == 4)
+    )
     # id_a < id_b over crossing pairs only; orient incoming→corpus
     crossing = pairs.select(
         F.when(F.col("id_a") % 5 == 4, F.col("id_a"))
@@ -375,9 +370,9 @@ def dedup_incremental_against_corpus(
     )
 
 
-def cc_round_stats(spark: SparkSession, chain_nodes: int = 100_000) -> dict:
+def cc_round_stats(spark: SparkSession) -> dict:
     """Adversarial-regime instrumentation for the star-contraction CC
-    (verdict r4 #6): a single path graph of ``chain_nodes`` nodes —
+    (verdict r4 #6): a single path graph of 100k nodes —
     diameter = n−1, the worst case for min-label propagation (O(d)
     rounds) and the shape the O(log² d) contraction claim is about.
     Runs ``connected_components_star`` end-to-end, returns measured round
@@ -391,6 +386,7 @@ def cc_round_stats(spark: SparkSession, chain_nodes: int = 100_000) -> dict:
         connected_components_star,
     )
 
+    chain_nodes = 100_000
     edges = spark.range(chain_nodes - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
@@ -451,7 +447,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datamodel_clinicaldata_spark.operators.dedup import substring_span_stats
 
     d = read_table(spark, sf_dir, "documents")
-    return substring_span_stats(d, "text", "doc_id", k=5)
+    return substring_span_stats(d)
 
 
 _PR_ORACLE = f"""
@@ -509,9 +505,7 @@ def graph_pagerank_dup_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datamodel_clinicaldata_spark.operators.ranking import ordered_prefix
 
     d = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    )
+    pairs = ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     pr = pagerank_fixedpoint(edges, iters=10)
     # count_mode="exact": pr is a pinned (localCheckpointed) fixpoint
@@ -573,9 +567,7 @@ def dedup_survivor_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datamodel_clinicaldata_spark.operators.graph import connected_components
 
     d = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    )
+    pairs = ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     comp = connected_components(edges)
     dt = d.select(
@@ -670,7 +662,7 @@ def decontaminate_vs_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return train.groupBy("doc_id").agg(
         n.cast("long").alias("n_spans"),
         hits.alias("n_eval_hits"),
-        round_fixed(hits / n, 6).alias("overlap_frac"),
+        round_fixed(hits / n).alias("overlap_frac"),
         (hits / n >= 0.2).alias("contaminated"),
     )
 
@@ -740,9 +732,7 @@ def dedup_levenshtein_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     d = read_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-    ).select("id_a", "id_b")
+    pairs = ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS).select("id_a", "id_b")
     x = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("__ta"))
     y = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("__tb"))
     from datamodel_clinicaldata_spark.functions.vectors import round_fixed
@@ -757,12 +747,12 @@ def dedup_levenshtein_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id_b",
             ed.cast("long").alias("edit_dist"),
             ml.cast("long").alias("max_len"),
-            round_fixed(ed / ml, 6).alias("edit_ratio"),
+            round_fixed(ed / ml).alias("edit_ratio"),
         )
     )
 
 
-@register("dedup_prefix_filter_join", _exact_jaccard_oracle(0.5))
+@register("dedup_prefix_filter_join", _exact_jaccard_oracle())
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered set-similarity join at τ = 0.5 — exact-recall
     blocking that indexes only each document's rarest
@@ -777,7 +767,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix_filtered_jaccard_pairs,
     )
 
-    return prefix_filtered_jaccard_pairs(d, "text", "doc_id", k=3, threshold=0.5)
+    return prefix_filtered_jaccard_pairs(d)
 
 
 @register(
@@ -815,9 +805,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = read_table(spark, sf_dir, "documents")
     pairs = truncate_lineage(
-        ngram_jaccard_pairs(
-            d, "text", "doc_id", k=3, threshold=0.2, max_postings=10_000
-        ).select("id_a", "id_b")
+        ngram_jaccard_pairs(d, threshold=0.2, max_postings=_MAX_POSTINGS).select("id_a", "id_b")
     )
     e1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = pairs.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
@@ -872,15 +860,9 @@ def dedup_algorithms_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_postings=None: the cross-validation claim is about EXACT
     # semantics — MinHash-LSH and prefix filtering are uncapped, so the
     # inverted-index path must be too (advice r5).
-    inv = ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.5, max_postings=None
-    ).select("id_a", "id_b")
-    mh = minhash_lsh_pairs(
-        d, "text", "doc_id", k=3, num_hashes=128, bands=64, threshold=0.5
-    ).select("id_a", "id_b")
-    pf = prefix_filtered_jaccard_pairs(d, "text", "doc_id", k=3, threshold=0.5).select(
-        "id_a", "id_b"
-    )
+    inv = ngram_jaccard_pairs(d, threshold=0.5, max_postings=None).select("id_a", "id_b")
+    mh = minhash_lsh_pairs(d, num_hashes=128, bands=64).select("id_a", "id_b")
+    pf = prefix_filtered_jaccard_pairs(d).select("id_a", "id_b")
     # One pass instead of 4 isEmpty actions + 3 count jobs: tag each
     # algorithm's pair set with a bit, OR the bits per pair (bit_or, so a
     # duplicate emission can never corrupt the mask) — a pair present in

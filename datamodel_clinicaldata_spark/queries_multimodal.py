@@ -69,7 +69,7 @@ def multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bin byte histogram per media blob (image-feature stand-in)."""
-    return byte_histogram(_media(spark, sf_dir), bins=64)
+    return byte_histogram(_media(spark, sf_dir))
 
 
 @register(
@@ -85,7 +85,7 @@ def multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-style frame sampling: 64-byte frame every 128 bytes, ≤8."""
-    return frame_sample(_media(spark, sf_dir), frame_bytes=64, stride=128, max_frames=8)
+    return frame_sample(_media(spark, sf_dir))
 
 
 @register(
@@ -109,7 +109,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-style windowed energy: 256-sample windows, exact integer
     sum-of-squares (RMS = sqrt(sum_sq/n) derivable)."""
-    return audio_rms_windows(_media(spark, sf_dir), window=256)
+    return audio_rms_windows(_media(spark, sf_dir))
 
 
 @register(
@@ -208,7 +208,7 @@ def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_rms_windows,
     )
 
-    w = audio_rms_windows(_media(spark, sf_dir), window=256)
+    w = audio_rms_windows(_media(spark, sf_dir))
     active = w.filter(F.col("sum_sq") >= 10000 * F.col("n_samples"))
     iw = Window.partitionBy("media_id").orderBy("window_idx")
     act = active.withColumn(

@@ -1443,12 +1443,7 @@ def scd2_user_value_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datamodel_clinicaldata_spark.operators.temporal import scd2_history
 
     e = read_table(spark, sf_dir, "events")
-    return scd2_history(
-        e.select("user_id", "ts", "value", "event_type"),
-        key_col="user_id",
-        ts_col="ts",
-        value_cols=["value", "event_type"],
-    )
+    return scd2_history(e.select("user_id", "ts", "value", "event_type"))
 
 
 @register(
@@ -2029,7 +2024,7 @@ def diag_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cnt").alias("max_cnt"),
         p50.cast("long").alias("p50_cnt"),
         p90.cast("long").alias("p90_cnt"),
-        round_fixed(F.max("cnt") / p50, 6).alias("skew_ratio"),
+        round_fixed(F.max("cnt") / p50).alias("skew_ratio"),
     )
 
 
@@ -2441,7 +2436,6 @@ def events_association_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_fixed(
                 (F.col("u_both").cast("double") * F.col("n"))
                 / (F.col("users_a") * F.col("users_b")),
-                6,
             ).alias("lift"),
         )
     )
@@ -2497,7 +2491,7 @@ def agg_revenue_share_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_nationkey",
         (F.col("nation_cents") / 100.0).alias("nation_rev"),
         round_fixed(
-            F.col("nation_cents") / F.sum("nation_cents").over(w).cast("long"), 6
+            F.col("nation_cents") / F.sum("nation_cents").over(w).cast("long")
         ).alias("region_share"),
     )
 
@@ -2849,7 +2843,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "from_type",
         "to_type",
         "n",
-        round_fixed(F.col("n").cast("double") / F.col("row_total"), 6).alias("p"),
+        round_fixed(F.col("n").cast("double") / F.col("row_total")).alias("p"),
     )
 
 
@@ -3253,7 +3247,7 @@ def agg_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "no_false_negatives"
         ),
         F.when(nonmember == 0, F.lit(0.0))
-        .otherwise(round_fixed(fp / nonmember, 6))
+        .otherwise(round_fixed(fp / nonmember))
         .alias("fp_rate"),
     )
 
@@ -3874,9 +3868,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") + width).alias("eb"),
     )
     return (
-        binned_overlap_join(
-            a, b, "user_id", "sa", "ea", "sb", "eb", bin_width_us=width
-        )
+        binned_overlap_join(a, b, "user_id", bin_width_us=width)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("user_id", "id_a", "id_b", "overlap_us")
     )

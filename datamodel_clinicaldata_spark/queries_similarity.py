@@ -110,23 +110,33 @@ def similarity_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_fixed(
                 dot(F.col("__va"), F.col("__vb"))
                 / F.sqrt(F.col("__na") * F.col("__nb")),
-                6,
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.45)
     )
 
 
-def _lsh_planes_sql(n_tables: int = 16, bits: int = 4, dim: int = 64, seed: int = 13) -> str:
-    """VALUES rows for the exact LCG hyperplanes the Spark query uses
-    (``_lcg_planes(n_tables*bits, dim, seed)``; table = i//bits, bit
-    weight = 2^(i%bits) — the same chunking as ``cosine_neardup_pairs``).
+# LSH table count of both registered near-dup queries; their oracles'
+# plane literals (``_lsh_planes_sql``) are built for the same count.
+_LSH_TABLES = 8
+
+
+def _lsh_planes_sql(bits: int) -> str:
+    """VALUES rows for the exact LCG hyperplanes the Spark query uses for
+    ``_LSH_TABLES`` tables of ``bits`` planes
+    (``_lcg_planes(_LSH_TABLES*bits, PLANE_DIM, LSH_PLANE_SEED)``;
+    table = i//bits, bit weight = 2^(i%bits) — the same chunking as
+    ``cosine_neardup_pairs``).
     Python float repr round-trips, so DuckDB parses bit-identical doubles
     and ``list_inner_product`` folds in the same order as ``dot`` — the
     sign of every plane projection agrees bitwise across engines."""
-    from datamodel_clinicaldata_spark.operators.similarity import _lcg_planes
+    from datamodel_clinicaldata_spark.operators.similarity import (
+        LSH_PLANE_SEED,
+        PLANE_DIM,
+        _lcg_planes,
+    )
 
-    planes = _lcg_planes(n_tables * bits, dim, seed)
+    planes = _lcg_planes(_LSH_TABLES * bits, PLANE_DIM, LSH_PLANE_SEED)
     rows = []
     for i, p in enumerate(planes):
         arr = "[" + ", ".join(repr(x) for x in p) + "]::DOUBLE[]"
@@ -140,7 +150,7 @@ def _lsh_planes_sql(n_tables: int = 16, bits: int = 4, dim: int = 64, seed: int 
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
                WHERE vec_id % 4 = 0),
     pl(tbl, wt, p) AS (VALUES
-      {_lsh_planes_sql(8, 4)}
+      {_lsh_planes_sql(4)}
     ),
     sb AS (
       SELECT e.vec_id, pl.tbl,
@@ -196,7 +206,7 @@ def similarity_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 4 == 0
     )
-    return cosine_neardup_pairs(e, threshold=0.40, n_tables=8, bits=4)
+    return cosine_neardup_pairs(e, threshold=0.40, n_tables=_LSH_TABLES, bits=4)
 
 
 def _clustered_corpus(e: DataFrame) -> DataFrame:
@@ -240,7 +250,7 @@ _PROD_CORPUS_SQL = """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddi
     f"""
     WITH {_PROD_CORPUS_SQL},
     pl(tbl, wt, p) AS (VALUES
-      {_lsh_planes_sql(8, 10)}
+      {_lsh_planes_sql(10)}
     ),
     sb AS (
       SELECT c.vec_id, pl.tbl,
@@ -304,7 +314,7 @@ def similarity_neardup_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_neardup_pairs(
         corpus,
         threshold=0.9,
-        n_tables=8,
+        n_tables=_LSH_TABLES,
         bits=10,
         ensure_parallelism=False,
     )
@@ -323,7 +333,7 @@ def lsh_candidate_stats(spark: SparkSession, sf_dir: str, name: str) -> dict:
     if name == "similarity_neardup_lsh_prod":
         corpus = _clustered_corpus(e)
         cand = neardup_candidate_pairs(
-            corpus, n_tables=8, bits=10, ensure_parallelism=False
+            corpus, n_tables=_LSH_TABLES, bits=10, ensure_parallelism=False
         )
     else:
         corpus = e
@@ -404,9 +414,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_topk(
-        e, queries, k=10, n_centroids=16, nprobe=4, seed_by="lowest"
-    )
+    return ivf_topk(e, queries, nprobe=4, seed_by="lowest")
 
 
 @register(
@@ -486,9 +494,7 @@ def similarity_ivf_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_quantized_topk(
-        e, queries, k=10, n_centroids=16, nprobe=4
-    )
+    return ivf_quantized_topk(e, queries)
 
 
 @register(
@@ -569,15 +575,20 @@ def similarity_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return quantized_topk(e, queries, k=10)
+    return quantized_topk(e, queries)
 
 
-def _proj_planes_sql(proj_dim: int = 16, dim: int = 64, seed: int = 29) -> str:
+def _proj_planes_sql() -> str:
     """DOUBLE[][] literal of the exact SplitMix64 projection planes the
     Spark cascade uses (repr round-trip → bit-identical doubles)."""
-    from datamodel_clinicaldata_spark.operators.similarity import _lcg_planes
+    from datamodel_clinicaldata_spark.operators.similarity import (
+        PLANE_DIM,
+        PROJ_DIM,
+        PROJ_PLANE_SEED,
+        _lcg_planes,
+    )
 
-    planes = _lcg_planes(proj_dim, dim, seed)
+    planes = _lcg_planes(PROJ_DIM, PLANE_DIM, PROJ_PLANE_SEED)
     return (
         "["
         + ", ".join("[" + ", ".join(repr(x) for x in p) + "]::DOUBLE[]" for p in planes)
@@ -591,7 +602,7 @@ def _proj_planes_sql(proj_dim: int = 16, dim: int = 64, seed: int = 29) -> str:
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     pe AS (
       SELECT vec_id, v,
-             list_transform({_proj_planes_sql(32)}, pl -> list_inner_product(v, pl)) AS pv
+             list_transform({_proj_planes_sql()}, pl -> list_inner_product(v, pl)) AS pv
       FROM e
     ),
     coarse AS (
@@ -646,7 +657,7 @@ def similarity_projection_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return projection_topk_rerank(e, queries, k=10, m=200, proj_dim=32)
+    return projection_topk_rerank(e, queries)
 
 
 @register(
@@ -1187,7 +1198,6 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_fixed(
                 dot(F.col("__va"), F.col("__vb"))
                 / F.sqrt(F.col("__na") * F.col("__nb")),
-                6,
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.40)

@@ -9,8 +9,8 @@ the driver a value-level correctness check on the window semantics
 
 Oracle notes: Spark aligns window starts to the epoch in multiples of the
 slide — so does DuckDB ``time_bucket``; session windows are replayed in
-SQL as gaps-and-islands with the same [start, last+gap) semantics
-(boundary: a gap of exactly ``gap`` starts a NEW session, hence ``>=``)."""
+SQL as gaps-and-islands with the same [start, last+6h) semantics
+(boundary: a gap of exactly 6 hours starts a NEW session, hence ``>=``)."""
 
 from __future__ import annotations
 
@@ -84,7 +84,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = read_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     redelivered = e.unionByName(e)
-    deduped = dedup_events_stream(redelivered, keys=("event_id",), ts_col="ts")
+    deduped = dedup_events_stream(redelivered)
     return deduped.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_unique"),
         F.min("event_id").cast("long").alias("min_id"),

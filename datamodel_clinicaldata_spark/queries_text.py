@@ -28,6 +28,7 @@ from datamodel_clinicaldata_spark.functions.text import (
 )
 from datamodel_clinicaldata_spark.registry import register
 from datamodel_clinicaldata_spark.operators.partitioning import ensure_min_parallelism
+from datamodel_clinicaldata_spark.operators.sketches import CMS_WIDTH
 from datamodel_clinicaldata_spark.sources.readers import read_table
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
@@ -152,7 +153,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: min-md5 over 16-char shingles (1-perm MinHash)."""
     d = read_table(spark, sf_dir, "documents")
-    return d.select("doc_id", doc_fingerprint(F.col("text"), k=16).alias("fingerprint"))
+    return d.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
 
 
 @register(
@@ -226,7 +227,7 @@ def _cms_rows_sql() -> str:
       FROM tok
     ), hr(j, mult, add) AS (VALUES {_cms_rows_sql()}),
     sk AS (
-      SELECT hr.j, ((th.h * hr.mult + hr.add) % 1000000007) % 256 AS bucket,
+      SELECT hr.j, ((th.h * hr.mult + hr.add) % 1000000007) % {CMS_WIDTH} AS bucket,
              CAST(count(*) AS BIGINT) AS counter
       FROM th CROSS JOIN hr
       GROUP BY 1, 2
@@ -244,7 +245,7 @@ def _cms_rows_sql() -> str:
       JOIN top USING (token)
       CROSS JOIN hr
       JOIN sk s ON s.j = hr.j
-              AND s.bucket = ((u.h * hr.mult + hr.add) % 1000000007) % 256
+              AND s.bucket = ((u.h * hr.mult + hr.add) % 1000000007) % {CMS_WIDTH}
       GROUP BY 1
     )
     SELECT top.token, top.exact_cnt, est.cms_est,
@@ -273,14 +274,14 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     )
-    sketch = cms_build(tok, "token", depth=4, width=256)
+    sketch = cms_build(tok, "token")
     exact = tok.groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt")
     )
     top = topk_ranked(
         exact, [F.col("exact_cnt").desc(), F.col("token").asc()], 20
     )
-    est = cms_estimate(sketch, top.select("token"), "token", depth=4, width=256)
+    est = cms_estimate(sketch, top.select("token"), "token")
     return top.join(est, "token").select(
         "token",
         "exact_cnt",
@@ -397,7 +398,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("term") == t, F.col("c"))), F.lit(0.0)
     )
     scored = contrib.groupBy("doc_id").agg(
-        round_fixed(pick("spark") + pick("table") + pick("join"), 6).alias("bm25")
+        round_fixed(pick("spark") + pick("table") + pick("join")).alias("bm25")
     )
     from datamodel_clinicaldata_spark.operators.ranking import topk_ranked
 
@@ -489,7 +490,6 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.col("nab") * F.col("n")).cast("double")
                     / (F.col("na") * F.col("nb"))
                 ),
-                6,
             ).alias("pmi"),
         )
     )
@@ -725,7 +725,6 @@ def text_ctfidf_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + (F.col("total_tf").cast("double") / F.col("n_sources"))
                     / F.col("tf")
                 ),
-                6,
             ).alias("ctfidf"),
         )
     )
@@ -887,12 +886,8 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return winnowing_pairs(
         read_table(spark, sf_dir, "documents"),
-        "text",
-        "doc_id",
         k=16,
         w=8,
-        max_postings=5000,
-        min_shared=3,
     )
 
 

@@ -204,10 +204,7 @@ def pack_sequences_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc — the fixed-order streaming packer)."""
     d = read_table(spark, sf_dir, "documents")
     t = d.select("doc_id", "source", F.size(tokens(F.col("text"))).alias("n_tokens"))
-    return quota_chunk_bins(
-        t, size_col="n_tokens", order_col="doc_id", group_col="source",
-        budget=_PACK_BUDGET,
-    )
+    return quota_chunk_bins(t, budget=_PACK_BUDGET)
 
 
 @register(
@@ -243,10 +240,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     point: the fold itself is what ``applyInPandas`` distributes)."""
     d = read_table(spark, sf_dir, "documents")
     t = d.select("doc_id", "source", F.size(tokens(F.col("text"))).alias("n_tokens"))
-    return greedy_pack_bins(
-        t, size_col="n_tokens", order_col="doc_id", group_col="source",
-        budget=_PACK_BUDGET,
-    )
+    return greedy_pack_bins(t, budget=_PACK_BUDGET)
 
 
 # ---------------------------------------------------------------------------
@@ -338,18 +332,14 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     screened = tok.filter(F.col("n_tokens").between(50, 1000))
-    deduped = dedup_keep_first(screened, "text", "doc_id")
+    deduped = dedup_keep_first(screened)
     tier = (
         F.when(F.col("source").isin([f"src{i}" for i in range(5)]), 80)
         .when(F.col("source").isin([f"src{i}" for i in range(5, 10)]), 50)
         .otherwise(20)
     )
     mixed = deduped.filter(knuth_mod("doc_id", 100) < tier)
-    return quota_chunk_bins(
-        mixed.select("doc_id", "source", "n_tokens"),
-        size_col="n_tokens", order_col="doc_id", group_col="source",
-        budget=_PACK_BUDGET,
-    )
+    return quota_chunk_bins(mixed.select("doc_id", "source", "n_tokens"), budget=_PACK_BUDGET)
 
 
 @register(
@@ -396,11 +386,11 @@ def pack_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
     )
-    out = length_bucket_batches(d, "n_tokens", "doc_id")
+    out = length_bucket_batches(d)
     return out.withColumn(
         "padding_waste",
         round_fixed(
-            (F.col("padded_tokens") - F.col("sum_tokens")) / F.col("padded_tokens"), 6
+            (F.col("padded_tokens") - F.col("sum_tokens")) / F.col("padded_tokens")
         ),
     )
 
@@ -463,13 +453,12 @@ def mixture_temperature_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "src_tokens",
-        round_fixed(F.col("src_tokens") / F.col("total_tokens"), 6).alias("share"),
-        round_fixed(F.col("sqrt_e6") / F.col("total_sqrt_e6"), 6).alias("p_target"),
+        round_fixed(F.col("src_tokens") / F.col("total_tokens")).alias("share"),
+        round_fixed(F.col("sqrt_e6") / F.col("total_sqrt_e6")).alias("p_target"),
         round_fixed(
             (F.col("sqrt_e6") / F.col("total_sqrt_e6"))
             * F.col("total_tokens")
             / F.col("src_tokens"),
-            6,
         ).alias("repeat_factor"),
     )
 
@@ -582,7 +571,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "w",
-        round_fixed(F.log(u) / F.col("w"), 6).alias("priority"),
+        round_fixed(F.log(u) / F.col("w")).alias("priority"),
     )
     return topk_ranked(
         ranked, [F.col("priority").desc(), F.col("doc_id").asc()], 50
@@ -634,7 +623,7 @@ def sample_per_source_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "w",
-        round_fixed(F.log(u) / F.col("w"), 6).alias("priority"),
+        round_fixed(F.log(u) / F.col("w")).alias("priority"),
     )
     win = Window.partitionBy("source").orderBy(
         F.col("priority").desc(), F.col("doc_id").asc()

@@ -55,7 +55,11 @@ def _default_local_dir() -> str | None:
     return None
 
 
-def _sweep_stale_local_dir(path: str, min_age_sec: float = 120.0) -> None:
+# Entries of the shared local dir younger than this are never swept.
+_SWEEP_MIN_AGE_SEC = 120.0
+
+
+def _sweep_stale_local_dir(path: str) -> None:
     """Delete STALE entries under the shared /dev/shm local dir.
 
     Race (ADVICE r11): another Python driver that passed its own
@@ -66,10 +70,10 @@ def _sweep_stale_local_dir(path: str, min_age_sec: float = 120.0) -> None:
     - an O_EXCL lock file serializes concurrent sweepers (a loser skips
       the sweep entirely; locks older than 10 min are treated as crashed
       and broken);
-    - only entries whose mtime is older than ``min_age_sec`` are swept —
-      a directory a just-starting session created moments ago is left
-      alone even if that session's JVM isn't visible yet, while orphans
-      from a crashed run (hours old) are reclaimed.
+    - only entries older than ``_SWEEP_MIN_AGE_SEC`` (by mtime) are
+      swept — a directory a just-starting session created moments ago is
+      left alone even if that session's JVM isn't visible yet, while
+      orphans from a crashed run (hours old) are reclaimed.
     """
     import shutil
     import time
@@ -103,7 +107,7 @@ def _sweep_stale_local_dir(path: str, min_age_sec: float = 120.0) -> None:
         for entry in os.listdir(path):
             p = os.path.join(path, entry)
             try:
-                if now - os.path.getmtime(p) > min_age_sec:
+                if now - os.path.getmtime(p) > _SWEEP_MIN_AGE_SEC:
                     shutil.rmtree(p, ignore_errors=True)
             except OSError:
                 continue
@@ -196,9 +200,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Driver testdata stores events.ts as parquet TIMESTAMP(NANOS),
-        # which the vectorized reader rejects; read as long + convert in
-        # sources.readers (Spark timestamps are µs precision anyway).
+        # Kept for testdata drops that store events.ts as parquet
+        # TIMESTAMP(NANOS), which the vectorized reader rejects: such a
+        # column reads as long and sources.readers._normalize_event_ts
+        # converts it (see readers._EVENT_TS_COLUMNS).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # The engine stages multi-window pipelines in dependency order so
         # windows with byte-identical sort requirements sit adjacent and

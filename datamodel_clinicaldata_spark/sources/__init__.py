@@ -1,13 +1,11 @@
 from datamodel_clinicaldata_spark.sources.readers import (
     load_clinical_tables,
-    load_testdata,
     read_clinical_csv,
     read_table,
 )
 
 __all__ = [
     "load_clinical_tables",
-    "load_testdata",
     "read_clinical_csv",
     "read_table",
 ]

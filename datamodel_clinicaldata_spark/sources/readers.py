@@ -155,27 +155,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_testdata(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load driver testdata tables as a name→DataFrame dict."""
-    return {t: read_table(spark, sf_dir, t) for t in tables}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for the SQL surface."""
     for t in TESTDATA_TABLES:
         read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSONL source. An explicit schema skips the inference pass (which
+def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
+    """JSONL source. The explicit schema skips the inference pass (which
     reads the whole dataset once — never acceptable at 100 TB) and pins
-    types against drift; inference is allowed only for exploration."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+    types against drift."""
+    return spark.read.schema(schema).json(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

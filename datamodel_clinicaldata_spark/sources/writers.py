@@ -12,7 +12,9 @@ TABLE LAYOUT decision:
 - ``write_bucketed``: hash-bucketed + sorted table on the join key →
   co-located, shuffle-free joins between tables bucketed the same way
   (verified by plan test: the bucketed join has ZERO exchanges).
-- ``write_parquet`` / ``write_csv``: plain sinks with explicit mode.
+- ``write_parquet``: the plain sink.
+
+Every sink overwrites its target.
 
 Bucketing requires ``saveAsTable`` (bucket metadata lives in the
 catalog); the session uses a local warehouse dir for tests.
@@ -23,63 +25,58 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
+# Bucket count of ``write_bucketed``: two tables join without a shuffle
+# only when both carry the same count.
+NUM_BUCKETS = 8
+# Rows per output file of ``compact_small_files``.
+TARGET_ROWS_PER_FILE = 1000
+# Output file count of ``write_zordered``.
+ZORDER_FILES = 16
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_by: list[str], mode: str = "overwrite"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:
     """Directory-partitioned parquet. Partition columns should be
     low-cardinality (a date bucket, a clinic id) — one directory per
     value; high-cardinality keys belong in bucketing instead."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    num_buckets: int = 16,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Hash-bucketed (optionally sorted) managed table. Two tables
-    bucketed by the same key with the same bucket count join WITHOUT a
-    shuffle — the scan's output partitioning already satisfies the join's
-    clustering requirement."""
-    w = df.write.mode(mode).bucketBy(num_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.format("parquet").saveAsTable(table)
+def write_bucketed(df: DataFrame, table: str, bucket_by: str, sort_by: str) -> None:
+    """Hash-bucketed, sorted managed table. Two tables bucketed by the
+    same key with the same bucket count join WITHOUT a shuffle — the
+    scan's output partitioning already satisfies the join's clustering
+    requirement."""
+    (
+        df.write.mode("overwrite")
+        .bucketBy(NUM_BUCKETS, bucket_by)
+        .sortBy(sort_by)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """Newline-delimited JSON — the lingua franca of training-data
     interchange (one document object per line; Spark writes one .json
     part-file per partition, splittable and append-friendly). Binary
     columns are base64-encoded by Spark's JSON writer; timestamps are
     ISO-8601."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (built into Spark): columnar alternative to parquet with
     the same pushdown/pruning story; useful when the downstream consumer
     is Hive/Trino-standardized on ORC."""
-    df.write.mode(mode).orc(path)
+    df.write.mode("overwrite").orc(path)
 
 
 def write_sorted_parquet(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, sort_cols: list[str], n_files: int | None = None
 ) -> None:
     """Layout-aware sink: range-partition + sort by ``sort_cols`` before
     writing. Parquet footers then carry NON-OVERLAPPING min/max ranges per
@@ -93,29 +90,21 @@ def write_sorted_parquet(
         if n_files
         else df.repartitionByRange(*sort_cols)
     )
-    out.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    out.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
 
 
-def compact_small_files(
-    df: DataFrame, path: str, target_rows_per_file: int, mode: str = "overwrite"
-) -> None:
+def compact_small_files(df: DataFrame, path: str) -> None:
     """Small-file compaction: coalesce a fragmented dataset into
     ~target-row files (row count stands in for bytes on these fixtures; a
     production deployment divides target file bytes by the measured
     row width). Small files are the classic death-by-metadata failure at
     scale — a 100 TB table in 10 MB files is 10M objects to list."""
-    n = max(1, -(-df.count() // target_rows_per_file))
-    df.repartition(n).write.mode(mode).parquet(path)
+    n = max(1, -(-df.count() // TARGET_ROWS_PER_FILE))
+    df.repartition(n).write.mode("overwrite").parquet(path)
 
 
 def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    ranges: list[tuple[float, float]],
-    n_files: int | None = None,
-    bits: int = 16,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, cols: list[str], ranges: list[tuple[float, float]]
 ) -> None:
     """Multi-dimensional clustering sink: range-partition + sort by the
     Z-order key of ``cols`` (``operators.partitioning.zorder_key``), so a
@@ -127,8 +116,11 @@ def write_zordered(
     (pinned quantitatively in tests/test_sinks.py)."""
     from datamodel_clinicaldata_spark.operators.partitioning import zorder_key
 
-    z = df.withColumn("__z", zorder_key(cols, ranges, bits))
-    out = (
-        z.repartitionByRange(n_files, "__z") if n_files else z.repartitionByRange("__z")
+    (
+        df.withColumn("__z", zorder_key(cols, ranges))
+        .repartitionByRange(ZORDER_FILES, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    out.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)

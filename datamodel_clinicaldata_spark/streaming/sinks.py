@@ -20,38 +20,34 @@ from pyspark.sql import functions as F
 
 
 def write_stream_partitioned_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    partition_cols: list[str],
-    available_now: bool = True,
+    stream_df: DataFrame, out_dir: str, checkpoint_dir: str
 ):
-    """Stream → date/key-partitioned parquet via idempotent foreachBatch.
+    """Stream → ``event_date``-partitioned parquet via idempotent
+    foreachBatch, over every input available at the start.
 
     Each micro-batch writes ``out_dir/batch_id=N/<partition dirs>/`` with
     mode=overwrite: a replayed batch N simply rewrites its own directory
     (exactly-once through idempotence), readers see the union via
     ``spark.read.parquet(out_dir)`` with ``batch_id`` as one more
-    partition column to prune on. Partitioning columns come from the
-    caller (date first, per SCALING.md layout doctrine)."""
+    partition column to prune on (date first, per SCALING.md layout
+    doctrine; ``with_event_date`` derives the column)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
+            .partitionBy("event_date")
             .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def with_event_date(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def with_event_date(df: DataFrame) -> DataFrame:
     """The standard partition column: event date derived from the event
-    timestamp (time-first layout — SCALING.md Storage layout)."""
-    return df.withColumn("event_date", F.col(ts_col).cast("date"))
+    timestamp ``ts`` (time-first layout — SCALING.md Storage layout)."""
+    return df.withColumn("event_date", F.col("ts").cast("date"))

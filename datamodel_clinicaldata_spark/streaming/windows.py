@@ -54,60 +54,49 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_event_ts(df, "ts")
 
 
-def with_watermark(df: DataFrame, ts_col: str = "ts", delay: str = "1 hour") -> DataFrame:
-    """Late-data bound: batch frames pass through unchanged (watermarks are
-    a streaming-state concept); streaming frames get state eviction +
-    late-row drop beyond ``delay``."""
-    return df.withWatermark(ts_col, delay) if df.isStreaming else df
+def with_watermark(df: DataFrame, delay: str = "1 hour") -> DataFrame:
+    """Late-data bound on ``ts``: batch frames pass through unchanged
+    (watermarks are a streaming-state concept); streaming frames get state
+    eviction + late-row drop beyond ``delay``."""
+    return df.withWatermark("ts", delay) if df.isStreaming else df
 
 
-def tumbling_event_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "1 hour",
-    keys: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-) -> DataFrame:
-    """Tumbling-window counts + value sum per key. One shuffle on
-    (window, keys); partial aggregation map-side."""
+def tumbling_event_counts(df: DataFrame) -> DataFrame:
+    """1-hour tumbling-window event count + ``value`` sum per
+    ``event_type``. One shuffle on (window, event_type); partial
+    aggregation map-side."""
     return (
-        df.groupBy(F.window(ts_col, width).alias("w"), *keys)
+        df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("total_value"),
+            F.round(F.sum("value"), 4).alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
-            *keys,
+            "event_type",
             "n_events",
             "total_value",
         )
     )
 
 
-def sliding_event_avg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "2 hours",
-    slide: str = "1 hour",
-    keys: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-) -> DataFrame:
-    """Sliding (hopping) window average: each event lands in width/slide
-    windows. The average is rounded from the RAW sum (never from the
-    already-rounded total: a 4-dp total divided by a small count lands
-    exactly on half-ties — 409.53/8 = 51.19125 — where JVM shortest-repr
-    HALF_UP and DuckDB binary rounding disagree)."""
+def sliding_event_avg(df: DataFrame) -> DataFrame:
+    """Sliding (hopping) window average per ``event_type``: 2-hour windows
+    every hour, so each event lands in two windows. The average is
+    rounded from the RAW sum (never from the already-rounded total: a
+    4-dp total divided by a small count lands exactly on half-ties —
+    409.53/8 = 51.19125 — where JVM shortest-repr HALF_UP and DuckDB
+    binary rounding disagree)."""
     return (
-        df.groupBy(F.window(ts_col, width, slide).alias("w"), *keys)
+        df.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("total_value"),
-            F.round(F.sum(value_col) / F.count(F.lit(1)), 4).alias("avg_value"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+            F.round(F.sum("value") / F.count(F.lit(1)), 4).alias("avg_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
-            *keys,
+            "event_type",
             "n_events",
             "total_value",
             "avg_value",
@@ -115,25 +104,19 @@ def sliding_event_avg(
     )
 
 
-def session_windows(
-    df: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "6 hours",
-    key: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-user session windows: events closer than ``gap`` merge into one
-    session; the session ends ``gap`` after its last event
+def session_windows(df: DataFrame) -> DataFrame:
+    """Per-user session windows: events closer than 6 hours merge into one
+    session; the session ends 6 hours after its last event
     (``F.session_window`` semantics — the batch SQL twin reproduces them
     with gaps-and-islands: lag → boundary flag → running sum → group)."""
     return (
-        df.groupBy(F.session_window(ts_col, gap).alias("w"), key)
+        df.groupBy(F.session_window("ts", "6 hours").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("total_value"),
+            F.round(F.sum("value"), 4).alias("total_value"),
         )
         .select(
-            F.col(key),
+            F.col("user_id"),
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -142,10 +125,9 @@ def session_windows(
     )
 
 
-def dedup_events_stream(
-    df: DataFrame, keys: tuple[str, ...] = ("event_id",), ts_col: str = "ts"
-) -> DataFrame:
-    """Streaming exactly-once dedup: drop re-deliveries of the same key.
+def dedup_events_stream(df: DataFrame) -> DataFrame:
+    """Streaming exactly-once dedup: drop re-deliveries of the same
+    ``event_id``.
 
     On a stream, ``dropDuplicatesWithinWatermark`` keeps key state only
     until the watermark passes — bounded state for unbounded input (plain
@@ -156,17 +138,15 @@ def dedup_events_stream(
     content-level dedup family lives in ``operators.dedup``.
     """
     if df.isStreaming:
-        return df.withWatermark(ts_col, "1 hour").dropDuplicatesWithinWatermark(
-            list(keys)
+        return df.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
+            ["event_id"]
         )
-    return df.dropDuplicates(list(keys))
+    return df.dropDuplicates(["event_id"])
 
 
-def click_purchase_join(
-    events: DataFrame, max_gap: str = "30 minutes", how: str = "inner"
-) -> DataFrame:
+def click_purchase_join(events: DataFrame, how: str = "inner") -> DataFrame:
     """Stream-stream event-time interval join: each purchase matched to
-    every click by the same user in the preceding ``max_gap`` window
+    every click by the same user in the preceding 30 minutes
     (attribution join).
 
     Unified-model transform: on batch frames this is a plain range join;
@@ -205,23 +185,19 @@ def click_purchase_join(
         p,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {max_gap}")),
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 minutes")),
         how,
     ).select(
         "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value"
     )
 
 
-def enrich_events_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    left_key: str = "user_id",
-    right_key: str = "c_custkey",
-) -> DataFrame:
+def enrich_events_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: every event decorated with its
-    dimension row (user → customer attributes). The missing streaming
-    shape next to windows/dedup/stream-stream join — at ingest, events
-    are enriched against a slowly-changing dimension before landing.
+    dimension row (``user_id`` → customer attributes by ``c_custkey``).
+    The missing streaming shape next to windows/dedup/stream-stream
+    join — at ingest, events are enriched against a slowly-changing
+    dimension before landing.
 
     Unified-model transform: on a batch frame it is a plain broadcast
     left join; on a streaming frame Spark re-plans the static side per
@@ -232,53 +208,42 @@ def enrich_events_dim(
     Left join keeps unmatched events (late dim arrival must not drop
     facts — the standard ingest contract)."""
     return events.join(
-        F.broadcast(dim), F.col(left_key) == F.col(right_key), "left"
-    ).drop(right_key)
+        F.broadcast(dim), F.col("user_id") == F.col("c_custkey"), "left"
+    ).drop("c_custkey")
 
 
-def windowed_distinct_sketch(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "6 hours",
-    key_col: str = "user_id",
-    lg_k: int = 12,
-) -> DataFrame:
-    """Per-tumbling-window distinct-``key_col`` cardinality as a
+# HLL sketch of ``windowed_distinct_sketch``: distinct user_id per
+# 6-hour window with 2^12 registers, on the batch and the streaming face.
+_USERS_SKETCH = "hll_sketch_estimate(hll_sketch_agg(user_id, 12))"
+
+
+def windowed_distinct_sketch(df: DataFrame) -> DataFrame:
+    """Per-6-hour-tumbling-window distinct-``user_id`` cardinality as a
     Datasketches HLL (``hll_sketch_agg``) next to the exact count — the
     windowed-cardinality shape streaming needs at 100 TB: the sketch is
-    a mergeable aggregate, so state per window is one 2^lg_k-register
+    a mergeable aggregate, so state per window is one 2^12-register
     sketch instead of a distinct-keys set, and late data folds in with a
     sketch union. The exact count rides along for the batch face's
     oracle check; a stream drops it (count_distinct is unsupported in
     streaming aggregation — exactly why the sketch is the scale path).
     Output: (window_start, exact_users, est_users)."""
     return (
-        df.groupBy(F.window(ts_col, width).alias("w"))
+        df.groupBy(F.window("ts", "6 hours").alias("w"))
         .agg(
-            F.count_distinct(key_col).cast("long").alias("exact_users"),
-            F.expr(f"hll_sketch_estimate(hll_sketch_agg({key_col}, {lg_k}))")
-            .cast("long")
-            .alias("est_users"),
+            F.count_distinct("user_id").cast("long").alias("exact_users"),
+            F.expr(_USERS_SKETCH).cast("long").alias("est_users"),
         )
         .select(F.col("w.start").alias("window_start"), "exact_users", "est_users")
     )
 
 
-def windowed_distinct_sketch_stream(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "6 hours",
-    key_col: str = "user_id",
-    lg_k: int = 12,
-) -> DataFrame:
+def windowed_distinct_sketch_stream(df: DataFrame) -> DataFrame:
     """The streaming face of ``windowed_distinct_sketch``: sketch only
     (no exact count — count_distinct is not a streaming aggregate)."""
     return (
-        df.groupBy(F.window(ts_col, width).alias("w"))
+        df.groupBy(F.window("ts", "6 hours").alias("w"))
         .agg(
-            F.expr(f"hll_sketch_estimate(hll_sketch_agg({key_col}, {lg_k}))")
-            .cast("long")
-            .alias("est_users"),
+            F.expr(_USERS_SKETCH).cast("long").alias("est_users"),
         )
         .select(F.col("w.start").alias("window_start"), "est_users")
     )

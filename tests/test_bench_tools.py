@@ -520,7 +520,7 @@ def test_local_dir_sweep_is_locked_and_age_gated(tmp_path):
     fresh = root / "starting-session-dir"
     fresh.mkdir()
 
-    _sweep_stale_local_dir(str(root), min_age_sec=120.0)
+    _sweep_stale_local_dir(str(root))
     assert not old.exists(), "stale orphan should be reclaimed"
     assert fresh.exists(), "young dir (concurrent session) must survive"
     assert not os.path.exists(str(root) + ".sweeplock"), "lock released"
@@ -530,7 +530,7 @@ def test_local_dir_sweep_is_locked_and_age_gated(tmp_path):
     os.utime(old, (0, 0))
     with open(str(root) + ".sweeplock", "w"):
         pass
-    _sweep_stale_local_dir(str(root), min_age_sec=120.0)
+    _sweep_stale_local_dir(str(root))
     assert old.exists(), "sweep must be a no-op while the lock is held"
     os.unlink(str(root) + ".sweeplock")
 
@@ -555,6 +555,88 @@ def test_package_env_vars_are_deployment_knobs_only():
         "SPARK_GRAFT_DRIVER_MEM",
         "SPARK_GRAFT_CHECKPOINT",
     }
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    """A defaulted parameter that no caller ever passes has one value in
+    use, so it is a constant in disguise: every value it could take
+    doubles the configurations tests would have to cover, and the code
+    only its other values reach is dead. Each defaulted parameter of each
+    function in the package must be passed, by keyword or position, in at
+    least one call in the package, ``tools/``, ``perfbench/``, ``tests/``,
+    ``bench.py`` or ``__spark_entry__.py``. Calls match by function name,
+    so a same-named function elsewhere can only hide a finding, never
+    invent one."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    # module:function.param -> why the parameter stays settable
+    allowed = {
+        "session:get_spark.master": "deployment address of the cluster",
+    }
+
+    def called_name(call: ast.Call) -> str | None:
+        f = call.func
+        if isinstance(f, ast.Name):
+            return f.id
+        return f.attr if isinstance(f, ast.Attribute) else None
+
+    passed: dict[str, list[tuple[int, set[str], bool, bool]]] = {}
+    callers = [root / "bench.py", root / "__spark_entry__.py"] + [
+        p
+        for d in ("datamodel_clinicaldata_spark", "tools", "perfbench", "tests")
+        for p in (root / d).rglob("*.py")
+    ]
+    for src in callers:
+        for node in ast.walk(ast.parse(src.read_text())):
+            if isinstance(node, ast.Call) and called_name(node):
+                starred = [i for i, a in enumerate(node.args) if isinstance(a, ast.Starred)]
+                n_pos = starred[0] if starred else len(node.args)
+                kws = {k.arg for k in node.keywords if k.arg}
+                passed.setdefault(called_name(node), []).append(
+                    (n_pos, kws, bool(starred), any(k.arg is None for k in node.keywords))
+                )
+
+    def defs(tree: ast.AST, in_class: bool = False):
+        for node in ast.iter_child_nodes(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield node, in_class
+                yield from defs(node)
+            else:
+                yield from defs(node, in_class or isinstance(node, ast.ClassDef))
+
+    pkg = root / "datamodel_clinicaldata_spark"
+    never_set = []
+    for src in sorted(pkg.rglob("*.py")):
+        module = ".".join(src.relative_to(pkg).with_suffix("").parts)
+        for fn, in_class in defs(ast.parse(src.read_text())):
+            pos = fn.args.posonlyargs + fn.args.args
+            skip = 1 if in_class and pos and pos[0].arg in ("self", "cls") else 0
+            defaulted = [
+                (p.arg, i - skip)
+                for i, p in enumerate(pos)
+                if i >= len(pos) - len(fn.args.defaults)
+            ] + [
+                (p.arg, None)
+                for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if d is not None
+            ]
+            for name, index in defaulted:
+                if any(
+                    name in kws
+                    or splat_kw
+                    or (index is not None and (index < n_pos or splat_pos))
+                    for n_pos, kws, splat_pos, splat_kw in passed.get(fn.name, [])
+                ):
+                    continue
+                key = f"{module}:{fn.name}.{name}"
+                if key not in allowed:
+                    never_set.append(key)
+    assert not never_set, (
+        f"{len(never_set)} defaulted parameters are never set by any caller; "
+        "make each a constant: " + ", ".join(never_set)
+    )
 
 
 def test_host_noise_gate_floor_and_quiet(monkeypatch):

@@ -31,7 +31,7 @@ def docs_df(spark):
 
 
 def test_exact_dedup_groups(spark, docs_df):
-    rows = {r["keep_id"]: r["n_copies"] for r in exact_dedup_groups(docs_df, "text", "doc_id").collect()}
+    rows = {r["keep_id"]: r["n_copies"] for r in exact_dedup_groups(docs_df).collect()}
     assert rows[1] == 2  # docs 1 and 2 collapse, min id kept
     assert rows[3] == 1 and rows[4] == 1 and rows[5] == 1
     assert 2 not in rows
@@ -40,7 +40,7 @@ def test_exact_dedup_groups(spark, docs_df):
 def test_ngram_jaccard_exact_pairs(spark, docs_df):
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs_df, "text", "doc_id", k=3, threshold=0.3).collect()
+        for r in ngram_jaccard_pairs(docs_df, threshold=0.3).collect()
     }
     assert got[(1, 2)] == pytest.approx(1.0)  # identical
     # doc 3 differs in 1 of 13 tokens → 8 of 11 shingles shared with 1/2:
@@ -55,13 +55,11 @@ def test_minhash_lsh_matches_exact(spark, docs_df):
     and candidates are exact-verified — so LSH output == exact output."""
     exact = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs_df, "text", "doc_id", k=3, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(docs_df, threshold=0.5).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(
-            docs_df, "text", "doc_id", k=3, num_hashes=128, bands=64, threshold=0.5
-        ).collect()
+        for r in minhash_lsh_pairs(docs_df, num_hashes=128, bands=64).collect()
     }
     assert lsh == exact
     assert (1, 2) in lsh and (1, 3) in lsh
@@ -70,7 +68,7 @@ def test_minhash_lsh_matches_exact(spark, docs_df):
 def test_simhash_bands(spark, docs_df):
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_band_pairs(docs_df, "text", "doc_id", max_hamming=3).collect()
+        for r in simhash_band_pairs(docs_df).collect()
     }
     assert pairs[(1, 2)] == 0  # identical docs: identical simhash
     # unrelated docs must not appear at hamming ≤ 3
@@ -84,15 +82,11 @@ def test_minhash_lsh_on_testdata(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
     exact = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(
-            d, "text", "doc_id", k=3, threshold=0.5, max_postings=10_000
-        ).collect()
+        for r in ngram_jaccard_pairs(d, threshold=0.5, max_postings=10_000).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(
-            d, "text", "doc_id", k=3, num_hashes=128, bands=64, threshold=0.5
-        ).collect()
+        for r in minhash_lsh_pairs(d, num_hashes=128, bands=64).collect()
     }
     assert lsh == exact
 
@@ -196,9 +190,7 @@ def test_substring_span_stats(spark):
     ]
     out = {
         r["doc_id"]: r
-        for r in substring_span_stats(
-            spark.createDataFrame(rows), "text", "doc_id", k=5
-        ).collect()
+        for r in substring_span_stats(spark.createDataFrame(rows)).collect()
     }
     assert set(out) == {1, 2, 3}
     # 8 tokens → 4 windows each; only the shared prefix window duplicates
@@ -224,15 +216,11 @@ def test_prefix_filter_matches_inverted_index(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
     full = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(
-            d, "text", "doc_id", k=3, threshold=0.5, max_postings=10_000
-        ).collect()
+        for r in ngram_jaccard_pairs(d, threshold=0.5, max_postings=10_000).collect()
     }
     pref = {
         (r["id_a"], r["id_b"])
-        for r in prefix_filtered_jaccard_pairs(
-            d, "text", "doc_id", k=3, threshold=0.5
-        ).collect()
+        for r in prefix_filtered_jaccard_pairs(d).collect()
     }
     assert pref == full
 
@@ -260,12 +248,10 @@ def test_containment_catches_subset_dup(spark):
     )
     cont = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in ngram_containment_pairs(
-            df, "text", "doc_id", k=3, threshold=0.8
-        ).collect()
+        for r in ngram_containment_pairs(df).collect()
     }
     assert cont.get((1, 2)) == 1.0  # every short-doc shingle is in the long doc
-    jac = ngram_jaccard_pairs(df, "text", "doc_id", k=3, threshold=0.8).collect()
+    jac = ngram_jaccard_pairs(df, threshold=0.8).collect()
     assert not jac  # union-diluted similarity misses the subset dup
 
 

@@ -41,7 +41,7 @@ def test_media_schema_and_meta(media_df):
 def test_byte_histogram_exact(media_df):
     rows = {
         (r["media_id"], r["bin"]): r["n"]
-        for r in byte_histogram(media_df, bins=64).collect()
+        for r in byte_histogram(media_df).collect()
     }
     # 'a'=97,'b'=98,'c'=99 → bin 24; 'd'=100 → bin 25
     assert rows[(1, 24)] == 300
@@ -61,7 +61,7 @@ def test_frame_sample_cardinality_and_digests(media_df):
 
 
 def test_audio_rms_windows_exact(media_df):
-    rows = [r for r in audio_rms_windows(media_df, window=256).collect() if r["media_id"] == 1]
+    rows = [r for r in audio_rms_windows(media_df).collect() if r["media_id"] == 1]
     assert sorted(r["window_idx"] for r in rows) == [0, 1]
     w0 = next(r for r in rows if r["window_idx"] == 0)
     assert w0["n_samples"] == 256

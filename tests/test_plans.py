@@ -545,17 +545,15 @@ def test_postings_reduce_width_widens_at_scale(spark):
             F.col("id").cast("string"),
         ).alias("text"),
     )
-    wide = ngram_jaccard_pairs(docs, "text", "doc_id", n_rows_est=10_000_000)
+    wide = ngram_jaccard_pairs(docs, n_rows_est=10_000_000)
     plan = wide._jdf.queryExecution().optimizedPlan().toString()
     # width = min(512, max(default, 10M // 25k)) = 400
     assert "RepartitionByExpression" in plan and ", 400" in plan
-    small = ngram_jaccard_pairs(docs, "text", "doc_id", n_rows_est=100)
+    small = ngram_jaccard_pairs(docs, n_rows_est=100)
     plan_small = small._jdf.queryExecution().optimizedPlan().toString()
     assert ", 400" not in plan_small
 
-    wide2 = prefix_filtered_jaccard_pairs(
-        docs, "text", "doc_id", n_rows_est=10_000_000
-    )
+    wide2 = prefix_filtered_jaccard_pairs(docs, n_rows_est=10_000_000)
     plan2 = wide2._jdf.queryExecution().optimizedPlan().toString()
     assert "RepartitionByExpression" in plan2 and ", 400" in plan2
 
@@ -574,12 +572,10 @@ def test_winnowing_operator_width_semantics_stable(spark):
     )
     narrow = sorted(
         (r.id_a, r.id_b, r.n_shared)
-        for r in winnowing_pairs(docs, "text", "doc_id", n_rows_est=30).collect()
+        for r in winnowing_pairs(docs, n_rows_est=30).collect()
     )
     wide = sorted(
         (r.id_a, r.id_b, r.n_shared)
-        for r in winnowing_pairs(
-            docs, "text", "doc_id", n_rows_est=50_000_000
-        ).collect()
+        for r in winnowing_pairs(docs, n_rows_est=50_000_000).collect()
     )
     assert narrow == wide and len(narrow) > 0

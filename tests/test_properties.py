@@ -180,9 +180,7 @@ def test_greedy_packing_property(spark, items):
     budget = 500
     rows = [(i, src, n) for i, (src, n) in enumerate(items)]
     df = spark.createDataFrame(rows, "doc_id long, source string, n_tokens long")
-    out = greedy_pack_bins(
-        df, size_col="n_tokens", order_col="doc_id", group_col="source", budget=budget
-    ).collect()
+    out = greedy_pack_bins(df, budget=budget).collect()
     assert len(out) == len(rows)
     assert {r["doc_id"] for r in out} == {r[0] for r in rows}
     per_group: dict[str, dict[int, list[int]]] = {}
@@ -282,7 +280,7 @@ def test_length_bucket_batching_property(spark, lengths):
 
     rows = [(i, n) for i, n in enumerate(lengths)]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    out = length_bucket_batches(df, "n_tokens", "doc_id").collect()
+    out = length_bucket_batches(df).collect()
     bsize = {0: 64, 1: 32, 2: 16, 3: 8, 4: 4}
     assert sum(r["n_docs"] for r in out) == len(rows)
     for r in out:

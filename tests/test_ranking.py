@@ -356,7 +356,7 @@ def test_binned_overlap_join_matches_naive(spark):
         Row(k=1, ib=5, sb=1000, eb=2000), # no partner
     ]
     L, R = spark.createDataFrame(A), spark.createDataFrame(B)
-    got = binned_overlap_join(L, R, "k", "sa", "ea", "sb", "eb", bin_width_us=W)
+    got = binned_overlap_join(L, R, "k", bin_width_us=W)
     naive = L.filter("ea > sa").join(
         R, (L.k == R.k) & (L.sa < R.eb) & (R.sb < L.ea)
     ).drop(R.k)

@@ -99,7 +99,7 @@ def test_kmeans_refine_shapes_and_recall(spark, sf_dir):
     }
     refined_ivf = {
         (r["query_id"], r["vec_id"])
-        for r in ivf_topk(e, queries, k=10, n_centroids=16, nprobe=8, refine_iters=1).collect()
+        for r in ivf_topk(e, queries, nprobe=8, refine_iters=1).collect()
     }
     assert len(refined_ivf & exact) / len(exact) >= 0.5
 
@@ -119,7 +119,7 @@ def test_ivf_topk_recall(spark, sf_dir):
     }
     approx = {
         (r["query_id"], r["vec_id"])
-        for r in ivf_topk(e, queries, k=10, n_centroids=16, nprobe=8).collect()
+        for r in ivf_topk(e, queries, nprobe=8).collect()
     }
     assert len(approx & exact) / len(exact) >= 0.5
 
@@ -229,9 +229,7 @@ def test_projection_rerank_recall(spark, sf_dir):
     exact_rows = cosine_topk_bruteforce(e, queries, k=10).collect()
     exact = {(r["query_id"], r["vec_id"]) for r in exact_rows}
     exact_sim = {(r["query_id"], r["vec_id"]): r["cos_sim"] for r in exact_rows}
-    approx_rows = projection_topk_rerank(
-        e, queries, k=10, m=200, proj_dim=32
-    ).collect()
+    approx_rows = projection_topk_rerank(e, queries).collect()
     approx = {(r["query_id"], r["vec_id"]) for r in approx_rows}
     assert len(approx & exact) / len(exact) >= 0.5
     for r in approx_rows:

@@ -33,8 +33,8 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):
     c = read_table(spark, sf_dir, "customer")
     o = read_table(spark, sf_dir, "orders")
-    write_bucketed(c, "c_bkt", "c_custkey", num_buckets=8, sort_by="c_custkey")
-    write_bucketed(o, "o_bkt", "o_custkey", num_buckets=8, sort_by="o_custkey")
+    write_bucketed(c, "c_bkt", "c_custkey", sort_by="c_custkey")
+    write_bucketed(o, "o_bkt", "o_custkey", sort_by="o_custkey")
 
     cb, ob = spark.table("c_bkt"), spark.table("o_bkt")
     joined = cb.join(ob, cb["c_custkey"] == ob["o_custkey"]).select(
@@ -146,14 +146,17 @@ def test_compact_small_files(spark, sf_dir, tmp_path):
     import glob
 
     from datamodel_clinicaldata_spark.sources.readers import read_table
-    from datamodel_clinicaldata_spark.sources.writers import compact_small_files
+    from datamodel_clinicaldata_spark.sources.writers import (
+        TARGET_ROWS_PER_FILE,
+        compact_small_files,
+    )
 
     c = read_table(spark, sf_dir, "customer").repartition(64)
     path = str(tmp_path / "customer_compacted")
     n_rows = c.count()
-    compact_small_files(c, path, target_rows_per_file=1000)
+    compact_small_files(c, path)
     files = glob.glob(path + "/*.parquet")
-    assert len(files) == max(1, -(-n_rows // 1000))
+    assert len(files) == max(1, -(-n_rows // TARGET_ROWS_PER_FILE))
     assert spark.read.parquet(path).count() == n_rows
 
 
@@ -286,10 +289,7 @@ def test_zorder_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
     ).collect()[0]
 
     zdir, rdir = str(tmp_path / "z"), str(tmp_path / "r")
-    write_zordered(
-        e, zdir, ["user_id", "t_us"],
-        [(lo_u, hi_u), (lo_t, hi_t)], n_files=16,
-    )
+    write_zordered(e, zdir, ["user_id", "t_us"], [(lo_u, hi_u), (lo_t, hi_t)])
     e.repartition(16).write.parquet(rdir)  # round-robin: every file spans all
 
     # query box: middle eighth of each dimension

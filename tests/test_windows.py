@@ -226,7 +226,7 @@ def test_scd2_and_upsert_semantics(spark):
         ],
         "user_id long, ts timestamp, value double, event_type string",
     )
-    hist = scd2_history(ev, "user_id", "ts", ["value", "event_type"]).collect()
+    hist = scd2_history(ev).collect()
     by_key = {}
     for r in hist:
         by_key.setdefault(r["user_id"], []).append(r)

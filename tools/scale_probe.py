@@ -378,7 +378,7 @@ def probe_dedup(spark, n_docs: int, partitions: int) -> dict:
         n_planted = planted.count()
 
         t0 = time.time()
-        groups = exact_dedup_groups(docs, "text", "doc_id")
+        groups = exact_dedup_groups(docs)
         agg = groups.agg(
             F.count(F.lit(1)).alias("n_distinct"),
             F.sum("n_copies").alias("n_total"),
@@ -398,7 +398,7 @@ def probe_dedup(spark, n_docs: int, partitions: int) -> dict:
         t0 = time.time()
         banded = docs.select(
             "doc_id",
-            minhash_signature(F.col("text"), 3, num_hashes).alias("sig"),
+            minhash_signature(F.col("text"), num_hashes).alias("sig"),
         ).select(
             "doc_id",
             F.explode(
@@ -916,7 +916,7 @@ def probe_streaming(spark, rows: int, partitions: int) -> dict:
     stream = spark.readStream.format("synthetic_events")
     for k, v in opts.items():
         stream = stream.option(k, v)
-    agg = tumbling_event_counts(with_ts(stream.load()), ts_col="ts")
+    agg = tumbling_event_counts(with_ts(stream.load()))
     # default trigger + processAllAvailable, NOT availableNow: the
     # engine resolves availableNow from ONE latestOffset poll, and this
     # source paces itself by advancing batch_rows per poll — availableNow
@@ -937,7 +937,7 @@ def probe_streaming(spark, rows: int, partitions: int) -> dict:
     for k, v in opts.items():
         batch = batch.option(k, v)
     want = sorted(
-        map(tuple, tumbling_event_counts(with_ts(batch.load()), ts_col="ts").collect())
+        map(tuple, tumbling_event_counts(with_ts(batch.load())).collect())
     )
     n_streamed = sum(r[2] for r in got)
     # Exactness gate: keys + n_events compare EXACTLY; total_value (a
@@ -1103,9 +1103,7 @@ def probe_dedup_engine_ops(
         # their entire fingerprint set (~dozens >= min_shared=3).
         if sections is None or "winnowing" in sections:
             t0 = time.time()
-            wp = winnowing_pairs(
-                docs, "text", "doc_id", k=8, w=4, max_postings=5000, min_shared=3
-            )
+            wp = winnowing_pairs(docs, k=8, w=4)
             n_wp = wp.persist(StorageLevel.MEMORY_AND_DISK).count()
             wmiss = planted.join(wp, ["id_a", "id_b"], "left_anti").count()
             dt = time.time() - t0
@@ -1121,16 +1119,7 @@ def probe_dedup_engine_ops(
         # verification): clones agree on every band and verify at J=1.0.
         if sections is None or "minhash" in sections:
             t0 = time.time()
-            mh = minhash_lsh_pairs(
-                docs,
-                "text",
-                "doc_id",
-                k=3,
-                num_hashes=32,
-                bands=8,
-                threshold=0.5,
-                n_rows_est=n_docs,
-            )
+            mh = minhash_lsh_pairs(docs, num_hashes=32, bands=8, n_rows_est=n_docs)
             n_mh = mh.persist(StorageLevel.MEMORY_AND_DISK).count()
             mmiss = planted.join(mh, ["id_a", "id_b"], "left_anti").count()
             dt = time.time() - t0
@@ -1146,9 +1135,7 @@ def probe_dedup_engine_ops(
         # sites): clones share all shingles → J=1.0 ≥ 0.9.
         if sections is None or "ngram" in sections:
             t0 = time.time()
-            nj = ngram_jaccard_pairs(
-                docs, "text", "doc_id", k=3, threshold=0.9, n_rows_est=n_docs
-            )
+            nj = ngram_jaccard_pairs(docs, threshold=0.9, n_rows_est=n_docs)
             n_nj = nj.persist(StorageLevel.MEMORY_AND_DISK).count()
             nmiss = planted.join(nj, ["id_a", "id_b"], "left_anti").count()
             dt = time.time() - t0

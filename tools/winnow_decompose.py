@@ -136,9 +136,7 @@ def main() -> None:
     sc.setJobDescription("winnow-decompose: whole operator")
     t0 = time.time()
     noop(
-        winnowing_pairs(
-            docs, "text", "doc_id", k=k, w=w, max_postings=5000, min_shared=3
-        )
+        winnowing_pairs(docs, k=k, w=w)
     )
     out["end_to_end_sec"] = round(time.time() - t0, 2)
     print(f"end to end: {out['end_to_end_sec']}s", flush=True)
