@@ -147,7 +147,7 @@ def _local_union_find(sym: DataFrame) -> DataFrame:
     return (
         sym.withColumn("__g", F.lit(0))
         .groupBy("__g")
-        .applyInPandas(lambda pdf: uf(pdf), out_schema)
+        .applyInPandas(uf, out_schema)
     )
 
 
@@ -509,5 +509,5 @@ def _local_pagerank(sym: DataFrame, iters: int) -> DataFrame:
     return truncate_lineage(
         sym.withColumn("__g", F.lit(0))
         .groupBy("__g")
-        .applyInPandas(lambda pdf: pr(pdf), f"node {t}, pr_e12 long")
+        .applyInPandas(pr, f"node {t}, pr_e12 long")
     )

@@ -762,7 +762,10 @@ def assign_cells(
       gap ≫ ulp).
 
     Returns the input columns plus ``cid`` (int cell id)."""
+    from collections.abc import Iterator
+
     import numpy as np
+    import pandas as pd
 
     if impl == "expr":
         # Hoisted-norm assignment (see nearest_scored): row self-dot as a
@@ -787,7 +790,7 @@ def assign_cells(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", cid int"
 
-    def assign(batches):
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             vn = np.linalg.norm(V, axis=1, keepdims=True)

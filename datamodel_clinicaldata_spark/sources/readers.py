@@ -58,8 +58,7 @@ def load_clinical_tables(
 ) -> dict[str, DataFrame]:
     """Load the three clinical base tables (S1/S2 ×3)."""
     if fmt == "parquet":
-        paths = {t: os.path.join(path_to_data, f"{t}.parquet") for t in CLINICAL_SCHEMAS}
-        return {t: spark.read.schema(footer_schema(spark, p)).parquet(p) for t, p in paths.items()}
+        return {t: read_table(spark, path_to_data, t) for t in CLINICAL_SCHEMAS}
     return {t: read_clinical_csv(spark, path_to_data, t) for t in CLINICAL_SCHEMAS}
 
 
@@ -86,7 +85,7 @@ def _normalize_event_ts(df: DataFrame, col: str) -> DataFrame:
 def file_listing(spark: SparkSession, paths: list[str]) -> tuple:
     """Every file under ``paths`` (files or directories) with its length and
     modification time, read through the Hadoop ``FileSystem``: the snapshot
-    a footer schema or a persisted model was built from."""
+    a memoized frame or a persisted model was built from."""
     conf = spark._jsc.hadoopConfiguration()
     hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
     out = []
@@ -103,56 +102,73 @@ def file_listing(spark: SparkSession, paths: list[str]) -> tuple:
     return tuple(sorted(out))
 
 
-# (session UUID, path) -> (file listing, schema Spark inferred from the footer)
-_FOOTER_SCHEMAS: dict[tuple[str, str], tuple[tuple, T.StructType]] = {}
+# (session UUID, path) -> (file listing, schema Spark inferred from the
+# footer, the frame ``read_table`` returns)
+_FRAMES: dict[tuple[str, str], tuple[tuple, T.StructType, DataFrame]] = {}
+
+
+def _resolved(spark: SparkSession, path: str) -> tuple[T.StructType, DataFrame]:
+    """``path``'s footer schema and its table frame (``events.ts``
+    normalized), resolved once per path per session and reused while the
+    path's file listing is unchanged.
+
+    Resolving infers the schema from the footer, which costs a job, and
+    analyzes the relation; a hit does neither and returns the same frame
+    object. A memo, not a pinned ``StructType``: a pinned schema over a
+    file whose column was renamed reads silent nulls, and a pinned
+    ``timestamp_ntz`` over a TIMESTAMP(NANOS) drop fails to read. The memo
+    holds what the footer says now, under this session's conf
+    (``nanosAsLong``, NTZ inference), so a new session or a rewritten file
+    resolves again. Two racing first reads both resolve; either result
+    reads the same rows."""
+    key = (spark._jsparkSession.sessionUUID(), path)
+    listing = file_listing(spark, [path])
+    hit = _FRAMES.get(key)
+    if hit is not None and hit[0] == listing:
+        return hit[1], hit[2]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    for col in _EVENT_TS_COLUMNS.get(os.path.basename(path).removesuffix(".parquet"), ()):
+        df = _normalize_event_ts(df, col)
+    _FRAMES[key] = (listing, schema, df)
+    return schema, df
 
 
 def footer_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The schema Spark infers from ``path``'s parquet footer, which costs a
-    job; it is inferred once per path per session and reused while the
-    path's file listing is unchanged.
-
-    A memo, not a pinned ``StructType``: a pinned schema over a file whose
-    column was renamed reads silent nulls, and a pinned ``timestamp_ntz``
-    over a TIMESTAMP(NANOS) drop fails to read. The memo holds what the
-    footer says now, under this session's conf (``nanosAsLong``, NTZ
-    inference), so a new session or a rewritten file infers again. Two
-    racing first reads both infer; either result is the same schema."""
-    key = (spark._jsparkSession.sessionUUID(), path)
-    listing = file_listing(spark, [path])
-    hit = _FOOTER_SCHEMAS.get(key)
-    if hit is not None and hit[0] == listing:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _FOOTER_SCHEMAS[key] = (listing, schema)
-    return schema
+    """The schema Spark infers from ``path``'s parquet footer, before any
+    ``events.ts`` normalization: what a streaming reader of the same file
+    must pass to ``readStream.schema``. It comes from the frame memo
+    ``read_table`` uses, so a path is inferred once per session either
+    way."""
+    return _resolved(spark, path)[0]
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata parquet table.
 
-    Schema inference runs one job per path per session: later reads reuse
-    the footer schema (``footer_schema``) until the file's length or
-    modification time changes, or the session is new.
+    A path is resolved once per session: later reads return the identical
+    frame, with no schema-inference job and no new relation to analyze,
+    until the file's length or modification time changes or the session is
+    new. ``spark.catalog.clearCache()`` does not reset this; it only holds
+    resolved plans, not data. Two reads of one table are one frame, so a
+    self-join must alias each side (``df.alias("a").join(df.alias("b"),
+    ...)``), as for any DataFrame joined with itself.
 
     Self-sufficient on ANY session (not just ``session.get_spark()``):
     TIMESTAMP(NANOS) testdata is rejected outright by a vanilla
     SparkSession (PARQUET_TYPE_ILLEGAL). The legacy conf below is
     runtime-settable and idempotent. It is set ONLY for tables listed in
-    ``_EVENT_TS_COLUMNS`` — other reads never touch session state. For
-    those tables the conf does stay set on the session afterwards
-    (deliberately: the returned DataFrame is lazy, and Spark may consult
-    the conf again when the scan executes, so an eager set/restore could
-    flip it back mid-plan); any later TIMESTAMP(NANOS) parquet read on the
-    same session therefore also comes back as long.
+    ``_EVENT_TS_COLUMNS`` — other reads never touch session state — and on
+    every such read, a memo hit included. For those tables the conf does
+    stay set on the session afterwards (deliberately: the returned
+    DataFrame is lazy, and Spark may consult the conf again when the scan
+    executes, so an eager set/restore could flip it back mid-plan); any
+    later TIMESTAMP(NANOS) parquet read on the same session therefore also
+    comes back as long.
     """
     if name in _EVENT_TS_COLUMNS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(footer_schema(spark, path)).parquet(path)
-    for col in _EVENT_TS_COLUMNS.get(name, ()):
-        df = _normalize_event_ts(df, col)
-    return df
+    return _resolved(spark, os.path.join(sf_dir, f"{name}.parquet"))[1]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -130,7 +130,7 @@ def batch_user_profile(events: DataFrame) -> DataFrame:
     *check*, not the operator."""
     import pandas as pd  # noqa: F811 — local so the module stays importable without a session
 
-    def fold(pdf: pd.DataFrame):
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         n, total, ewma = _fold_profile(pdf, 0, 0.0, None)
         return pd.DataFrame(
             {

@@ -639,6 +639,46 @@ def test_every_defaulted_parameter_is_set_by_some_caller():
     )
 
 
+def test_every_pandas_function_is_fully_hinted():
+    """Each function handed to ``applyInPandas`` or ``mapInPandas`` is a
+    named function of the enclosing scope with the hints of its API:
+    ``pd.DataFrame -> pd.DataFrame`` for a grouped map,
+    ``Iterator[pd.DataFrame] -> Iterator[pd.DataFrame]`` for a map. Spark
+    infers a grouped map's eval type from them, and warns when they are
+    partial."""
+    import ast
+    from pathlib import Path
+
+    hints = {"applyInPandas": "pd.DataFrame", "mapInPandas": "Iterator[pd.DataFrame]"}
+    pkg = Path(__file__).resolve().parent.parent / "datamodel_clinicaldata_spark"
+    sites, bad = 0, []
+    for src in sorted(pkg.rglob("*.py")):
+        for scope in ast.walk(ast.parse(src.read_text())):
+            if not isinstance(scope, ast.FunctionDef):
+                continue
+            local = {n.name: n for n in scope.body if isinstance(n, ast.FunctionDef)}
+            for call in ast.walk(scope):
+                if not (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr in hints
+                ):
+                    continue
+                sites += 1
+                want = hints[call.func.attr]
+                arg = call.args[0]
+                fn = local.get(arg.id) if isinstance(arg, ast.Name) else None
+                site = f"{src.name}:{call.lineno}"
+                if fn is None:
+                    bad.append(f"{site} passes {ast.unparse(arg)}, not a local def")
+                    continue
+                got = [a.annotation for a in fn.args.args] + [fn.returns]
+                if any(a is None or ast.unparse(a) != want for a in got):
+                    bad.append(f"{site} {fn.name} is not hinted {want} -> {want}")
+    assert sites >= 16
+    assert not bad, bad
+
+
 def test_host_noise_gate_floor_and_quiet(monkeypatch):
     """_HostNoiseGate semantics: floor is a running MIN (calibrating in
     a noise burst must not permanently loosen the gate), quiet = within

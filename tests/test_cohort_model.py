@@ -10,6 +10,9 @@ import shutil
 import sys
 import threading
 
+import duckdb
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
@@ -62,6 +65,32 @@ def test_new_draw_filters_the_persisted_model(spark, sf_dir, duck):
     assert len(got) > 0
     where = " AND Age BETWEEN 16 AND 58 AND Gender = 'MACHINERY' AND ClinicID = 19"
     assert not compare(got, duck.sql(_flagship_oracle("week", where)).df())
+
+
+def test_standins_are_reused_until_a_table_is_rewritten(spark, sf_dir, tmp_path):
+    d = str(tmp_path)
+    tables = ("customer", "events", "orders")
+    for name in tables:
+        shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), d)
+    first = clinical_standins_from_testdata(spark, d)
+    again = clinical_standins_from_testdata(spark, d)
+    assert all(a is b for a, b in zip(first, again))
+    _standin_query(spark, d, cohort="week").collect()
+
+    path = os.path.join(d, "events.parquet")
+    t = pq.read_table(path)
+    i = t.column_names.index("value")
+    pq.write_table(t.set_column(i, "value", pc.add(t["value"], 10.0)), path)
+    rewritten = clinical_standins_from_testdata(spark, d)
+    assert not any(a is b for a, b in zip(first, rewritten))
+
+    con = duckdb.connect()
+    for name in tables:
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{os.path.join(d, name)}.parquet')")
+    got = _standin_query(spark, d, cohort="week").toPandas()
+    want = con.sql(_flagship_oracle("week")).df()
+    con.close()
+    assert not compare(got, want)
 
 
 def test_input_rewritten_in_place_is_not_served_stale(spark, clinical_dir, tmp_path):
