@@ -53,12 +53,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(da, db) / F.sqrt(dot(da, da) * dot(db, db))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    da, db = as_double(a), as_double(b)
-    diff = F.zip_with(da, db, lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def sign_bits(vec: Column, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH bucket id: one sign bit per plane, packed into
     a long. ``planes`` is a small driver-side constant (k ≤ 32 plates), so

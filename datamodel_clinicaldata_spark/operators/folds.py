@@ -1,4 +1,5 @@
-"""Guards for per-key array recurrences (VERDICT r7 #2).
+"""An exact fold for per-key array recurrences past the one-row bound
+(VERDICT r7 #2).
 
 The exact integer recurrences (``timeseries_ewma_fold``,
 ``timeseries_holt_smoothing``, ``events_window_funnel``) materialize each
@@ -9,17 +10,13 @@ chunked two-level fold would need. The measured bound
 (tools/scale_probe.py ``probe_hot_key_fold``): a 10⁷-point single-key
 series folds in ~97 s / ~400 MB as one task, linear in points,
 closed-form-exact; 4×10⁷ OOM'd the task outright (r12 200M-ladder run
-2). Past the bound there are two paths:
-
-- :func:`segmented_fold` (r13) — still EXACT: the ceiling is about
-  materializing the series as one row, not about the fold itself, so
-  the series is cut into bounded segment arrays and the accumulator is
-  THREADED through them sequentially (⌈len/S⌉ rounds; parallel across
-  keys, sequential across one key's segments — the truncation
-  constraint applied honestly).
-- :func:`cap_series` — flag-and-exclude for pipelines that would rather
-  route pathological keys than pay fold rounds; never silently
-  truncate, a partial series folds to a WRONG state.
+2). Past the bound, :func:`segmented_fold` (r13) is still EXACT: the
+ceiling is about materializing the series as one row, not about the fold
+itself, so the series is cut into bounded segment arrays and the
+accumulator is THREADED through them sequentially (⌈len/S⌉ rounds;
+parallel across keys, sequential across one key's segments — the
+truncation constraint applied honestly). Never truncate a series
+instead: a partial series folds to a WRONG state.
 """
 
 from __future__ import annotations
@@ -28,34 +25,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# ~97 s / ~400 MB per key at 1e7 (measured); one order of headroom before
-# the row itself is the problem.
-DEFAULT_MAX_SERIES_POINTS = 10_000_000
-
-
-def cap_series(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    max_points: int = DEFAULT_MAX_SERIES_POINTS,
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``df`` into (rows of keys within ``max_points``, oversized
-    keys with their counts).
-
-    The count pass shuffles only (key, partial count) — map-side combine
-    makes it cheap relative to the fold it protects — and the oversized
-    set is tiny by construction (pathological keys), so the exclusion is
-    a broadcast anti-join: no second full shuffle of the fact rows.
-
-    Callers fold the first frame and report/route the second; excluded
-    keys are never folded at all, because a truncated series would fold
-    to a silently wrong state.
-    """
-    keys = list(key_cols)
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).cast("long").alias("n_points"))
-    oversized = counts.filter(F.col("n_points") > max_points)
-    bounded = df.join(F.broadcast(oversized.select(*keys)), keys, "left_anti")
-    return bounded, oversized
 
 
 def segmented_fold(
@@ -98,8 +67,7 @@ def segmented_fold(
     Cost note vs the monolithic fold: one extra shuffle (the rank
     window) plus one small (key, acc) join per round — the price of not
     holding the series as one row. Use the monolithic fold below the
-    single-array bound; this is the ≥2×10⁷-points path, replacing
-    :func:`cap_series` EXCLUSION with an exact answer."""
+    single-array bound; this is the ≥2×10⁷-points path."""
     from pyspark.sql import Window
 
     from datamodel_clinicaldata_spark.operators.graph import truncate_lineage

@@ -12,7 +12,8 @@ shards/bins. Two strategies:
   adding the next doc would exceed the budget). Needs running *resettable*
   state, which no SQL window frame expresses — implemented per-group with
   ``applyInPandas`` (Arrow-batched; one shuffle on the group key, then
-  O(group) python per group). Registered rows-only.
+  O(group) python per group). Its oracle replays the fold as a recursive
+  CTE.
 
 Scale notes: both shapes shuffle ONLY (key, doc_id, n_tokens) — never the
 text payload; bin assignment joins back to the corpus by doc_id if the

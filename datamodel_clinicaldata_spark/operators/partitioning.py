@@ -196,46 +196,3 @@ def source_rows_for_width(df: DataFrame, n_rows_est: int | None = None) -> int:
         if total is not None and total < _SMALL_INPUT_BYTES:
             return 0
     return df.count()
-
-
-# Bits per column of a Z-order key.
-_ZORDER_BITS = 16
-
-
-def zorder_key(cols: list, ranges: list[tuple[float, float]]):
-    """Z-order (Morton) key over N numeric columns: each column is
-    min/max-normalized into 2^16 levels and the level bits are
-    INTERLEAVED, so records close in EVERY dimension get close keys —
-    sorting files by this key gives parquet footers tight min/max boxes
-    in all dimensions at once, where a lexicographic sort only prunes
-    its leading column. ``ranges`` are the (min, max) per column —
-    explicit, because at 100 TB you take them from table statistics, not
-    a scan; N·16 must stay ≤ 62.
-
-    Pure JVM-side bit arithmetic (shiftright/and/or per level — no UDF);
-    the 16·N-term expression is built once at plan time."""
-    from pyspark.sql import functions as F
-
-    d = len(cols)
-    if d * _ZORDER_BITS > 62:
-        raise ValueError(f"{d} cols × {_ZORDER_BITS} bits exceeds the 62-bit budget")
-    levels = (1 << _ZORDER_BITS) - 1
-    scaled = []
-    for c, (lo, hi) in zip(cols, ranges):
-        c = F.col(c) if isinstance(c, str) else c
-        span = float(hi - lo) or 1.0
-        q = F.least(
-            F.lit(levels).cast("long"),
-            F.greatest(
-                F.lit(0).cast("long"),
-                F.floor((c.cast("double") - float(lo)) / span * levels).cast("long"),
-            ),
-        )
-        scaled.append(q)
-    z = F.lit(0).cast("long")
-    for b in range(_ZORDER_BITS):
-        for i, q in enumerate(scaled):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(q, b).bitwiseAND(F.lit(1)), b * d + i)
-            )
-    return z

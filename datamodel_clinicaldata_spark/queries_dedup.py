@@ -5,8 +5,8 @@ The MinHash-LSH path is also oracle-matched against the *exact* answer:
 with (num_hashes=128, bands=64, r=2) at threshold 0.5 the per-pair miss
 probability is (1 - j²)^64 ≤ 1e-8, and every candidate is verified with
 exact Jaccard, so LSH output == exact output on any realistic data.
-SimHash banding has no SQL twin (rows-only check; recall covered in
-tests/test_dedup.py).
+SimHash banding is oracle-matched by replaying its md5-prefix hash in
+DuckDB; its recall is covered in tests/test_dedup.py.
 """
 
 from __future__ import annotations

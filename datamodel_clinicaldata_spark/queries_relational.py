@@ -1101,8 +1101,9 @@ def agg_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sketch aggregates — the 100 TB path for cardinality / quantiles. At scale
 # exact distinct is a full shuffle of the key universe and exact quantiles
 # a global sort; HLL++ / KLL-style sketches are fixed-size, mergeable,
-# one-pass map-side state. Values are engine-specific (rows-only driver
-# check); error bounds vs the exact answers are pinned in tests.
+# one-pass map-side state. Sketch values are engine-specific, so each
+# query returns exact group figures beside flags that the sketch is within
+# its error bound; the bounds are also pinned in tests.
 # ---------------------------------------------------------------------------
 @register(
     "agg_approx_distinct_sketch",
@@ -3066,8 +3067,8 @@ def timeseries_ewma_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed rather than chunked away: the hot-key probe
     (tools/scale_probe.py probe_hot_key_fold) drives 10⁷ points on ONE
     key through this exact shape in ~97 s / ~400 MB with the closed-form
-    check green; keys beyond ~10⁷–10⁸ points need the
-    ``operators.folds.cap_series`` guard (flag-and-exclude) upstream."""
+    check green. No guard is wired: a key beyond ~10⁷–10⁸ points needs
+    the segmented shape of ``operators.folds.segmented_fold``."""
     e = read_table(spark, sf_dir, "events")
     rows = e.select(
         "user_id",
@@ -3673,7 +3674,7 @@ def timeseries_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of (key, t, v); O(1) ACCUMULATOR but an O(points-per-key)
     sorted array row per series — same documented bound and hot-key
     probe as ``timeseries_ewma_fold`` (10⁷-point single key in ~97 s,
-    exact; ``operators.folds.cap_series`` guards beyond that)."""
+    exact; no guard is wired beyond that)."""
     e = read_table(spark, sf_dir, "events")
     rows = e.select(
         "user_id",
@@ -3771,7 +3772,7 @@ def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     event advances at most one stage. One shuffle of (user, t, stage);
     O(1) accumulator but an O(events-per-user) sorted array row per
     user — same documented bound and hot-key probe as the EWMA/Holt
-    folds (``operators.folds.cap_series`` guards pathological users).
+    folds (no guard is wired for pathological users).
     Oracle replays the greedy as a recursive CTE
     (DuckDB's list_reduce both miscomputes struct accumulators and
     cannot seed with a zero element — see the Holt oracle)."""

@@ -1,5 +1,6 @@
 """Query registry — every implemented operator exposed as a named query
-with a DuckDB-oracle SQL twin (driver t2 contract, ``__spark_entry__.py``).
+with a DuckDB-oracle SQL twin (driver t2 contract, ``__spark_entry__.py``,
+which serves both maps as they are, in registration order).
 
 Each entry: ``QUERIES[name]`` is ``(spark, sf_dir) -> DataFrame`` built with
 the engine's operators; ``ORACLE_SQL[name]`` is ANSI SQL DuckDB runs over
@@ -8,8 +9,11 @@ aligned on both sides because the driver sorts columns by name before
 value-hashing. Aggregates over doubles are ROUNDed identically on both
 sides to keep IEEE accumulation-order noise out of the hash.
 
-Non-SQL-expressible ops (MinHash-LSH banding, streaming) register a query
-with no oracle entry → driver records the weaker rows-only check.
+``register`` requires the oracle, so every query has one, ops with no
+direct SQL form included: a sequential fold is replayed as a recursive
+CTE, a hash banding with the same hash, and an approximate sketch reports
+exact figures beside error-bound flags. ``tests/test_oracle_clinical.py``
+checks every query against its oracle.
 """
 
 from __future__ import annotations
@@ -24,11 +28,10 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
+        ORACLE_SQL[name] = oracle
         return fn
 
     return deco
@@ -45,25 +48,3 @@ from datamodel_clinicaldata_spark import queries_streaming  # noqa: E402,F401
 from datamodel_clinicaldata_spark import queries_text  # noqa: E402,F401
 from datamodel_clinicaldata_spark import queries_tpch  # noqa: E402,F401
 from datamodel_clinicaldata_spark import queries_trainingdata  # noqa: E402,F401
-
-
-def interleaved_by_family(names: list[str]) -> list[str]:
-    """Round-robin the given query names across their registering modules.
-
-    Pure ordering helper — the registry itself stays in registration
-    order. A caller that samples only a prefix of the inventory (e.g. a
-    harness with a query cap) can use this so any prefix of length >=
-    #families covers every family. Computed lazily from the CURRENT
-    registry state, so queries registered after import are included.
-    """
-    by_family: dict[str, list[str]] = {}
-    for name in names:
-        by_family.setdefault(QUERIES[name].__module__, []).append(name)
-    order: list[str] = []
-    queues = list(by_family.values())
-    while queues:
-        for q in list(queues):
-            order.append(q.pop(0))
-            if not q:
-                queues.remove(q)
-    return order

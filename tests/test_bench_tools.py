@@ -742,3 +742,25 @@ def test_wait_quiet_charges_only_real_waiting(monkeypatch):
         assert gate.wait_quiet()
     assert gate.waited_sec == 0.0
     assert not gate.budget_exhausted()
+
+
+def test_entry_queries_are_the_registry(monkeypatch):
+    """The driver adapter serves the registry as it is: every query in
+    registration order, every oracle, and no subprocess on the way."""
+    import subprocess
+
+    import __spark_entry__
+    from datamodel_clinicaldata_spark.registry import ORACLE_SQL, QUERIES
+
+    spawned = []
+
+    def refuse(*args, **kwargs):
+        spawned.append(args)
+        raise AssertionError("queries() started a subprocess")
+
+    monkeypatch.setattr(subprocess, "run", refuse)
+    monkeypatch.setattr(subprocess, "Popen", refuse)
+    assert list(__spark_entry__.queries()) == list(QUERIES)
+    assert not spawned
+    assert __spark_entry__.oracle_sql() == ORACLE_SQL
+    assert set(QUERIES) == set(ORACLE_SQL)

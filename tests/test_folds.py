@@ -1,61 +1,7 @@
-"""cap_series guard (operators/folds.py): hot keys are flagged and
-excluded whole — never silently truncated into a wrong fold state."""
+"""segmented_fold (operators/folds.py): the exact per-key ordered fold
+for series past the single-array bound."""
 
 from pyspark.sql import functions as F
-
-from datamodel_clinicaldata_spark.operators.folds import cap_series
-
-
-def test_cap_series_splits_hot_key(spark):
-    rows = [("hot", i) for i in range(50)] + [("a", 1), ("a", 2), ("b", 7)]
-    df = spark.createDataFrame(rows, "k string, v long")
-    bounded, oversized = cap_series(df, ["k"], max_points=10)
-    assert bounded.filter(F.col("k") == "hot").count() == 0
-    assert bounded.count() == 3  # a x2 + b x1, untouched
-    over = {r["k"]: r["n_points"] for r in oversized.collect()}
-    assert over == {"hot": 50}
-
-
-def test_cap_series_all_within_bound_is_identity(spark):
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long")
-    bounded, oversized = cap_series(df, ["k"], max_points=10)
-    assert oversized.count() == 0
-    assert sorted(r["k"] for r in bounded.collect()) == ["a", "b"]
-
-
-def test_cap_series_fold_on_bounded_matches_unguarded(spark):
-    """The guard must not perturb surviving keys' fold results."""
-    rows = [("u", t, 1_000_000) for t in range(5)] + [
-        ("hot", t, 2_000_000) for t in range(20)
-    ]
-    df = spark.createDataFrame(rows, "k string, t long, v long")
-
-    def fold(frame):
-        per = frame.groupBy("k").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("t"), F.col("v")))
-            ).alias("ps")
-        )
-
-        def step(acc, p):
-            nxt = 8 * acc + 2 * p["v"]
-            m = ((nxt % 10) + 10) % 10
-            return F.when(acc.isNull(), p["v"]).otherwise(
-                ((nxt - m).cast("decimal(38,0)") / F.lit(10)).cast("long")
-            )
-
-        return per.select(
-            "k",
-            F.aggregate(F.col("ps"), F.lit(None).cast("long"), step).alias(
-                "ewma"
-            ),
-        )
-
-    bounded, _ = cap_series(df, ["k"], max_points=10)
-    guarded = {r["k"]: r["ewma"] for r in fold(bounded).collect()}
-    unguarded = {r["k"]: r["ewma"] for r in fold(df).collect()}
-    assert guarded == {"u": unguarded["u"]}  # constant series: exactly v
-    assert guarded["u"] == 1_000_000
 
 
 def _idiv10(x):

@@ -258,14 +258,11 @@ def test_mixture_schedule_broadcast_totals(spark, sf_dir):
 def test_registered_surface_window_audit(spark, sf_dir):
     """Verdict r5 #2: NO registered query may plan an unpartitioned
     window over unbounded input. tools/window_audit.py sweeps every
-    queries() entry; bounded exceptions (rank over ≤k TakeOrdered
+    registered query; bounded exceptions (rank over ≤k TakeOrdered
     survivors, ordered_prefix's ≤n_partitions offsets frame,
     calendar-bounded rollups) are allowlisted there with justifications,
     and adaptive operators whose construction runs jobs are pinned by
     their own tests instead."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.window_audit import sweep
 
     bad = sweep(spark, sf_dir)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from datamodel_clinicaldata_spark.functions.vectors import cosine, dot, l2_distance
+from datamodel_clinicaldata_spark.functions.vectors import cosine, dot
 from datamodel_clinicaldata_spark.operators.similarity import (
     cosine_neardup_pairs,
     cosine_topk_bruteforce,
@@ -24,11 +24,9 @@ def test_vector_math(spark):
     r = df.select(
         dot(F.col("a"), F.col("b")).alias("d"),
         cosine(F.col("a"), F.col("b")).alias("c"),
-        l2_distance(F.col("a"), F.col("b")).alias("l2"),
     ).first()
     assert r["d"] == pytest.approx(4.0)
     assert r["c"] == pytest.approx(4.0 / (3.0 * math.sqrt(5.0)))
-    assert r["l2"] == pytest.approx(math.sqrt(1 + 4 + 1))
 
 
 def test_bruteforce_topk_ordering(spark):

@@ -1,17 +1,14 @@
-"""Sink/layout tests: partitioned writes prune at read time, bucketed
-tables join shuffle-free, salted joins reproduce plain-join results."""
+"""Sink/layout tests: partitioned writes prune at read time, sorted writes
+give files non-overlapping key ranges, salted joins reproduce plain-join
+results."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from datamodel_clinicaldata_spark.operators.joins import salted_join
-from datamodel_clinicaldata_spark.plans.audit import audit
 from datamodel_clinicaldata_spark.sources.readers import read_table
-from datamodel_clinicaldata_spark.sources.writers import (
-    write_bucketed,
-    write_partitioned,
-)
+from datamodel_clinicaldata_spark.sources.writers import write_partitioned
 
 
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
@@ -28,37 +25,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert "PartitionFilters: [isnotnull(o_orderpriority" in plan
     want = o.filter(F.col("o_orderpriority") == "1-URGENT").count()
     assert pruned.count() == want
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir):
-    c = read_table(spark, sf_dir, "customer")
-    o = read_table(spark, sf_dir, "orders")
-    write_bucketed(c, "c_bkt", "c_custkey", sort_by="c_custkey")
-    write_bucketed(o, "o_bkt", "o_custkey", sort_by="o_custkey")
-
-    cb, ob = spark.table("c_bkt"), spark.table("o_bkt")
-    joined = cb.join(ob, cb["c_custkey"] == ob["o_custkey"]).select(
-        "c_custkey", "o_orderkey", "o_totalprice"
-    )
-    # co-located: the bucketed scans satisfy the join clustering — no
-    # Exchange anywhere in the plan (broadcast would also pass; forbid it
-    # to prove bucket co-location specifically).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = cb.join(ob, cb["c_custkey"] == ob["o_custkey"]).select(
-            "c_custkey", "o_orderkey", "o_totalprice"
-        )
-        a = audit(joined)
-        assert a.exchanges == 0
-        assert a.broadcast_exchanges == 0
-        assert a.sort_merge_joins == 1
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # values match the unbucketed join
-    plain = c.join(o, c["c_custkey"] == o["o_custkey"]).select(
-        "c_custkey", "o_orderkey", "o_totalprice"
-    )
-    assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_salted_join_matches_plain(spark, sf_dir):
@@ -93,11 +59,10 @@ def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
     """orders → ORC → filtered read pushes the predicate to the ORC scan."""
     from datamodel_clinicaldata_spark.plans.audit import audit
     from datamodel_clinicaldata_spark.sources.readers import read_orc, read_table
-    from datamodel_clinicaldata_spark.sources.writers import write_orc
 
     o = read_table(spark, sf_dir, "orders")
     path = str(tmp_path / "orders_orc")
-    write_orc(o, path)
+    o.write.orc(path)
     back = read_orc(spark, path).filter(F.col("o_totalprice") > 100000).select(
         "o_orderkey", "o_totalprice"
     )
@@ -138,26 +103,6 @@ def test_sorted_layout_enables_file_skipping(spark, sf_dir, tmp_path):
     assert len(ranges) >= 2
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, (hi1, lo2)  # files do not overlap on the sort key
-
-
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    """Fragmented input (64 partitions) compacts to the expected file
-    count with all rows intact."""
-    import glob
-
-    from datamodel_clinicaldata_spark.sources.readers import read_table
-    from datamodel_clinicaldata_spark.sources.writers import (
-        TARGET_ROWS_PER_FILE,
-        compact_small_files,
-    )
-
-    c = read_table(spark, sf_dir, "customer").repartition(64)
-    path = str(tmp_path / "customer_compacted")
-    n_rows = c.count()
-    compact_small_files(c, path)
-    files = glob.glob(path + "/*.parquet")
-    assert len(files) == max(1, -(-n_rows // TARGET_ROWS_PER_FILE))
-    assert spark.read.parquet(path).count() == n_rows
 
 
 def test_schema_evolution_merge(spark, sf_dir, tmp_path):
@@ -265,77 +210,6 @@ def test_asof_nearest_date_typed(spark):
         ).collect()
     }
     assert out == {"mid": 20, "early": 10}  # Δ3 < Δ9; Δ1 < Δ11
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-order vs round-robin layout, measured on the actual parquet
-    footers: for a small 2-D query box (one user band × one time band),
-    far fewer z-ordered files have min/max boxes intersecting the
-    predicate — the file-skip a 100 TB scan lives on. Row-level
-    correctness round-trips identically from both layouts."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from datamodel_clinicaldata_spark.sources.readers import read_table
-    from datamodel_clinicaldata_spark.sources.writers import write_zordered
-
-    e = read_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("t_us"), "value"
-    )
-    lo_t, hi_t, lo_u, hi_u = e.agg(
-        F.min("t_us"), F.max("t_us"), F.min("user_id"), F.max("user_id")
-    ).collect()[0]
-
-    zdir, rdir = str(tmp_path / "z"), str(tmp_path / "r")
-    write_zordered(e, zdir, ["user_id", "t_us"], [(lo_u, hi_u), (lo_t, hi_t)])
-    e.repartition(16).write.parquet(rdir)  # round-robin: every file spans all
-
-    # query box: middle eighth of each dimension
-    u_a, u_b = lo_u + (hi_u - lo_u) * 4 // 8, lo_u + (hi_u - lo_u) * 5 // 8
-    t_a, t_b = lo_t + (hi_t - lo_t) * 4 // 8, lo_t + (hi_t - lo_t) * 5 // 8
-
-    # (simpler: aggregate per-file min/max via pyarrow column stats)
-    def file_boxes(d):
-        boxes = []
-        for f in sorted(glob.glob(d + "/*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            mins: dict[str, int] = {}
-            maxs: dict[str, int] = {}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    st = col.statistics
-                    if st is None or col.path_in_schema not in ("user_id", "t_us"):
-                        continue
-                    n = col.path_in_schema
-                    mins[n] = st.min if n not in mins else min(mins[n], st.min)
-                    maxs[n] = st.max if n not in maxs else max(maxs[n], st.max)
-            if mins:
-                boxes.append((mins["user_id"], maxs["user_id"], mins["t_us"], maxs["t_us"]))
-        return boxes
-
-    def hits(boxes):
-        return sum(
-            1
-            for (ul, uh, tl, th) in boxes
-            if not (uh < u_a or ul > u_b or th < t_a or tl > t_b)
-        )
-
-    zb, rb = file_boxes(zdir), file_boxes(rdir)
-    assert len(zb) >= 8 and len(rb) >= 8
-    assert hits(rb) == len(rb)  # round-robin: every file intersects the box
-    assert hits(zb) <= len(zb) // 2  # z-order: most files skipped on footers
-
-    # correctness: both layouts return the identical filtered rows
-    pred = (
-        (F.col("user_id").between(u_a, u_b)) & (F.col("t_us").between(t_a, t_b))
-    )
-    truth = e.filter(pred).select("event_id")
-    got = spark.read.parquet(zdir).filter(pred).select("event_id")
-    assert got.exceptAll(truth).isEmpty() and truth.exceptAll(got).isEmpty()
 
 
 def test_python_datasource_synthetic_events(spark):

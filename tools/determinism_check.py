@@ -14,6 +14,7 @@ green the oracle comparison looks.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -22,16 +23,15 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from datamodel_clinicaldata_spark.registry import QUERIES
     from datamodel_clinicaldata_spark.session import get_spark
     from tools.oracle_check import normalize
 
     spark = get_spark("determinism-check")
-    qs = entrymod.queries()
     failures = []
     t_start = time.time()
-    for name, fn in qs.items():
+    for name, fn in QUERIES.items():
         if only and name not in only:
             continue
         t0 = time.time()
@@ -52,7 +52,7 @@ def main() -> int:
         else:
             failures.append(name)
             print(f"FAIL  {name}: two same-session runs differ")
-    n = len([q for q in qs if not only or q in only])
+    n = len([q for q in QUERIES if not only or q in only])
     print(
         f"\n{n - len(failures)}/{n} run-stable ({time.time()-t_start:.0f}s)"
         + (f"; UNSTABLE: {failures}" if failures else "")

@@ -13,6 +13,7 @@ violation.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -80,12 +81,11 @@ EXECUTES_AT_BUILD = {
 
 def sweep(spark, sf_dir: str, names=None) -> dict[str, tuple[int, int]]:
     """Return {name: (unpartitioned_found, allowed)} for every violation."""
-    import __spark_entry__ as entrymod
     from datamodel_clinicaldata_spark.plans.audit import audit
+    from datamodel_clinicaldata_spark.registry import QUERIES
 
-    queries = entrymod.queries()
     bad: dict[str, tuple[int, int]] = {}
-    for name, fn in sorted(queries.items()):
+    for name, fn in sorted(QUERIES.items()):
         if names and name not in names:
             continue
         if name in EXECUTES_AT_BUILD:
@@ -104,7 +104,7 @@ def sweep(spark, sf_dir: str, names=None) -> dict[str, tuple[int, int]]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from datamodel_clinicaldata_spark.session import get_spark
 
     spark = get_spark("window-audit")
