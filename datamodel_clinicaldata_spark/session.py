@@ -219,6 +219,16 @@ def get_spark(
         # Untruncated FileScan metadata (default 100 chars cuts
         # PushedFilters mid-token) — the plan audits parse these lists.
         .config("spark.sql.maxMetadataStringLength", "10000")
+        # One long-lived session answers the same queries again and again,
+        # so each repeat should reuse its generated classes. Spark's
+        # JVM-wide cache of them holds 100 by default, while one pass of
+        # the eleven perfbench fixed_cost queries compiles ~150 and one
+        # sweep of the registry at sf0.001 2,877 (the largest query, 56):
+        # the cache cycled, and every repeat compiled again with Janino,
+        # loaded the classes again and re-ran HotSpot's JIT on them. 4096
+        # holds the registry's working set. It is read once, when the
+        # cache is first used, so it must be set here.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
         # local[N] runs executors INSIDE the driver JVM, so this one heap
         # serves all N task threads: 8g across 32 tasks (250 MB each) OOM'd

@@ -576,3 +576,52 @@ def test_winnowing_operator_width_semantics_stable(spark):
         for r in winnowing_pairs(docs, n_rows_est=50_000_000).collect()
     )
     assert narrow == wide and len(narrow) > 0
+
+
+# Registered queries whose generated code is the same on every run (the
+# ones that recompile each run are a ROADMAP lead); one cold sweep of them
+# compiles well over 200 classes, twice Spark's default cache capacity.
+REPEATED_QUERIES = (
+    "window_rank_functions",
+    "agg_argmax_customer_per_nation",
+    "agg_modal_segment_per_nation",
+    "scd2_user_value_history",
+    "window_rolling_24h",
+    "events_top_paths",
+    "window_first_last_value",
+    "agg_hll_merge_rollup",
+    "agg_late_suppliers",
+    "stream_session_windows",
+    "window_nonnull_count",
+    "stream_dedup_events",
+    "events_max_concurrency",
+    "timeseries_cusum_changepoint",
+    "feature_quantile_normalization",
+    "diag_chisq_independence",
+    "events_new_vs_returning",
+    "sql_lateral_top_orders",
+    "sessionize_events_batch",
+    "timeseries_gapfill_interpolate",
+)
+
+
+def test_repeated_queries_reuse_generated_code(spark, sf_dir):
+    """A second sweep of the same queries in one session compiles no
+    class: the session's generated-class cache holds the whole sweep.
+    The JVM-wide cache is emptied first, as in a new JVM, so the first
+    sweep's count does not depend on which tests ran before."""
+    jvm = spark.sparkContext._jvm
+    cache = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    cache.setAccessible(True)
+    cache.get(None).invalidateAll()
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    counts = []
+    for _ in range(2):
+        before = compiled.getCount()
+        for name in REPEATED_QUERIES:
+            spark.catalog.clearCache()
+            QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        counts.append(compiled.getCount() - before)
+    assert counts[0] > 200 and counts[1] == 0, counts

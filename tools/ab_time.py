@@ -3,7 +3,9 @@
     python tools/ab_time.py <sf_dir> <repeats> <query> [query ...]
 
 One session, per query: one untimed warm run, then <repeats> timed noop-sink
-runs; prints min/median. Each run starts from an empty cache, so the
+runs; prints min/median and ``compiles``, the number of classes Spark's
+code generator compiled during the timed runs (0 when every repeat reuses
+its generated code). Each run starts from an empty cache, so the
 cohort pipeline's persisted models never turn a run into a model hit.
 Methodology matches bench.py's steady-state timing (guide §1.4) without its
 quiesce/canary/probe machinery, so use it only for relative A/B on the same
@@ -25,11 +27,14 @@ def main() -> None:
     from datamodel_clinicaldata_spark.session import get_spark
 
     spark = get_spark("ab_time")
+    jvm = spark.sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for n in names:
         spark.sparkContext.setJobDescription(f"warm:{n}")
         spark.catalog.clearCache()
         QUERIES[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
         ts = []
+        c0 = compiled.getCount()
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"timed:{n}:{i}")
             spark.catalog.clearCache()
@@ -38,7 +43,7 @@ def main() -> None:
             ts.append(time.monotonic() - t0)
         print(
             f"AB {n} min={min(ts):.3f} med={statistics.median(ts):.3f} "
-            f"runs={[round(t, 3) for t in ts]}",
+            f"compiles={compiled.getCount() - c0} runs={[round(t, 3) for t in ts]}",
             flush=True,
         )
     spark.stop()
