@@ -1,7 +1,8 @@
 """Benchmark loop — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints two
+JSON lines: the full record, then a compact summary of at most
+``COMPACT_LINE_LIMIT`` bytes as the last line: {"metric": ..., "value":
+total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 Timing method (BASELINE.md target interpretation): the session is created
 and warmed once (JVM startup + first-job overhead excluded — the reference
@@ -13,10 +14,10 @@ collect cost.
 Wall-clock contract (r12, verdict r11 #1): the WHOLE process runs under a
 hard budget (``SPARK_GRAFT_BENCH_BUDGET_SEC``, default 900 s; 0 = no
 ceiling for builder-side baseline runs). Quiesce, canary waits, the warm
-pass, timed runs, and probes are all charged against one clock; when it
-runs short the bench degrades in order — fewer repeats → no noise
-retries → cold cells (untimed run recorded) → truncated tail → skipped
-probes — and the artifact says exactly what was degraded. BENCH_r10 and
+pass and timed runs are all charged against one clock; when it runs
+short the bench degrades in order — fewer repeats → no noise retries →
+cold cells (untimed run recorded) → truncated tail — and the artifact
+says exactly what was degraded. BENCH_r10 and
 BENCH_r11 both ended as rc=124/no-record because the worst-case admission
 (600 s quiesce + 420 s canary waits + 109 queries × up to 15 timed runs)
 had no ceiling at all.
@@ -81,13 +82,11 @@ HEADLINE = [
     "join_asof_nearest",
     "retention_cohort_matrix",
     # round 4: the LSH production blocking regime (clustered corpus,
-    # tau=0.9, bits=10x8 tables) next to the recall-regime row above —
-    # candidate volumes for both are logged under "lsh_candidates"
+    # tau=0.9, bits=10x8 tables) next to the recall-regime row above
     "similarity_neardup_lsh_prod",
     # round 5: the two most state-heavy Python-adjacent ops (greedy bin
     # packing via applyInPandas, stream-stream interval join) and the
-    # star-contraction CC row backing the O(log² d) claim (round counts
-    # logged under "cc_rounds")
+    # star-contraction CC row backing the O(log² d) claim
     "pack_sequences_greedy",
     "stream_click_purchase_join",
     "dedup_cluster_components_star",
@@ -276,7 +275,7 @@ TIER1 = [
 
 class _Budget:
     """Hard wall-clock budget for the whole bench process. Everything —
-    quiesce, canary waits, warm pass, timed runs, probes — is charged
+    quiesce, canary waits, warm pass, timed runs — is charged
     against ONE clock; consumers check ``remaining()`` and degrade
     instead of overrunning. ``total_sec <= 0`` means unbounded (builder
     baseline runs, which want full best-of-5 × canary gating)."""
@@ -686,6 +685,24 @@ class _HostNoiseGate:
         }
 
 
+# Longest wait for the host to quiesce before measuring anyway; main()
+# further caps it at 30% of the budget.
+QUIESCE_MAX_WAIT_SEC = 600.0
+
+# Per-cell steal tripwire (verdict r12 #1): steal noise is strictly
+# additive, so a median k× above the promoted floor for the same
+# code lineage is either host weather or a real regression — both
+# worth ONE budget-charged, canary-gated re-measure. A re-measure
+# that lands back under the bar corrects the cell (retimed_cells
+# carries was/now); one that stays inflated leaves the cell flagged
+# in suspect_weather, and the clean tier-1 total excludes it — so a
+# reader of the parsed line can no longer mistake a steal storm
+# (r12: dedup_minhash_lsh 100.9 s vs its 1.37 s floor) for a 70×
+# engine regression, while a genuine regression still shows up as a
+# flagged cell whose re-measure refused to come down.
+TRIP_RATIO = 3.0
+
+
 def _quiesce(max_load: float, max_wait_sec: float) -> float:
     """Block until 1-min loadavg drops below ``max_load`` (bounded by
     ``max_wait_sec``) — BENCH_r09 was captured while 50M-row scale probes
@@ -721,10 +738,7 @@ def main() -> None:
     # waits + retries compounded past the driver's timeout).
     quiesce_waited = _quiesce(
         float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "4")),
-        min(
-            float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "600")),
-            0.3 * budget.total,
-        ),
+        min(QUIESCE_MAX_WAIT_SEC, 0.3 * budget.total),
     )
     try:
         load_at_start = [round(x, 2) for x in os.getloadavg()]
@@ -750,7 +764,6 @@ def main() -> None:
     # the flagship, the expensive tail, and one row per family.
     names = [n for n in TIER1 if n in QUERIES]
     names += [n for n in HEADLINE if n in QUERIES and n not in names]
-    names += [n for n in os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "").split(",") if n in QUERIES and n not in names]
     # Cell isolation / test harness: SPARK_GRAFT_BENCH_ONLY restricts the
     # run to an explicit comma-list (doctrine: re-measure a suspect cell
     # in a fresh session; also how the tripwire integration test injects
@@ -818,24 +831,12 @@ def main() -> None:
             baseline_sha = base_rec.get("git_sha")
         except Exception as e:  # noqa: BLE001
             print(f"WARN bench: baseline unreadable: {e}", file=sys.stderr)
-    # Per-cell steal tripwire (verdict r12 #1): steal noise is strictly
-    # additive, so a median k× above the promoted floor for the same
-    # code lineage is either host weather or a real regression — both
-    # worth ONE budget-charged, canary-gated re-measure. A re-measure
-    # that lands back under the bar corrects the cell (retimed_cells
-    # carries was/now); one that stays inflated leaves the cell flagged
-    # in suspect_weather, and the clean tier-1 total excludes it — so a
-    # reader of the parsed line can no longer mistake a steal storm
-    # (r12: dedup_minhash_lsh 100.9 s vs its 1.37 s floor) for a 70×
-    # engine regression, while a genuine regression still shows up as a
-    # flagged cell whose re-measure refused to come down.
-    trip_ratio = float(os.environ.get("SPARK_GRAFT_BENCH_TRIP_RATIO", "3.0"))
     suspect_weather: list[str] = []
     retimed_cells: dict[str, dict] = {}
     # Mid-headline load trace (verdict r9 #1 done-criterion): the artifact
     # must carry evidence that the MEASUREMENT WINDOW itself was quiet —
-    # loadavg_at_start/end bracket the run but miss probes or external
-    # work landing mid-loop. Sampled once per query; max recorded.
+    # loadavg_at_start/end bracket the run but miss external work
+    # landing mid-loop. Sampled once per query; max recorded.
     mid_load_max = 0.0
     # Canary waits may use at most ~20% of the budget (420 s cap matches
     # the pre-r12 behavior for unbounded builder runs).
@@ -869,7 +870,7 @@ def main() -> None:
             "unit": "sec",
             "queries": dict(timings),
             "queries_median": dict(medians),
-            # Cells whose median tripped > trip_ratio × promoted floor and
+            # Cells whose median tripped > TRIP_RATIO × promoted floor and
             # whose gated re-measure STAYED above the bar: weather-suspect
             # (or a real regression — the one cell class a reader must
             # check by hand). retimed_cells are the opposite outcome: the
@@ -880,7 +881,7 @@ def main() -> None:
                 sum(medians[n] for n in tier1_clean), 4
             ),
             "tier1_clean_n": len(tier1_clean),
-            "trip_ratio": trip_ratio,
+            "trip_ratio": TRIP_RATIO,
             "baseline_git_sha": baseline_sha,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             # partial=true → the headline loop had not finished when this
@@ -1036,14 +1037,14 @@ def main() -> None:
         best = runs[0]
         med = runs[len(runs) // 2]
         mp_canary.check_bracket(name, mp_pre)
-        # Per-cell steal tripwire: median > trip_ratio × promoted floor
+        # Per-cell steal tripwire: median > TRIP_RATIO × promoted floor
         # (same code lineage — additive steal can only inflate) buys ONE
-        # gated re-measure; see the doctrine comment at trip_ratio.
+        # gated re-measure; see the doctrine comment at TRIP_RATIO.
         floor = floors.get(name)
         if (
             floor is not None
             and floor > 0
-            and med > trip_ratio * floor
+            and med > TRIP_RATIO * floor
             and budget.remaining() > RESERVE
         ):
             gate.wait_quiet()
@@ -1053,7 +1054,7 @@ def main() -> None:
             QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.time() - t0
             mp_canary.check_bracket(f"{name}:retime", rt_pre)
-            if dt <= trip_ratio * floor:
+            if dt <= TRIP_RATIO * floor:
                 retimed_cells[name] = {
                     "was_median": round(med, 4),
                     "retimed": round(dt, 4),
@@ -1077,124 +1078,13 @@ def main() -> None:
         # durable the moment it exists.
         _flush(out_path, _snapshot(partial=True))
 
-    # Headline loop done — the record is now complete (partial=false);
-    # probe sections are appended afterwards and never change these rows.
+    # Headline loop done — the record is now complete (partial=false).
     out = _snapshot(partial=False)
     total = out["value"]
     _flush(out_path, out)
 
-    # Probe sections below are all charged against the same budget: each
-    # needs headroom beyond the finalize reserve or it is skipped with an
-    # explicit reason (a skipped probe must be distinguishable from a
-    # crashed one). Driver runs under the default 900 s budget will
-    # typically skip the heavy probes — their evidence lives in the
-    # committed builder-side records.
-    skipped_probes: dict[str, str] = {}
-
-    # Candidate-volume instrumentation for the LSH rows (verdict r3 #4):
-    # shows whether blocking blocks — the recall-regime row verifies a
-    # large fraction of all pairs by design; the prod-regime row must
-    # show candidates ≪ all-pairs.
-    lsh_stats = {}
-    if budget.remaining() > RESERVE + 60:
-        try:
-            from datamodel_clinicaldata_spark.queries_similarity import (
-                lsh_candidate_stats,
-            )
-
-            for name in ("similarity_neardup_lsh", "similarity_neardup_lsh_prod"):
-                if name in names:
-                    lsh_stats[name] = lsh_candidate_stats(spark, sf_dir, name)
-        except Exception as e:  # noqa: BLE001 — must not fail the bench, but a
-            # missing lsh_candidates block has to be distinguishable from an
-            # intentionally skipped one (the prod row's evidence lives there)
-            print(f"WARN bench: lsh_candidate_stats failed: {e}", file=sys.stderr)
-    else:
-        skipped_probes["lsh_candidates"] = "budget"
-
-    # Distributed global-ordering stress (verdict r5 #2 follow-through):
-    # ordered_prefix rank + running sum over 4M synthetic rows — far past
-    # anything a single-partition window should see — with an exactness
-    # probe (last rank == n, total == closed form). Shows the two-phase
-    # prefix holds throughput at row counts where the old global window
-    # was the bottleneck.
-    prefix_stats = {}
-    if budget.remaining() <= RESERVE + 120:
-        skipped_probes["prefix_stress"] = "budget"
-    else:
-        try:
-            from pyspark.sql import functions as SF
-
-            from datamodel_clinicaldata_spark.operators.ranking import (
-                ordered_prefix,
-            )
-
-            n_rows = 4_000_000
-            base = spark.range(n_rows).select(
-                SF.col("id"),
-                ((SF.col("id") * 2654435761) % 1_000_003).alias("v"),
-            )
-            t0 = time.time()
-            pref = ordered_prefix(
-                base,
-                [SF.col("v").asc(), SF.col("id").asc()],
-                rank_col="rk",
-                running_sum={"v": "cs"},
-            )
-            probe = pref.agg(
-                SF.max("rk").alias("max_rk"), SF.max("cs").alias("total")
-            ).collect()[0]
-            dt = time.time() - t0
-            expected_total = base.agg(SF.sum("v")).collect()[0][0]
-            prefix_stats = {
-                "rows": n_rows,
-                "sec": round(dt, 4),
-                "rows_per_sec": int(n_rows / dt),
-                "rank_exact": bool(probe["max_rk"] == n_rows),
-                "sum_exact": bool(probe["total"] == expected_total),
-            }
-        except Exception as e:  # noqa: BLE001
-            print(f"WARN bench: prefix stress failed: {e}", file=sys.stderr)
-
-    # ≥50M-row scale probe (verdict r6 #3): the synthetic DataSource
-    # generates the input, so the distributed primitives (two-phase
-    # prefix, sweep line, binned interval join) get measured 80× past
-    # sf0.1 with zero fixtures. Runs AFTER the query timings so its cache
-    # pressure can't pollute them; skip with SPARK_GRAFT_SCALE_PROBE=0.
-    scale_stats = {}
-    if os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") == "0":
-        pass
-    elif budget.remaining() <= RESERVE + 600:
-        # The 50M-row probe alone runs for minutes — it never fits a
-        # driver-budget run; its evidence lives in the committed
-        # builder-side records (scale_probe_100m_r10.txt, bench_run_*).
-        skipped_probes["scale_probe"] = "budget"
-    else:
-        try:
-            sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-            from scale_probe import run_probes
-
-            scale_stats = run_probes(
-                spark, int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", "50000000"))
-            )
-        except Exception as e:  # noqa: BLE001
-            print(f"WARN bench: scale probe failed: {e}", file=sys.stderr)
-
-    # Star-contraction CC on an adversarial 100k-node path graph
-    # (diameter ≈ n): measured round count backing the O(log² d) claim.
-    cc_stats = {}
-    if budget.remaining() <= RESERVE + 150:
-        skipped_probes["cc_rounds"] = "budget"
-    else:
-        try:
-            from datamodel_clinicaldata_spark.queries_dedup import cc_round_stats
-
-            cc_stats = cc_round_stats(spark)
-        except Exception as e:  # noqa: BLE001
-            print(f"WARN bench: cc_round_stats failed: {e}", file=sys.stderr)
-
-    # Post-probe augmentation of the flushed artifact: probe sections and
-    # the post-probe loadavg are appended; headline numbers are untouched.
+    # Post-headline augmentation of the flushed artifact: the closing
+    # loadavg is appended; headline numbers are untouched.
     # (Host fingerprint doctrine, r6→r7 lesson: a +21.5% "regression" took
     # a full round to attribute to host noise because the artifact carried
     # no environment evidence; load1 ≫ 0 at start → distrust deltas.)
@@ -1207,16 +1097,6 @@ def main() -> None:
         ]
     except OSError:
         pass
-    if lsh_stats:
-        out["lsh_candidates"] = lsh_stats
-    if cc_stats:
-        out["cc_rounds"] = cc_stats
-    if prefix_stats:
-        out["prefix_stress"] = prefix_stats
-    if scale_stats:
-        out["scale_probe"] = scale_stats
-    if skipped_probes:
-        out["budget"]["skipped_probes"] = skipped_probes
 
     # Per-query deltas vs the promoted baseline (verdict r5 #6). The
     # baseline holds per-cell MIN-of-N floors (r11 promotion policy), so
@@ -1237,7 +1117,7 @@ def main() -> None:
     # Full artifact on disk — the driver captures stdout's tail, which
     # progress bars have truncated before (r4's medians were lost); the
     # file is the canonical machine-readable record (headline section
-    # identical to the pre-probe flush above; probe sections appended).
+    # identical to the flush above).
     _flush(out_path, out)
 
     # Stop Spark BEFORE printing: executor/progress stderr has flooded the

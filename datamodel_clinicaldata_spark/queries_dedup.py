@@ -370,44 +370,6 @@ def dedup_incremental_against_corpus(
     )
 
 
-def cc_round_stats(spark: SparkSession) -> dict:
-    """Adversarial-regime instrumentation for the star-contraction CC
-    (verdict r4 #6): a single path graph of 100k nodes —
-    diameter = n−1, the worst case for min-label propagation (O(d)
-    rounds) and the shape the O(log² d) contraction claim is about.
-    Runs ``connected_components_star`` end-to-end, returns measured round
-    count + wall time + a correctness probe (one component, min label 0);
-    logged into the bench JSON under ``cc_rounds``."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from datamodel_clinicaldata_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    chain_nodes = 100_000
-    edges = spark.range(chain_nodes - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    stats: dict = {}
-    t0 = time.time()
-    out = connected_components_star(edges, stats=stats)
-    agg = out.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("component_id").alias("n_comp"),
-        F.min("component_id").alias("min_id"),
-    ).collect()[0]
-    return {
-        "chain_nodes": chain_nodes,
-        "rounds": stats.get("rounds"),
-        "sec": round(time.time() - t0, 4),
-        "nodes_labeled": agg["n"],
-        "n_components": agg["n_comp"],
-        "min_component_id": agg["min_id"],
-    }
-
-
 @register(
     "dedup_substring_spans",
     """

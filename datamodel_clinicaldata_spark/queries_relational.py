@@ -3010,10 +3010,11 @@ def events_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.4): "max conc, then min t at that max" was a global
     # max + broadcast join back over `run` + groupBy — consuming the
     # prefix frame twice re-ran the offsets machinery and added a join
-    # and an aggregate (plans/r13/..._before.txt: 10 HashAggregates / 7
-    # Exchanges). One lexicographic struct-max over (conc, −t) reads
-    # `run` once and is integer-exact: max of the pair IS (max conc,
-    # min t among rows at max conc).
+    # and an aggregate (`git show
+    # 900d16d:plans/r13/events_max_concurrency_before.txt`: 10
+    # HashAggregates / 7 Exchanges). One lexicographic struct-max over
+    # (conc, −t) reads `run` once and is integer-exact: max of the pair
+    # IS (max conc, min t among rows at max conc).
     n = e.agg(F.count(F.lit(1)).cast("long").alias("n_intervals"))
     peak = run.agg(
         F.max(F.struct(F.col("conc"), (-F.col("t")).alias("negt"))).alias("pk")
@@ -6665,9 +6666,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the count aggregate rides the same exchange instead of paying
     # its own (u, v) shuffle of the full exploded pair stream and THEN a
     # second u-keyed shuffle of the aggregated edges. One exchange
-    # instead of two on the edge build (plan diff in
-    # plans/r13/graph_label_propagation_{before,after}.txt); measured
-    # A/B alternated at sf0.1: 2.92 s → 2.67 s min, 3.1 → 2.7 median.
+    # instead of two on the edge build (plan diff in `git show
+    # d4432fa:plans/r13/graph_label_propagation_{before,after}.txt`);
+    # measured A/B alternated at sf0.1: 2.92 s → 2.67 s min, 3.1 → 2.7 median.
     # r14 routed mode: the pin is instead keyed on v — the join side the
     # rounds probe — so the edge frame shuffles ONCE at build and never
     # again (GraphX's routing-table role); per-round traffic is then
@@ -7274,9 +7275,11 @@ def feature_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFram
     # back to r — the rk ≤ 20 output filter could not push below that
     # join (rk is window-derived), so the FULL frame rode a groupBy, a
     # sort-merge join, and a second copy of the whole ranked+offset
-    # subtree (plans/r13/..._before.txt: 12 exchanges, 4 windows, the
-    # prefix pipeline executed 4×). A window over partition key rk on
-    # the PRE-filtered frame is exactly the same per-group count/mean —
+    # subtree (`git show
+    # 900d16d:plans/r13/feature_quantile_normalization_before.txt`: 12
+    # exchanges, 4 windows, the prefix pipeline executed 4×). A window
+    # over partition key rk on the PRE-filtered frame is exactly the
+    # same per-group count/mean —
     # filtering on the partition key keeps groups intact — and consumes
     # r once: one tiny exchange over the ≤ 2·20 surviving rows.
     wrk = Window.partitionBy("rk")

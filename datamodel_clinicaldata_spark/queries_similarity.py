@@ -191,14 +191,15 @@ def similarity_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate; tables halved 16 → 8 because the per-table parsed plane
     expressions dominate ANALYSIS time at this corpus size): the
     full-corpus τ=0.45 16-table recall assertion lives in
-    ``tests/test_similarity.py::test_neardup_lsh_recall`` and the
-    full-corpus 64% candidate fraction is quantified by the bench JSON's
-    ``lsh_candidates`` instrumentation, so spending ~3 s of headline
-    verifying 64% of C(2000,2) pairs demonstrated nothing those two pins
-    don't (VERDICT r9 #6, sized to ≤1.5 s per VERDICT r10 #5); the slice
-    keeps the same operator/oracle pair at a sixteenth of the pair
-    volume. ``similarity_neardup_lsh_prod`` is the production twin:
-    clustered corpus, τ=0.9, bits=10 × 8 tables, candidates ≈ 1% of all
+    ``tests/test_similarity.py::test_neardup_lsh_recall`` and blocking
+    (candidates < 5% of all pairs, on the prod twin's corpus) is asserted
+    by ``tests/test_similarity.py::test_neardup_lsh_prod_blocks_and_recalls``,
+    so spending ~3 s of headline verifying 64% of C(2000,2) pairs
+    demonstrated nothing those two pins don't (VERDICT r9 #6, sized to
+    ≤1.5 s per VERDICT r10 #5); the slice keeps the same operator/oracle
+    pair at a sixteenth of the pair volume.
+    ``similarity_neardup_lsh_prod`` is the production twin: clustered
+    corpus, τ=0.9, bits=10 × 8 tables, candidates ≈ 1% of all
     pairs with the SAME operator. (Before r4 the plane generator had a
     sign bias — every component in [-1, 0) — that silently correlated
     all buckets; see ``_lcg_planes``. Candidate volumes now match
@@ -280,13 +281,13 @@ def similarity_neardup_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (cos ≈ 0) collides per table with prob 2^-10, so candidates ≈
     8/1024 ≈ 0.8% of all pairs — vs the recall-regime row
     (``similarity_neardup_lsh``) whose bench parameters verify ~64% of
-    all pairs (0.6386 measured post the SplitMix64 plane fix, BENCH_r04
-    ``lsh_candidates``). A twin pair (θ ≈ 14°) survives a table with prob
+    all pairs (0.6386 measured post the SplitMix64 plane fix, BENCH_r04).
+    A twin pair (θ ≈ 14°) survives a table with prob
     (1−θ/π)^10 ≈ 0.44, so per-pair miss ≈ (1−0.44)^8 ≈ 0.9% — recall is
     pinned in tests/test_similarity.py; the LCG planes are replayed as
-    SQL literals so the oracle checks the EXACT bucketing. Bench logs
-    both rows' candidate counts (``lsh_candidate_stats``) so the
-    headline demonstrates candidates ≪ all-pairs with the same operator.
+    SQL literals so the oracle checks the EXACT bucketing.
+    ``tests/test_similarity.py::test_neardup_lsh_prod_blocks_and_recalls``
+    asserts candidates < 5% of all pairs with the same operator.
     ``ensure_parallelism=False``: the corpus is post-shuffle (union of a
     scan and an equi-join), so the scan-only partition probe is skipped;
     instead the synthetic corpus is spread explicitly — AQE coalesces
@@ -301,7 +302,8 @@ def similarity_neardup_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers — both sides of the bucket self-join and both verify
     # sides — and the broadcast on the bucket join blocks exchange
     # reuse, so the plan recomputed it 4× (12 parquet scans / 11
-    # exchanges in plans/r13/similarity_neardup_lsh_prod_before.txt).
+    # exchanges in `git show
+    # a1ae415:plans/r13/similarity_neardup_lsh_prod_before.txt`).
     # Pinning the (vec_id, embedding) frame computes it once; every
     # consumer reads materialized rows. Results bit-identical (pure
     # materialization). Reliable-checkpoint doctrine applies.
@@ -318,35 +320,6 @@ def similarity_neardup_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits=10,
         ensure_parallelism=False,
     )
-
-
-def lsh_candidate_stats(spark: SparkSession, sf_dir: str, name: str) -> dict:
-    """Candidate-volume instrumentation for the two LSH bench rows:
-    corpus size, distinct candidate pairs, all-pairs, and the fraction —
-    the number that shows whether blocking blocks (logged into the bench
-    JSON; see verdict r3 #4)."""
-    from datamodel_clinicaldata_spark.operators.similarity import (
-        neardup_candidate_pairs,
-    )
-
-    e = read_table(spark, sf_dir, "embeddings")
-    if name == "similarity_neardup_lsh_prod":
-        corpus = _clustered_corpus(e)
-        cand = neardup_candidate_pairs(
-            corpus, n_tables=_LSH_TABLES, bits=10, ensure_parallelism=False
-        )
-    else:
-        corpus = e
-        cand = neardup_candidate_pairs(corpus, n_tables=16, bits=4)
-    n = corpus.count()
-    pairs = cand.count()
-    all_pairs = n * (n - 1) // 2
-    return {
-        "corpus": n,
-        "candidate_pairs": pairs,
-        "all_pairs": all_pairs,
-        "candidate_fraction": round(pairs / all_pairs, 6) if all_pairs else 0.0,
-    }
 
 
 _IVF_COS_XQ = (

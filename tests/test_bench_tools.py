@@ -429,11 +429,7 @@ def test_bench_tripwire_corrects_and_flags(tmp_path, monkeypatch, spark):
         "SPARK_GRAFT_BENCH_ONLY": "fake_trip_recover,fake_trip_stuck",
         "SPARK_GRAFT_BENCH_OUT": str(out_path),
         "SPARK_GRAFT_BENCH_BASELINE": str(baseline),
-        # 120 s: plenty for two ~1 s cells + retimes, small enough that
-        # every probe section (prefix stress, 50M scale probe, cc
-        # rounds) is budget-skipped instead of hijacking the test
         "SPARK_GRAFT_BENCH_BUDGET_SEC": "120",
-        "SPARK_GRAFT_SCALE_PROBE": "0",
         "SPARK_GRAFT_BENCH_REPEATS": "1",
         "SPARK_GRAFT_BENCH_MAX_LOAD": "10000",
         "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
@@ -459,6 +455,7 @@ def test_bench_tripwire_corrects_and_flags(tmp_path, monkeypatch, spark):
     assert rec["trip_ratio"] == 3.0
     assert rec["partial"] is False
     assert not rec["budget"]["cold_cells"]
+    assert "skipped_probes" not in rec["budget"]
 
 
 def test_choose_repeats_fair_share():
@@ -538,7 +535,11 @@ def test_local_dir_sweep_is_locked_and_age_gated(tmp_path):
 def test_package_env_vars_are_deployment_knobs_only():
     """The engine's only env switches are the four deployment knobs: no
     env var may pick a measurement-only or wrong-answer mode. Any
-    ``SPARK_GRAFT_*`` name in the package source counts."""
+    ``SPARK_GRAFT_*`` name in the package source counts. bench.py reads
+    only the seven knobs its callers set: the data, the budget, the
+    quiesce load bar, the cell subset, the repeat cap, the baseline and
+    the output path (its docstring also names the session's
+    ``SPARK_GRAFT_CPUS``, so there only reads count)."""
     import re
     from pathlib import Path
 
@@ -554,6 +555,18 @@ def test_package_env_vars_are_deployment_knobs_only():
         "SPARK_GRAFT_LOCAL_DIR",
         "SPARK_GRAFT_DRIVER_MEM",
         "SPARK_GRAFT_CHECKPOINT",
+    }
+    bench_src = (Path(__file__).resolve().parent.parent / "bench.py").read_text()
+    assert set(
+        re.findall(r'environ\.get\(\s*"(SPARK_GRAFT_[A-Z_]+)"', bench_src)
+    ) == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_BENCH_BUDGET_SEC",
+        "SPARK_GRAFT_BENCH_MAX_LOAD",
+        "SPARK_GRAFT_BENCH_ONLY",
+        "SPARK_GRAFT_BENCH_REPEATS",
+        "SPARK_GRAFT_BENCH_BASELINE",
+        "SPARK_GRAFT_BENCH_OUT",
     }
 
 

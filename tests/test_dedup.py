@@ -145,8 +145,9 @@ def test_connected_components_star_path_graph(spark):
     }
     assert got == {i: 0 for i in range(n)}
     # O(log² d) bound, concretely: log₂(1000) ≈ 10; measured 18 on a 100k
-    # path (bench cc_rounds). 2·log₂(d) + slack pins a convergence-rate
-    # regression without flaking on the constant factor.
+    # path (`git show f070f4a:bench_before_r14opt.json`, "cc_rounds").
+    # 2·log₂(d) + slack pins a convergence-rate regression without
+    # flaking on the constant factor.
     assert stats["rounds"] <= 25, f"path-1000 took {stats['rounds']} rounds"
 
 

@@ -13,8 +13,7 @@ come from a silently wrong plan.
 
     python tools/scale_probe.py [rows]          # default 50_000_000
 
-Also callable in-session (bench.py appends the result to its artifact):
-``run_probes(spark, rows)`` → dict.
+Also callable in-session: ``run_probes(spark, rows)`` → dict.
 """
 
 from __future__ import annotations
