@@ -9,9 +9,13 @@ DuckDB oracle and any cluster.
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def _default_local_dir() -> str | None:
@@ -158,6 +162,72 @@ def _default_driver_mem() -> str:
     return "48g"
 
 
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+NIO_LOCAL_FS = "datamodel_clinicaldata_spark.jvm.NioLocalFileSystem"
+
+
+@functools.cache
+def _nio_local_fs_jar() -> str | None:
+    """The jar of ``jvm/NioLocalFileSystem.java``, compiled on first use.
+
+    Without the native Hadoop library, Hadoop's local file system runs a
+    ``chmod`` process for every directory it makes and every file it
+    creates (about 85 per cohort write); the class sets the same mode bits
+    through java.nio. It is compiled against Spark's Hadoop client jar
+    only, and cached under ``jvm/build/`` by a key over the source and
+    that jar, so a session pays the 0.6–0.8 s of ``javac`` once per
+    checkout. Any failure (no ``javac``, a read-only checkout) logs one
+    warning and returns None, which keeps Hadoop's own local file system."""
+    import glob
+    import hashlib
+    import shutil
+    import subprocess
+    import tempfile
+
+    import pyspark
+
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    hadoop = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
+    java_bin = os.path.join(os.environ.get("JAVA_HOME", ""), "bin")
+    javac = shutil.which("javac", path=java_bin) or shutil.which("javac")
+    if not hadoop or not javac:
+        _log.warning("no javac or Hadoop client jar: local writes fork chmod")
+        return None
+    src = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+    key = hashlib.sha256()
+    with open(src, "rb") as fh:
+        key.update(fh.read())
+    key.update(f"{os.path.basename(hadoop[-1])}:{os.path.getsize(hadoop[-1])}".encode())
+    jar = os.path.join(_JVM_DIR, "build", f"nio-local-fs-{key.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    try:
+        os.makedirs(os.path.dirname(jar), exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+            classes = os.path.join(tmp, "classes")
+            subprocess.run(
+                # C1 only: javac's own JIT work is most of a cold compile.
+                [javac, "-J-XX:TieredStopAtLevel=1", "--release", "17",
+                 "-cp", hadoop[-1], "-d", classes, src],
+                check=True, capture_output=True,
+            )
+            os.replace(shutil.make_archive(os.path.join(tmp, "part"), "zip", classes), jar)
+    except (OSError, subprocess.CalledProcessError) as e:
+        _log.warning("could not build %s (%s): local writes fork chmod", jar, e)
+        return None
+    return jar
+
+
+def _nio_local_fs_on_classpath() -> bool:
+    """True unless a JVM that did not start with the jar already runs:
+    its classpath is fixed, and an ``fs.file.impl`` it cannot load would
+    fail every local file operation."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    return jvm is None or jvm.org.apache.spark.util.Utils.classIsLoadable(NIO_LOCAL_FS)
+
+
 def get_spark(
     app_name: str = "datamodel_clinicaldata_spark",
     master: str | None = None,
@@ -262,9 +332,20 @@ def get_spark(
     local_dir = _default_local_dir()
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra = dict(extra_conf or {})
+    # Only a local master runs its tasks in the driver JVM, whose classpath
+    # the jar joins; executors on a cluster would not have the class.
+    jar = (
+        _nio_local_fs_jar()
+        if master == "local" or master.startswith("local[")
+        else None
+    )
+    if jar and _nio_local_fs_on_classpath():
+        builder = builder.config("spark.hadoop.fs.file.impl", NIO_LOCAL_FS)
+        cp = extra.get("spark.driver.extraClassPath")
+        extra["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, [jar, cp]))
+    for k, v in extra.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -343,3 +343,72 @@ def test_asof_tolerance_nearest_side_fallback(spark):
         direction="nearest", tolerance=6 * 60 * 1_000_000,
     ).collect()
     assert len(out) == 1 and out[0].rid == 200  # back Δ9 out; fwd Δ5 in
+
+
+def test_partitioned_write_forks_no_chmod(spark, tmp_path):
+    """A local write sets its file modes without starting a process.
+    Without the native Hadoop library, Hadoop's own local file system runs
+    ``chmod`` for every directory and file it creates; the session's
+    ``NioLocalFileSystem`` applies the same modes through java.nio. The
+    layout and the modes are those Hadoop writes under its default umask
+    022, and the JVM reaps no child CPU during the write."""
+    import os
+    import stat
+
+    from datamodel_clinicaldata_spark.session import NIO_LOCAL_FS
+    from tools.ab_time import reaped_child_cpu_s
+
+    jvm = spark._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    assert hconf.get("fs.file.impl") == NIO_LOCAL_FS
+    assert jvm.org.apache.hadoop.fs.FileSystem.getLocal(hconf).getClass().getName() == NIO_LOCAL_FS
+
+    df = spark.range(0, 250, 1, 1).select(
+        F.col("id"), (F.col("id") % 25).cast("int").alias("ClinicID")
+    )
+    out = str(tmp_path / "by_clinic")
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    before = reaped_child_cpu_s(pid)
+    write_partitioned(df, out, ["ClinicID"])
+    assert reaped_child_cpu_s(pid) - before == 0
+
+    clinics = [f"ClinicID={i}" for i in range(25)]
+    assert sorted(os.listdir(out)) == sorted(["_SUCCESS", "._SUCCESS.crc", *clinics])
+    dirs = [out] + [os.path.join(out, c) for c in clinics]
+    files = [os.path.join(out, "_SUCCESS"), os.path.join(out, "._SUCCESS.crc")]
+    for d in dirs[1:]:
+        names = os.listdir(d)
+        data = [n for n in names if n.endswith(".parquet")]
+        assert len(data) == 1 and sorted(names) == sorted(data + [f".{data[0]}.crc"])
+        files += [os.path.join(d, n) for n in names]
+    assert {oct(stat.S_IMODE(os.stat(d).st_mode)) for d in dirs} == {"0o755"}
+    assert {oct(stat.S_IMODE(os.stat(f).st_mode)) for f in files} == {"0o644"}
+
+    back = spark.read.parquet(out).select("id", "ClinicID")
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_nio_local_fs_maps_every_mode_bit(spark, tmp_path):
+    """``NioLocalFileSystem.setPermission`` sets exactly the requested
+    bits on a file; a sticky directory (which java.nio cannot express)
+    goes through Hadoop's own ``chmod`` and stays sticky."""
+    import os
+    import stat
+
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    )
+
+    def set_mode(path: str, mode: int) -> int:
+        perm = jvm.org.apache.hadoop.fs.permission.FsPermission(f"{mode:o}")
+        fs.setPermission(jvm.org.apache.hadoop.fs.Path(path), perm)
+        return stat.S_IMODE(os.stat(path).st_mode)
+
+    f = str(tmp_path / "f")
+    open(f, "w").close()
+    for mode in (0o600, 0o644, 0o700, 0o755, 0o777):
+        assert set_mode(f, mode) == mode
+    d = str(tmp_path / "d")
+    os.mkdir(d)
+    assert set_mode(d, 0o1777) == 0o1777

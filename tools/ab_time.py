@@ -3,10 +3,13 @@
     python tools/ab_time.py <sf_dir> <repeats> <query> [query ...]
 
 One session, per query: one untimed warm run, then <repeats> timed noop-sink
-runs; prints min/median and ``compiles``, the number of classes Spark's
+runs; prints min/median, ``compiles``, the number of classes Spark's
 code generator compiled during the timed runs (0 when every repeat reuses
-its generated code). Each run starts from an empty cache, so the
-cohort pipeline's persisted models never turn a run into a model hit.
+its generated code), and ``child_cpu``, the CPU seconds of the processes
+the JVM started and reaped during them (0 unless something forks, such as
+a local write without the session's NIO file system). Each run starts from
+an empty cache, so the cohort pipeline's persisted models never turn a run
+into a model hit.
 Methodology matches bench.py's steady-state timing (guide §1.4) without its
 quiesce/canary/probe machinery, so use it only for relative A/B on the same
 box within minutes of itself.
@@ -19,6 +22,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def reaped_child_cpu_s(pid: int) -> float:
+    """cutime + cstime of ``pid`` in seconds, from /proc/<pid>/stat."""
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def main() -> None:
     sf_dir = sys.argv[1]
     reps = int(sys.argv[2])
@@ -29,12 +39,13 @@ def main() -> None:
     spark = get_spark("ab_time")
     jvm = spark.sparkContext._jvm
     compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
     for n in names:
         spark.sparkContext.setJobDescription(f"warm:{n}")
         spark.catalog.clearCache()
         QUERIES[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
         ts = []
-        c0 = compiled.getCount()
+        c0, child0 = compiled.getCount(), reaped_child_cpu_s(jvm_pid)
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"timed:{n}:{i}")
             spark.catalog.clearCache()
@@ -43,7 +54,9 @@ def main() -> None:
             ts.append(time.monotonic() - t0)
         print(
             f"AB {n} min={min(ts):.3f} med={statistics.median(ts):.3f} "
-            f"compiles={compiled.getCount() - c0} runs={[round(t, 3) for t in ts]}",
+            f"compiles={compiled.getCount() - c0} "
+            f"child_cpu={reaped_child_cpu_s(jvm_pid) - child0:.2f} "
+            f"runs={[round(t, 3) for t in ts]}",
             flush=True,
         )
     spark.stop()
